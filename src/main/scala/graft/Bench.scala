@@ -44,7 +44,7 @@ object Bench {
     }
 
     // shared steal-aware timing predicate (graft.core.Steal): one "clean
-    // window" definition across Bench/ScalingBench/QueryTime (VERDICT r3 #4
+    // window" definition across Bench/ScalingBench (VERDICT r3 #4
     // tightened the floor 60 -> 20 ticks; the shared object keeps the
     // tools from forking it again)
     def timeWithSteal(f: => Unit): (Double, Long) = graft.core.Steal.timeWithSteal(f)

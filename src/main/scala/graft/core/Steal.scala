@@ -1,8 +1,8 @@
 package graft.core
 
-/** THE host-steal measurement helper — one definition shared by Bench,
-  * ScalingBench, and QueryTime so the "steal-clean window" predicate
-  * cannot fork between the tools that feed BENCH.md's accepted numbers
+/** THE host-steal measurement helper — one definition shared by Bench
+  * and ScalingBench so the "steal-clean window" predicate cannot fork
+  * between the tools that feed BENCH.md's accepted numbers
   * (it did once: Bench tightened its floor 60 → 20 ticks per VERDICT r3
   * while ScalingBench kept 60).
   *

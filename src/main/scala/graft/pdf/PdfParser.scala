@@ -72,7 +72,7 @@ object PdfParser {
 
   /** Scan `N 0 obj ... endobj`, independent of xref (robust to shuffled
     * order and mildly corrupt files). */
-  def scanObjects(s: String): Map[Int, PdfObject] = {
+  private def scanObjects(s: String): Map[Int, PdfObject] = {
     val out = Map.newBuilder[Int, PdfObject]
     var i = 0
     val n = s.length
@@ -109,7 +109,9 @@ object PdfParser {
 
   // compiled once: scanObjects calls parseDictKeys per OBJECT and refsIn
   // runs per page — per-call Regex construction was a measurable slice of
-  // the 60µs/doc object-scan stage (PdfProbe)
+  // the 60µs/doc object-scan stage (round-3 per-stage probe; the
+  // 504 → 230 µs/doc parse total it fed is in BENCH.md "Round-3
+  // measurements")
   private val DictKeyRe = "/([A-Za-z0-9]+)\\s*(/[A-Za-z0-9]+|\\d+(?:\\s+0\\s+R)?|\\[[^\\]]*\\])".r
   private val RefListRe = "(\\d+)\\s+0\\s+R".r
   private val RefFirstRe = "^(\\d+)\\s+0\\s+R".r
@@ -156,13 +158,14 @@ object PdfParser {
     *
     * Single fused pass: the former tokenize-then-fold design built a boxed
     * `Vector[Tok]` (a case-class allocation per number/name/string) that
-    * PdfProbe measured at ~180us/doc -- the interpreter only ever needs the
-    * numeric operand list, the FIRST string/name/array operand, and whether
-    * the LAST operand was a number, so those are tracked directly in
-    * locals. Token-boundary rules, escape handling, and operator semantics
+    * the round-3 per-stage probe measured at ~180us/doc (parse total
+    * 504 → 230 µs/doc: BENCH.md "Round-3 measurements") -- the
+    * interpreter only ever needs the numeric operand list, the FIRST
+    * string/name/array operand, and whether the LAST operand was a
+    * number, so those are tracked directly in locals. Token-boundary rules, escape handling, and operator semantics
     * are unchanged (AdversarialGoldenSpec/FuzzSpec + pdf content shas in
     * x_extract_hashes pin them). */
-  def interpret(stream: String): Vector[Run] = {
+  private def interpret(stream: String): Vector[Run] = {
     val runs = Vector.newBuilder[Run]
     val s = stream
     val n = s.length
@@ -293,7 +296,8 @@ object PdfParser {
   private final case class Line(y: Float, runs: Vector[Run]) {
     // vals, not defs: layout's merge loops re-read size/bold/x per
     // neighbor comparison — recomputing max/forall over runs each call was
-    // part of the measured layout cost (PdfProbe)
+    // part of the measured layout cost (round-3 per-stage probe; see
+    // layout below)
     val x: Float = runs.head.x
     // single loop for bold/size/xs (was forall + boxed map.max + map)
     val xs: Array[Float] = new Array[Float](runs.length)
@@ -314,11 +318,13 @@ object PdfParser {
   }
 
   /** Reconstruct blocks for one page; returns (blocks, title if found). */
-  def layout(runs: Vector[Run], pageW: Float, pageNo: Int): (Vector[Block], Option[String]) = {
+  private def layout(runs: Vector[Run], pageW: Float, pageNo: Int): (Vector[Block], Option[String]) = {
     if (runs.isEmpty) return (Vector.empty, None)
 
     // cluster into lines by y (tolerance 1pt). Manual grouping replaces
-    // groupBy (PdfProbe: layout was 226us/doc, mostly collection churn);
+    // groupBy (round-3 per-stage probe: layout was 226us/doc, mostly
+    // collection churn; parse total 504 → 230 µs/doc in BENCH.md
+    // "Round-3 measurements");
     // cluster emission order is irrelevant — lines re-sort by -y below and
     // cross-cluster y ties are impossible (distinct rounded keys imply
     // distinct head y), so the sort is order-total.

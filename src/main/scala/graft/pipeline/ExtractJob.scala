@@ -38,12 +38,10 @@ object ExtractJob {
     *  - `PostDedup`: extract everything, keep the max-warc_ts result per
     *    url — no payload shuffle at all; wasted kernel work equals the
     *    duplicate fraction (the right choice for low-dup crawl deltas on
-    *    unbucketed tables);
-    *  - `NoDedup`: input already deduplicated. */
+    *    unbucketed tables). */
   sealed trait DedupStrategy
   case object WindowDedup extends DedupStrategy
   case object PostDedup extends DedupStrategy
-  case object NoDedup extends DedupStrategy
 
   final case class Config(
       root: String,
@@ -53,18 +51,6 @@ object ExtractJob {
       options: ConversionOptions = ConversionOptions(),
       dedup: DedupStrategy = WindowDedup,
       timeoutMs: Long = ExtractKernel.DefaultTimeoutMs,
-      /** Stage the deduped, bucket-partitioned input to parquet before the
-        * wave loop (skipped when a single wave covers everything). Without
-        * staging, every wave re-scans the FULL pages input — `_bucket` is
-        * computed, so nothing prunes — and WindowDedup re-shuffles raw
-        * payloads once per wave: at 100 TB that is `numWaves` full-table
-        * scans+shuffles. With staging the dedup shuffle happens once, and
-        * each wave's `.where(_bucket isin ...)` becomes a partition-pruned
-        * read of ~1/numWaves of the data. Cost: one full write of the
-        * (deduped) input under `root/_stage/runId` — amortizes immediately
-        * at 2+ waves; a resumed run reuses a completed staging (_SUCCESS),
-        * and the dir is deleted after the final snapshot commit. */
-      stageInput: Boolean = true,
       /** Commit the run as an APPEND snapshot (merge-on-read) instead of a
         * replacing one: existing rows stay visible and re-extracted urls
         * resolve latest-wins via [[LineageTable.readLatest]]. The recrawl
@@ -86,11 +72,11 @@ object ExtractJob {
         import org.apache.spark.sql.expressions.Window
         val w = Window.partitionBy($"url").orderBy($"warc_ts".desc)
         pages.withColumn("_rn", row_number().over(w)).where($"_rn" === 1).drop("_rn").as[Page]
-      case PostDedup | NoDedup => pages
+      case PostDedup => pages
     }
 
     val withBucket = deduped
-      .withColumn("_bucket", pmod(xxhash64($"url"), lit(cfg.numBuckets)).cast("int"))
+      .withColumn("_bucket", LineageTable.bucketCol($"url", cfg.numBuckets))
 
     val done = table.doneBuckets(cfg.runId)
     // FIXED wave partition of the full bucket range — never regrouped from
@@ -125,10 +111,20 @@ object ExtractJob {
         graft.core.Json.write(cfgFp).getBytes(java.nio.charset.StandardCharsets.UTF_8))
     }
 
-    // stage once, prune per wave (see Config.stageInput). An existing
-    // staging is ALWAYS reused on resume — even with one wave left, the
-    // remaining buckets must extract from the same pinned input as the
-    // completed ones, not from a possibly-drifted live input.
+    // stage once, prune per wave: the deduped, bucket-partitioned input is
+    // written to parquet before the wave loop (skipped when a single wave
+    // covers everything). Without staging, every wave re-scans the FULL
+    // pages input — `_bucket` is computed, so nothing prunes — and
+    // WindowDedup re-shuffles raw payloads once per wave: at 100 TB that is
+    // `numWaves` full-table scans+shuffles. With staging the dedup shuffle
+    // happens once, and each wave's `.where(_bucket isin ...)` becomes a
+    // partition-pruned read of ~1/numWaves of the data. Cost: one full
+    // write of the (deduped) input under `root/_stage/runId` — amortizes
+    // immediately at 2+ waves; the dir is deleted after the final snapshot
+    // commit. An existing staging is ALWAYS reused on resume — even with
+    // one wave left, the remaining buckets must extract from the same
+    // pinned input as the completed ones, not from a possibly-drifted live
+    // input.
     val stageDir = s"${cfg.root}/_stage/${cfg.runId}"
     val fpFile = java.nio.file.Paths.get(stageDir, "_FINGERPRINT.json")
     // complete = data committed AND fingerprint present: a crash between
@@ -138,7 +134,7 @@ object ExtractJob {
       java.nio.file.Files.exists(java.nio.file.Paths.get(stageDir, "_SUCCESS")) &&
         java.nio.file.Files.exists(fpFile)
     val bucketed: DataFrame =
-      if (cfg.stageInput && (waves.length > 1 || stagingComplete)) {
+      if (waves.length > 1 || stagingComplete) {
         // A runId pins its staged INPUT DATA immutably by design: completed
         // buckets were extracted from the staged snapshot, so a resume must
         // not silently mix a drifted live input mid-run. A resume whose
@@ -198,7 +194,7 @@ object ExtractJob {
         case _ => extracted.toDF()
       }
       val results = postDeduped
-        .withColumn("_bucket", pmod(xxhash64($"url"), lit(cfg.numBuckets)).cast("int"))
+        .withColumn("_bucket", LineageTable.bucketCol($"url", cfg.numBuckets))
 
       val slots = spark.sparkContext.defaultParallelism
       val filesPerBucket = math.max(1, slots * 2 / math.max(waveBuckets.size, 1))

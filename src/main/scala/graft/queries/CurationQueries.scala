@@ -680,15 +680,13 @@ object CurationQueries {
     // deletes the two tiny-frame aggregation jobs and their join; only the
     // DOUBLE metric algebra stays in Spark expressions (IEEE operation
     // order pinned against the oracle, the mix-weights discipline), fed
-    // from a LocalRelation of the margins. The collect takes the matrix
-    // aggregation WITHOUT nbClassify's presentation orderBy: the folds are
-    // order-insensitive and the output re-sorts by source, so the
-    // range-sort exchange the sorted shape would pay is skipped
-    // (~0.25 s warm: the measured collect-vs-count gap, R6Probe).
-    val confRows = nbPredictions(docs(spark, dir), vocabSize)
-      .groupBy(col("source"), col("predicted"))
-      .agg(count(lit(1)).as("n_docs"))
-      .collect()
+    // from a LocalRelation of the margins. The collect takes the
+    // unsorted confusionMatrix, WITHOUT nbClassify's presentation orderBy:
+    // the folds are order-insensitive and the output re-sorts by source,
+    // so the range-sort exchange the sorted shape would pay is skipped
+    // (~0.25 s warm: the measured collect-vs-count gap, 2.15 vs 1.89 s in
+    // OPTIMIZATION_r06.md).
+    val confRows = confusionMatrix(docs(spark, dir), vocabSize).collect()
     val nPred = confRows.groupBy(_.getString(1))
       .map { case (p, rs) => p -> rs.map(_.getLong(2)).sum }
     val margins = confRows.groupBy(_.getString(0)).toSeq.map { case (src, rs) =>
@@ -722,10 +720,15 @@ object CurationQueries {
   /** Train+apply core over any `(doc_id, text, source)` frame —
     * unit-testable on crafted separable corpora (CurationSpec). */
   def nbClassify(d: DataFrame, vocabSize: Int): DataFrame =
+    confusionMatrix(d, vocabSize).orderBy(col("source"), col("predicted"))
+
+  /** The unsorted `(source, predicted, n_docs)` confusion matrix of the NB
+    * classifier — shared by [[nbClassify]] (sorted for presentation) and
+    * [[qClassifierEval]] (collected as-is). */
+  def confusionMatrix(d: DataFrame, vocabSize: Int): DataFrame =
     nbPredictions(d, vocabSize)
       .groupBy(col("source"), col("predicted"))
       .agg(count(lit(1)).as("n_docs"))
-      .orderBy(col("source"), col("predicted"))
 
   /** Per-document predictions `(doc_id, source, predicted)` — the
     * distributed-join apply pipeline (vs the collected-model serve path

@@ -271,7 +271,7 @@ object StreamingExtract extends Serializable {
     val dataDir = s"${table.root}/data/$runId"
     val lineageDir = s"${table.root}/lineage/$runId"
     val results = batch.withColumn("_bucket",
-      pmod(xxhash64(col("url")), lit(table.numBuckets)).cast("int"))
+      graft.table.LineageTable.bucketCol(col("url"), table.numBuckets))
     results.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
       .partitionBy("_bucket").parquet(dataDir)
     // lineage from the written files (no kernel recompute, columnar prune);

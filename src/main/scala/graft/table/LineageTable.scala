@@ -789,4 +789,12 @@ object LineageTable {
       bytes, org.apache.spark.unsafe.Platform.BYTE_ARRAY_OFFSET, bytes.length, 42L)
     java.lang.Math.floorMod(h, numBuckets.toLong).toInt
   }
+
+  /** [[bucketFor]] as a column expression over a url column — the one
+    * url → bucket mapping every writer partitions by, so a lookup's
+    * `bucketFor` lands on the bucket its row was written to. */
+  def bucketCol(url: org.apache.spark.sql.Column, numBuckets: Int): org.apache.spark.sql.Column = {
+    import org.apache.spark.sql.functions.{lit, pmod, xxhash64}
+    pmod(xxhash64(url), lit(numBuckets)).cast("int")
+  }
 }

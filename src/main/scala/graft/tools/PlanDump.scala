@@ -1,38 +1,46 @@
 package graft.tools
 
 import graft.pipeline.GraftSession
+import java.nio.file.{Files, Paths}
 
-/** Write PLANS.md: formatted physical plans of the headline queries — the
-  * explain-and-iterate artifact (pushdown, pruning, broadcast, codegen
-  * spans are also asserted in PlanSpec; this file is for reading).
-  * sbt "runMain graft.tools.PlanDump [sfDir]" */
+/** Dump `explain("formatted")` for every SparkEntry query, or those whose
+  * name matches a regex, to `<outDir>/<query>.txt` — the explain-and-
+  * iterate artifact: plan-shape claims (pushdown, pruning, broadcast,
+  * codegen spans; PlanSpec asserts the load-bearing ones) are checkable
+  * without running Spark, and two dumps diff query by query.
+  *
+  *   sbt "runMain graft.tools.PlanDump <outDir> <sfDir> [nameRegex]"
+  *
+  * Queries whose CONSTRUCTION already runs jobs (iterative checkpointed
+  * pipelines, bounded driver collects) execute those parts during the
+  * dump; the written plan is the final query's formatted plan, exactly
+  * what `.explain("formatted")` prints. Exits 1 if any query failed.
+  */
 object PlanDump {
   def main(args: Array[String]): Unit = {
-    val dir = args.headOption.getOrElse("/root/testdata/sf0.01")
-    val spark = GraftSession.local(8)
-    val names = Seq(
-      "q_filter_project", "q1_lineitem_agg", "q_join_stats", "q_asof_join",
-      "q_range_join", "q_custdist",
-      "q_dedup_minhash_lsh", "q_dedup_simhash", "q_dedup_emb_cosine",
-      "q_dedup_cluster",
-      "q_ann_brute_force", "q_ann_lsh", "q_ann_ivf",
-      "q_decontaminate", "q_dedup_substring", "q_dedup_segments",
-      "q_dedup_incr_bloom", "q_pack_sequences",
-      "q_pagerank", "q_lm_score", "q_keyword_search",
-      "q_semdedup", "q_hybrid_search", "q_nb_classify", "q_bpe_encode",
-      "x_extract_summary")
-    val sb = new StringBuilder
-    sb.append("# PLANS — explain(formatted) of headline queries (")
-      .append(dir).append(")\n\nRegenerate: `sbt \"runMain graft.tools.PlanDump\"`\n")
-    names.foreach { name =>
-      val df = graft.SparkEntry.queries(name)(spark, dir)
-      df.collect() // finalize AQE
-      sb.append(s"\n## $name\n\n```\n")
-      sb.append(df.queryExecution.executedPlan.toString.take(6000))
-      sb.append("\n```\n")
+    require(args.length >= 2, "usage: PlanDump <outDir> <sfDir> [nameRegex]")
+    val outDir = Paths.get(args(0))
+    val dir = args(1)
+    val pat = args.lift(2).map(_.r)
+    val spark = GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
+    Files.createDirectories(outDir)
+    val names = graft.SparkEntry.queries.keys.toSeq.sorted
+      .filter(n => pat.forall(_.findFirstIn(n).isDefined))
+    val failed = names.filterNot { name =>
+      try {
+        val df = graft.SparkEntry.queries(name)(spark, dir)
+        val txt = df.queryExecution.explainString(
+          org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
+        Files.write(outDir.resolve(s"$name.txt"), txt.getBytes("UTF-8"))
+        println(s"[plandump] $name ok")
+        true
+      } catch { case scala.util.control.NonFatal(e) =>
+        println(s"[plandump] $name FAILED: ${e.getMessage}")
+        false
+      }
     }
-    java.nio.file.Files.write(java.nio.file.Paths.get("PLANS.md"), sb.toString.getBytes("UTF-8"))
-    println(s"PLANS.md written (${names.size} plans)")
+    println(s"[plandump] ${names.size - failed.size}/${names.size} plans written to $outDir")
     spark.stop()
+    if (failed.nonEmpty) sys.exit(1)
   }
 }

@@ -52,6 +52,25 @@ class StatsSpec extends AnyFunSuite {
     assert(table.readVisible(spark).count() == distinctUrls - 1)
   }
 
+  test("bucketFor (lookup side) and bucketCol (write side) agree on every url") {
+    val s = spark
+    import s.implicits._
+    val rnd = new scala.util.Random(42)
+    val urls = Seq("", "https://例え.jp/ページ?q=ü", "http://x/😀\u0000é") ++
+      (0 until 200).map(i => CorpusGen.urlFor(i)) ++
+      (0 until 200).map(_ => rnd.nextString(rnd.nextInt(40)))
+    Seq(1, 8, 64, 1000).foreach { n =>
+      // keyed by position: a lone surrogate from nextString does not
+      // round-trip through UTF-8, so the url itself is no key
+      val got = urls.zipWithIndex.toDF("url", "i")
+        .select($"i", LineageTable.bucketCol($"url", n))
+        .collect().map(r => r.getInt(0) -> r.getInt(1)).toMap
+      urls.zipWithIndex.foreach { case (u, i) =>
+        assert(got(i) == LineageTable.bucketFor(u, n), s"url #$i '$u' at $n buckets")
+      }
+    }
+  }
+
   test("T14: format_bytes matches the reference ladder") {
     import graft.core.PyStr.formatBytes
     assert(formatBytes(512) == "512.0 B")
