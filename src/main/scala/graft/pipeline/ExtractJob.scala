@@ -2,9 +2,8 @@ package graft.pipeline
 
 import graft.model.{ConversionOptions, Page}
 import graft.table.LineageTable
-// Skew.repartitionBySizeBucket intentionally not applied here — see the
-// shuffle note inside run()
 import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** The resumable extraction job: pages → (latest-crawl dedup) → deterministic
@@ -23,22 +22,33 @@ import org.apache.spark.sql.functions._
   *    job never re-extracts completed partitions;
   *  - after the last wave, a snapshot manifest is committed atomically.
   *
+  * Layout: the job's one input exchange is a hash partition on `_bucket`,
+  * and that layout is kept from staging to commit. It feeds the dedup
+  * window (over `(_bucket, url)`) and the bucket-partitioned staging write
+  * with one sort, so each bucket is staged as one file; a wave reads only
+  * its buckets' staged files, extracts map-side and writes each bucket's
+  * results as one file without another shuffle (PostDedup adds one
+  * exchange of the extracted rows per wave for its window).
+  *
   * Scale notes: buckets give the resume granularity (64 default here;
-  * thousands at 100 TB so a lost wave is bounded); within a wave the skew
-  * repartitioner spreads size classes uniformly across cores, and AQE
-  * handles residual imbalance. The only shuffle per wave is that one
-  * repartition — extraction itself is map-side.
+  * thousands at 100 TB so a lost wave is bounded); within a wave a bucket
+  * is one staged file, so buckets — not size classes — are the unit of
+  * task balance, and AQE handles residual imbalance.
+  * Skew.repartitionBySizeBucket is not applied: it would re-shuffle the
+  * payloads and break the one-file-per-bucket layout; it stays available
+  * for pathological inputs (multi-GB blobs) outside the job.
   */
 object ExtractJob {
 
   /** Latest-crawl dedup strategy:
-    *  - `WindowDedup`: exact pre-extraction window over the url — shuffles
-    *    raw payloads once (the right choice when the pages table is
-    *    bucketed by url, where it degenerates to a map-side window);
+    *  - `WindowDedup`: exact pre-extraction window over the url — runs on
+    *    the job's one input exchange (hash on `_bucket`), so raw payloads
+    *    move once and duplicates never reach the kernel;
     *  - `PostDedup`: extract everything, keep the max-warc_ts result per
-    *    url — no payload shuffle at all; wasted kernel work equals the
-    *    duplicate fraction (the right choice for low-dup crawl deltas on
-    *    unbucketed tables). */
+    *    url with a per-wave window over the extracted rows; payloads move
+    *    only into the multi-wave staging, a single unstaged wave moves
+    *    none; wasted kernel work equals the duplicate fraction (the right
+    *    choice for low-dup crawl deltas). */
   sealed trait DedupStrategy
   case object WindowDedup extends DedupStrategy
   case object PostDedup extends DedupStrategy
@@ -67,16 +77,19 @@ object ExtractJob {
     import spark.implicits._
     val table = new LineageTable(cfg.root, cfg.numBuckets)
 
-    val deduped: Dataset[Page] = cfg.dedup match {
-      case WindowDedup =>
-        import org.apache.spark.sql.expressions.Window
-        val w = Window.partitionBy($"url").orderBy($"warc_ts".desc)
-        pages.withColumn("_rn", row_number().over(w)).where($"_rn" === 1).drop("_rn").as[Page]
-      case PostDedup => pages
+    // _bucket is a function of url, so a window over (_bucket, url) keeps
+    // the same rows as one over url — and a hash partition on _bucket
+    // already satisfies it, with no exchange of its own
+    def latestPerUrl(df: DataFrame): DataFrame = {
+      val w = Window.partitionBy($"_bucket", $"url").orderBy($"warc_ts".desc)
+      df.withColumn("_rn", row_number().over(w)).where($"_rn" === 1).drop("_rn")
     }
-
-    val withBucket = deduped
-      .withColumn("_bucket", LineageTable.bucketCol($"url", cfg.numBuckets))
+    val withBucket = pages.toDF().withColumn("_bucket", LineageTable.bucketCol($"url", cfg.numBuckets))
+    // the job's one input exchange: every row of a bucket lands in one task,
+    // so one sort (WindowDedup's window sort, or the writer's own) orders
+    // the bucket-partitioned staging write and each bucket is staged as one
+    // file
+    val byBucket = withBucket.repartition($"_bucket")
 
     val done = table.doneBuckets(cfg.runId)
     // FIXED wave partition of the full bucket range — never regrouped from
@@ -93,10 +106,13 @@ object ExtractJob {
     val rerun = waves.flatten.toSet
 
     // resume-config guard, staging or not: done-markers written under one
-    // (numBuckets, dedup) are lies under another — numBuckets changes the
-    // url→bucket map, dedup changes what a bucket's rows mean
-    val cfgFp: Map[String, Any] =
-      Map("num_buckets" -> cfg.numBuckets, "dedup" -> cfg.dedup.toString)
+    // (numBuckets, bucketsPerWave, dedup) are lies under another —
+    // numBuckets changes the url→bucket map, bucketsPerWave the wave dirs
+    // (keyed by a wave's smallest bucket, so a partial wave's old dir and
+    // the regrouped new ones would both reach the snapshot), dedup what a
+    // bucket's rows mean
+    val cfgFp: Map[String, Any] = Map("num_buckets" -> cfg.numBuckets,
+      "buckets_per_wave" -> cfg.bucketsPerWave, "dedup" -> cfg.dedup.toString)
     val cfgFile = java.nio.file.Paths.get(cfg.root, "_checkpoint", cfg.runId, "CONFIG.json")
     if (java.nio.file.Files.exists(cfgFile)) {
       val prev = graft.core.Json.parse(new String(
@@ -115,16 +131,15 @@ object ExtractJob {
     // written to parquet before the wave loop (skipped when a single wave
     // covers everything). Without staging, every wave re-scans the FULL
     // pages input — `_bucket` is computed, so nothing prunes — and
-    // WindowDedup re-shuffles raw payloads once per wave: at 100 TB that is
-    // `numWaves` full-table scans+shuffles. With staging the dedup shuffle
-    // happens once, and each wave's `.where(_bucket isin ...)` becomes a
-    // partition-pruned read of ~1/numWaves of the data. Cost: one full
-    // write of the (deduped) input under `root/_stage/runId` — amortizes
-    // immediately at 2+ waves; the dir is deleted after the final snapshot
-    // commit. An existing staging is ALWAYS reused on resume — even with
-    // one wave left, the remaining buckets must extract from the same
-    // pinned input as the completed ones, not from a possibly-drifted live
-    // input.
+    // re-shuffles raw payloads once per wave: at 100 TB that is `numWaves`
+    // full-table scans+shuffles. With staging the input exchange happens
+    // once, and each wave reads only its buckets' `_bucket=k` dirs, ~1/numWaves
+    // of the data. Cost: one full write of the (deduped) input under
+    // `root/_stage/runId` — amortizes immediately at 2+ waves; the dir is
+    // deleted after the final snapshot commit. An existing staging is ALWAYS
+    // reused on resume — even with one wave left, the remaining buckets must
+    // extract from the same pinned input as the completed ones, not from a
+    // possibly-drifted live input.
     val stageDir = s"${cfg.root}/_stage/${cfg.runId}"
     val fpFile = java.nio.file.Paths.get(stageDir, "_FINGERPRINT.json")
     // complete = data committed AND fingerprint present: a crash between
@@ -133,36 +148,47 @@ object ExtractJob {
     def stagingComplete =
       java.nio.file.Files.exists(java.nio.file.Paths.get(stageDir, "_SUCCESS")) &&
         java.nio.file.Files.exists(fpFile)
-    val bucketed: DataFrame =
-      if (waves.length > 1 || stagingComplete) {
-        // A runId pins its staged INPUT DATA immutably by design: completed
-        // buckets were extracted from the staged snapshot, so a resume must
-        // not silently mix a drifted live input mid-run. A resume whose
-        // staging SCHEMA disagrees fails loudly (numBuckets/dedup are
-        // already guarded by CONFIG.json above).
-        val fp: Map[String, Any] = Map(
-          "num_buckets" -> cfg.numBuckets,
-          "dedup" -> cfg.dedup.toString,
-          "schema" -> withBucket.schema.catalogString,
-        )
-        if (!stagingComplete) {
-          withBucket.write.mode(SaveMode.Overwrite).partitionBy("_bucket").parquet(stageDir)
-          java.nio.file.Files.write(fpFile, graft.core.Json.write(fp).getBytes(java.nio.charset.StandardCharsets.UTF_8))
-        } else {
-          val staged =
-            graft.core.Json.parse(new String(java.nio.file.Files.readAllBytes(fpFile), java.nio.charset.StandardCharsets.UTF_8))
-              .asInstanceOf[Map[String, Any]]
-          val same =
-            fp.forall { case (k, v) => staged.get(k).map(String.valueOf).contains(String.valueOf(v)) }
-          require(same,
-            s"resume of runId '${cfg.runId}' does not match its staged input at $stageDir " +
-              s"(staged $staged vs requested $fp); use a new runId (or delete the stage dir) " +
-              "to run with a different configuration")
-        }
-        // explicit schema: an empty input writes only _SUCCESS and schema
-        // inference would throw; _bucket stays a partition column -> pruned
-        spark.read.schema(withBucket.schema).parquet(stageDir)
-      } else withBucket
+    val staged = waves.length > 1 || stagingComplete
+    val input = cfg.dedup match {
+      case WindowDedup => latestPerUrl(byBucket)
+      // a single unstaged wave's rows are laid out by its own exchange
+      case PostDedup => if (staged) byBucket else withBucket
+    }
+    if (staged) {
+      // A runId pins its staged INPUT DATA immutably by design: completed
+      // buckets were extracted from the staged snapshot, so a resume must
+      // not silently mix a drifted live input mid-run. A resume whose
+      // staging SCHEMA disagrees fails loudly (numBuckets/dedup are
+      // already guarded by CONFIG.json above).
+      val fp: Map[String, Any] = Map(
+        "num_buckets" -> cfg.numBuckets,
+        "dedup" -> cfg.dedup.toString,
+        "schema" -> withBucket.schema.catalogString,
+      )
+      if (!stagingComplete) {
+        input.write.mode(SaveMode.Overwrite).partitionBy("_bucket").parquet(stageDir)
+        java.nio.file.Files.write(fpFile, graft.core.Json.write(fp).getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      } else {
+        val prev =
+          graft.core.Json.parse(new String(java.nio.file.Files.readAllBytes(fpFile), java.nio.charset.StandardCharsets.UTF_8))
+            .asInstanceOf[Map[String, Any]]
+        val same =
+          fp.forall { case (k, v) => prev.get(k).map(String.valueOf).contains(String.valueOf(v)) }
+        require(same,
+          s"resume of runId '${cfg.runId}' does not match its staged input at $stageDir " +
+            s"(staged $prev vs requested $fp); use a new runId (or delete the stage dir) " +
+            "to run with a different configuration")
+      }
+    }
+    def waveInput(buckets: Seq[Int]): DataFrame =
+      if (staged) {
+        // only the wave's own bucket dirs (an empty bucket has none), so
+        // nothing lists the whole stage dir; explicit schema: an empty
+        // input stages only _SUCCESS and schema inference would throw
+        val dirs = buckets.map(b => s"$stageDir/_bucket=$b")
+          .filter(d => java.nio.file.Files.isDirectory(java.nio.file.Paths.get(d)))
+        spark.read.schema(withBucket.schema).option("basePath", stageDir).parquet(dirs: _*)
+      } else input.where($"_bucket".isin(buckets: _*))
 
     var waveIdx = 0
     waves.foreach { waveBuckets =>
@@ -170,56 +196,46 @@ object ExtractJob {
       val dataDir = s"${cfg.root}/data/${cfg.runId}/wave-$waveId"
       val lineageDir = s"${cfg.root}/lineage/${cfg.runId}/wave-$waveId"
 
-      val subset = bucketed
-        .where($"_bucket".isin(waveBuckets: _*))
+      val subset = waveInput(waveBuckets)
         .select($"url", $"warc_ts", $"html", $"text", $"lang")
         .as[Page]
-      // NO payload shuffle before the kernel: extraction shrinks data, so
-      // heavy-tail skew is handled by fine input splits + dynamic task
-      // scheduling (a single multi-MB doc costs ~50ms — no straggler), and
-      // the only shuffle moves the much smaller extracted results into
-      // bucket-aligned files. Skew.repartitionBySizeBucket remains available
-      // for pathological inputs (multi-GB blobs). Measured on this box:
-      // payload-shuffle plan = 0.55 scaling efficiency 8→32 cores;
-      // this plan = 0.87 (see BENCH.md).
+      // NO payload shuffle before the kernel: a staged bucket is one file,
+      // read whole by one task, and extraction is map-side, so the results
+      // keep the input's bucket layout and the partitioned write makes one
+      // file per bucket (a staged file larger than one input split would
+      // make more). Heavy-tail doc sizes are absorbed by dynamic task
+      // scheduling (a single multi-MB doc costs ~50ms — no straggler) and
+      // AQE. Measured on a 32-core host: a payload shuffle before the kernel
+      // scaled 8→32 cores at 0.55 efficiency, this plan at 0.87 (BENCH.md).
       val extracted = ExtractKernel.extract(subset, cfg.options, cfg.timeoutMs)(spark)
-      val postDeduped = cfg.dedup match {
-        case PostDedup =>
-          // duplicates of a url always share its bucket, so per-wave window
-          // dedup over results is exact — and shuffles only extracted
-          // output, never raw payloads
-          import org.apache.spark.sql.expressions.Window
-          val w = Window.partitionBy($"url").orderBy($"warc_ts".desc)
-          extracted.withColumn("_rn", row_number().over(w)).where($"_rn" === 1).drop("_rn")
-        case _ => extracted.toDF()
-      }
-      val results = postDeduped
         .withColumn("_bucket", LineageTable.bucketCol($"url", cfg.numBuckets))
+      val results = cfg.dedup match {
+        // duplicates of a url always share its bucket, so per-wave window
+        // dedup over results is exact — and its one exchange moves only
+        // extracted output, never raw payloads
+        case PostDedup => latestPerUrl(extracted.repartition($"_bucket"))
+        case WindowDedup => extracted
+      }
+      results.write.mode(SaveMode.Overwrite).partitionBy("_bucket").parquet(dataDir)
 
-      val slots = spark.sparkContext.defaultParallelism
-      val filesPerBucket = math.max(1, slots * 2 / math.max(waveBuckets.size, 1))
-      results
-        .withColumn("_salt", pmod(xxhash64($"task_id"), lit(filesPerBucket)))
-        .repartition(waveBuckets.size * filesPerBucket, $"_bucket", $"_salt")
-        .drop("_salt")
-        .write.mode(SaveMode.Overwrite).partitionBy("_bucket").parquet(dataDir)
-
-      // lineage from the written files (no recompute, columnar prune);
-      // explicit schema: an empty wave writes only _SUCCESS
-      val written = spark.read.schema(results.schema).parquet(dataDir)
-      val lineage = LineageTable.lineageFor(written, cfg.runId, waveId)
-      lineage.write.mode(SaveMode.Overwrite).parquet(lineageDir)
-
-      val stats = lineage.select($"_bucket", $"rows", $"completed", $"failed", $"wall_ms")
-        .collect().map(r => r.getInt(0) -> (r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4))).toMap
+      // lineage aggregated once, from the written files (no recompute,
+      // columnar prune; explicit schema: an empty wave writes only
+      // _SUCCESS), and collected: the lineage parquet and the markers are
+      // both written from these rows
+      val lineage = LineageTable.lineageFor(
+        spark.read.schema(results.schema).parquet(dataDir), cfg.runId, waveId)
+      val lineageRows = lineage.collect()
+      spark.createDataFrame(java.util.Arrays.asList(lineageRows: _*), lineage.schema)
+        .coalesce(1).write.mode(SaveMode.Overwrite).parquet(lineageDir)
+      val stats = lineageRows.map(r => r.getAs[Int]("_bucket") -> r).toMap
 
       // markers LAST — only now is the wave durable
       waveBuckets.foreach { b =>
-        val (rows, completedN, failedN, wallMs) = stats.getOrElse(b, (0L, 0L, 0L, 0L))
+        def n(field: String): Long = stats.get(b).fold(0L)(_.getAs[Long](field))
         table.markDone(cfg.runId, b, Map(
           "bucket" -> b, "run_id" -> cfg.runId, "wave" -> waveId,
           "data_dir" -> dataDir, "lineage_dir" -> lineageDir,
-          "rows" -> rows, "completed" -> completedN, "failed" -> failedN, "wall_ms" -> wallMs,
+          "rows" -> n("rows"), "completed" -> n("completed"), "failed" -> n("failed"), "wall_ms" -> n("wall_ms"),
         ))
       }
       afterWave(waveIdx)

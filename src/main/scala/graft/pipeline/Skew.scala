@@ -9,8 +9,9 @@ import org.apache.spark.sql.functions._
   * prefetch-multiplier-1 analog, app/worker.py:40 + docs/CONFIGURATION.md:
   * 256-289, re-expressed as data partitioning).
   *
-  * The production extract path does NOT shuffle payloads at all (fine input
-  * splits + dynamic scheduling absorb the heavy tail — see ExtractJob);
+  * The production extract path does NOT shuffle payloads before the kernel
+  * (its one exchange, on the url-hash bucket, happens once at staging;
+  * dynamic scheduling absorbs the heavy tail — see ExtractJob);
   * this operator is the explicit rebalancer for pathological inputs where
   * single rows approach partition size (multi-GB blobs, handful-of-rows
   * partitions).

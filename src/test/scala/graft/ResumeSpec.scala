@@ -6,6 +6,7 @@ import graft.pipeline.ExtractJob
 import graft.table.LineageTable
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.Files
+import scala.jdk.CollectionConverters._
 
 /** LineageTable + ExtractJob: checkpointed resume (killed job never
   * re-extracts committed buckets), snapshot isolation, lineage stats, GC
@@ -329,6 +330,63 @@ class ResumeSpec extends AnyFunSuite {
     assert(df.count() == pagesDs.select("url").distinct().count(), "duplicated rows")
     assert(df.groupBy("url").count().where("count > 1").count() == 0)
     assert(table.readLineage(spark).groupBy("_bucket").count().where("count > 1").count() == 0)
+  }
+
+  test("kill inside the marker loop, resume with a different bucketsPerWave: refused, not duplicated") {
+    val root = freshRoot()
+    val cfg = ExtractJob.Config(root, runId = "runW", numBuckets = 16, bucketsPerWave = 8)
+    final class Kill extends RuntimeException("simulated kill")
+    intercept[Kill] {
+      ExtractJob.run(spark, pagesDs, cfg, afterWave = w => if (w == 0) throw new Kill)
+    }
+    // wave-0 (buckets 0..7) is fully written but only 0..3 are marked;
+    // regrouped by 4, buckets 4..7 would re-run into a new wave-4 dir while
+    // the markers of 0..3 still name wave-0's dir, so both reach the snapshot
+    (4 to 7).foreach(b => Files.delete(java.nio.file.Paths.get(root, "_checkpoint", "runW", s"done-$b.json")))
+    val ex = intercept[IllegalArgumentException] {
+      ExtractJob.run(spark, pagesDs, cfg.copy(bucketsPerWave = 4))
+    }
+    assert(ex.getMessage.contains("different config"), ex.getMessage)
+    // the recorded wave size resumes normally: the partial wave re-runs whole
+    val report = ExtractJob.run(spark, pagesDs, cfg)
+    assert(report.bucketsRun == 16 && report.bucketsSkipped == 0, report.toString)
+    val df = new LineageTable(root, 16).read(spark)
+    assert(df.count() == pagesDs.select("url").distinct().count(), "duplicated rows")
+  }
+
+  private def children(dir: java.nio.file.Path): Seq[java.nio.file.Path] =
+    scala.util.Using.resource(Files.list(dir))(_.iterator().asScala.toVector.sortBy(_.toString))
+
+  private def bucketDirs(dir: java.nio.file.Path): Seq[java.nio.file.Path] =
+    children(dir).filter(d => Files.isDirectory(d) && d.getFileName.toString.startsWith("_bucket="))
+
+  private def parquetFiles(dir: java.nio.file.Path): Int =
+    children(dir).map(_.getFileName.toString).count(n => n.endsWith(".parquet") && !n.startsWith("."))
+
+  private def urlBuckets(numBuckets: Int): Int =
+    CorpusGen.pages(N).map(p => LineageTable.bucketFor(p.url, numBuckets)).distinct.size
+
+  test("staging writes each bucket as one parquet file") {
+    val root = freshRoot()
+    val cfg = ExtractJob.Config(root, runId = "runS", numBuckets = 16, bucketsPerWave = 4)
+    final class Kill extends RuntimeException("simulated kill")
+    intercept[Kill] {
+      ExtractJob.run(spark, pagesDs, cfg, afterWave = w => if (w == 0) throw new Kill)
+    }
+    val dirs = bucketDirs(java.nio.file.Paths.get(root, "_stage", "runS"))
+    assert(dirs.size == urlBuckets(16), dirs.toString)
+    dirs.foreach(d => assert(parquetFiles(d) == 1, s"$d holds ${parquetFiles(d)} parquet files"))
+  }
+
+  test("each committed bucket is one parquet file, staged or not, under both dedup strategies") {
+    for (dedup <- Seq(ExtractJob.WindowDedup, ExtractJob.PostDedup); (nb, perWave) <- Seq((16, 4), (8, 8))) {
+      val root = freshRoot()
+      ExtractJob.run(spark, pagesDs, ExtractJob.Config(root, "runL", numBuckets = nb, bucketsPerWave = perWave,
+        dedup = dedup))
+      val dirs = children(java.nio.file.Paths.get(root, "data", "runL")).flatMap(bucketDirs)
+      assert(dirs.size == urlBuckets(nb), s"$dedup $nb/$perWave: $dirs")
+      dirs.foreach(d => assert(parquetFiles(d) == 1, s"$dedup $nb/$perWave: $d holds ${parquetFiles(d)} parquet files"))
+    }
   }
 
   test("completed run clears markers and staging; orphan sweep spares the nested layout") {
