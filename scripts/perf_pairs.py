@@ -16,8 +16,10 @@ whose speed drifts during the comparison moves both sides alike. Each
 side builds from its own sources. Then, per end-to-end metric, it prints
 the parent's median and quartiles, the change's median, the relative
 change, how many pairs the change won, and whether the gain rule holds:
-the change wins at least 9 of 10 pairs and the gap between the medians is
-larger than the parent's interquartile range. Last come the correct and
+there are at least 10 pairs, the change wins at least 9 of 10 of them, the
+gap between the medians is larger than the parent's interquartile range,
+and the change has no larger share of failed operations (a run that failed
+to run counts as all of its operations failed). Last come the correct and
 failed-operation counts of each side.
 """
 import argparse
@@ -66,9 +68,16 @@ def quartiles(xs):
     return q1, q2, q3
 
 
+def failed_share(runs):
+    """Failed over attempted operations; a run that failed to run counts as 1."""
+    shares = [r["failed"] / r["attempted"] if r and r.get("attempted") else 1.0 for r in runs]
+    return sum(shares) / len(shares) if shares else 0.0
+
+
 def report(pairs, directions):
     ok = [(p, c) for p, c in pairs if p is not None and c is not None]
     names = sorted({k for p, c in ok for k in p["metrics"]} & {k for p, c in ok for k in c["metrics"]})
+    more_failures = failed_share([c for _, c in pairs]) > failed_share([p for p, _ in pairs])
     print("%-22s %10s %21s %10s %8s %6s %s" % ("metric", "parent", "parent IQR", "change", "rel", "wins", "rule"))
     for name in names:
         both = [(value(p, name), value(c, name)) for p, c in ok
@@ -80,7 +89,8 @@ def report(pairs, directions):
         med_c = statistics.median(chg)
         wins = sum(1 for p, c in both if (c < p if lower else c > p))
         gap = (med_p - med_c) if lower else (med_c - med_p)
-        holds = wins >= 0.9 * len(both) and gap > q3 - q1
+        holds = (len(both) >= 10 and wins >= 0.9 * len(both) and gap > q3 - q1
+                 and not more_failures)
         rel = (med_c / med_p - 1.0) if med_p else float("nan")
         print("%-22s %10.4g %10.4g-%-10.4g %10.4g %+7.1f%% %3d/%-2d %s" % (
             name, med_p, q1, q3, med_c, 100.0 * rel, wins, len(both), "holds" if holds else "no"))
@@ -90,6 +100,8 @@ def report(pairs, directions):
         print("%s: %d runs, %d correct, %d failed to run, failed operations %d of %d" % (
             side, len(runs), sum(1 for r in done if r.get("correct")), len(runs) - len(done),
             sum(r.get("failed", 0) for r in done), sum(r.get("attempted", 0) for r in done)))
+    if more_failures:
+        print("the change has a larger share of failed operations: the rule holds for no metric")
 
 
 def main():

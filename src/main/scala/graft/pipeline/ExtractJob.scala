@@ -22,21 +22,28 @@ import org.apache.spark.sql.functions._
   *    job never re-extracts completed partitions;
   *  - after the last wave, a snapshot manifest is committed atomically.
   *
-  * Layout: the job's one input exchange is a hash partition on `_bucket`,
-  * and that layout is kept from staging to commit. It feeds the dedup
-  * window (over `(_bucket, url)`) and the bucket-partitioned staging write
-  * with one sort, so each bucket is staged as one file; a wave reads only
-  * its buckets' staged files, extracts map-side and writes each bucket's
-  * results as one file without another shuffle (PostDedup adds one
-  * exchange of the extracted rows per wave for its window).
+  * Layout: under WindowDedup the job's one input exchange is a hash
+  * partition on `_bucket`, and that layout is kept from staging to commit.
+  * It feeds the dedup window (over `(_bucket, url)`) and the
+  * bucket-partitioned staging write with one sort, so each bucket is
+  * staged as one file; a wave reads only its buckets' staged files,
+  * extracts map-side and writes each bucket's results as one file without
+  * another shuffle. Only WindowDedup stages one file per bucket: PostDedup
+  * stages its input as it comes (no payload shuffle), and its per-wave
+  * window exchange of the extracted rows makes each committed bucket one
+  * file.
   *
   * Scale notes: buckets give the resume granularity (64 default here;
-  * thousands at 100 TB so a lost wave is bounded); within a wave a bucket
-  * is one staged file, so buckets — not size classes — are the unit of
-  * task balance, and AQE handles residual imbalance.
-  * Skew.repartitionBySizeBucket is not applied: it would re-shuffle the
-  * payloads and break the one-file-per-bucket layout; it stays available
-  * for pathological inputs (multi-GB blobs) outside the job.
+  * thousands at 100 TB so a lost wave is bounded). Under WindowDedup a
+  * bucket is one staged file, read by one task unless the file spans
+  * several input splits, so a wave's kernel runs in about `bucketsPerWave`
+  * tasks: the wave size must be at least the core count or cores idle
+  * (the staging write and its sort run in at most `numBuckets` tasks).
+  * Buckets — not size classes — are the unit of task balance, and AQE
+  * handles residual imbalance. Skew.repartitionBySizeBucket is not
+  * applied: it would re-shuffle the payloads and break the
+  * one-file-per-bucket layout; it stays available for pathological inputs
+  * (multi-GB blobs) outside the job.
   */
 object ExtractJob {
 
@@ -45,10 +52,9 @@ object ExtractJob {
     *    the job's one input exchange (hash on `_bucket`), so raw payloads
     *    move once and duplicates never reach the kernel;
     *  - `PostDedup`: extract everything, keep the max-warc_ts result per
-    *    url with a per-wave window over the extracted rows; payloads move
-    *    only into the multi-wave staging, a single unstaged wave moves
-    *    none; wasted kernel work equals the duplicate fraction (the right
-    *    choice for low-dup crawl deltas). */
+    *    url with a per-wave window over the extracted rows — no payload
+    *    shuffle at all; wasted kernel work equals the duplicate fraction
+    *    (the right choice for low-dup crawl deltas on unbucketed tables). */
   sealed trait DedupStrategy
   case object WindowDedup extends DedupStrategy
   case object PostDedup extends DedupStrategy
@@ -85,11 +91,6 @@ object ExtractJob {
       df.withColumn("_rn", row_number().over(w)).where($"_rn" === 1).drop("_rn")
     }
     val withBucket = pages.toDF().withColumn("_bucket", LineageTable.bucketCol($"url", cfg.numBuckets))
-    // the job's one input exchange: every row of a bucket lands in one task,
-    // so one sort (WindowDedup's window sort, or the writer's own) orders
-    // the bucket-partitioned staging write and each bucket is staged as one
-    // file
-    val byBucket = withBucket.repartition($"_bucket")
 
     val done = table.doneBuckets(cfg.runId)
     // FIXED wave partition of the full bucket range — never regrouped from
@@ -150,9 +151,11 @@ object ExtractJob {
         java.nio.file.Files.exists(fpFile)
     val staged = waves.length > 1 || stagingComplete
     val input = cfg.dedup match {
-      case WindowDedup => latestPerUrl(byBucket)
-      // a single unstaged wave's rows are laid out by its own exchange
-      case PostDedup => if (staged) byBucket else withBucket
+      // the job's one input exchange: every row of a bucket lands in one
+      // task, so the window's sort also orders the bucket-partitioned
+      // staging write and each bucket is staged as one file
+      case WindowDedup => latestPerUrl(withBucket.repartition($"_bucket"))
+      case PostDedup => withBucket
     }
     if (staged) {
       // A runId pins its staged INPUT DATA immutably by design: completed
@@ -199,14 +202,16 @@ object ExtractJob {
       val subset = waveInput(waveBuckets)
         .select($"url", $"warc_ts", $"html", $"text", $"lang")
         .as[Page]
-      // NO payload shuffle before the kernel: a staged bucket is one file,
-      // read whole by one task, and extraction is map-side, so the results
-      // keep the input's bucket layout and the partitioned write makes one
-      // file per bucket (a staged file larger than one input split would
-      // make more). Heavy-tail doc sizes are absorbed by dynamic task
-      // scheduling (a single multi-MB doc costs ~50ms — no straggler) and
-      // AQE. Measured on a 32-core host: a payload shuffle before the kernel
-      // scaled 8→32 cores at 0.55 efficiency, this plan at 0.87 (BENCH.md).
+      // NO payload shuffle before the kernel. Under WindowDedup a staged
+      // bucket is one file, read whole by one task, and extraction is
+      // map-side, so the results keep the input's bucket layout and the
+      // partitioned write makes one file per bucket (a staged file larger
+      // than one input split would make more). The limit: at most one
+      // kernel task per staged bucket, so a wave's parallelism is about
+      // `bucketsPerWave` unless a bucket file spans several splits.
+      // Heavy-tail doc sizes are absorbed by dynamic task scheduling (a
+      // single multi-MB doc costs ~50ms — no straggler) and AQE. Scaling
+      // of this plan above 4 cores is unmeasured.
       val extracted = ExtractKernel.extract(subset, cfg.options, cfg.timeoutMs)(spark)
         .withColumn("_bucket", LineageTable.bucketCol($"url", cfg.numBuckets))
       val results = cfg.dedup match {

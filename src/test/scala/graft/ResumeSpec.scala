@@ -75,6 +75,10 @@ class ResumeSpec extends AnyFunSuite {
     val committed = table.doneBuckets("runX")
     assert(committed.size == 8, s"expected 2 waves x 4 buckets committed, got $committed")
     assert(table.currentSnapshotId.isEmpty, "no snapshot may exist after a kill")
+    // the staging survives the kill, one parquet file per bucket
+    val staged = bucketDirs(java.nio.file.Paths.get(root, "_stage", "runX"))
+    assert(staged.size == urlBuckets(16), staged.toString)
+    staged.foreach(d => assert(parquetFiles(d) == 1, s"$d holds ${parquetFiles(d)} parquet files"))
 
     // resume: same table + runId
     val report2 = ExtractJob.run(spark, pagesDs, cfg)
@@ -365,18 +369,6 @@ class ResumeSpec extends AnyFunSuite {
 
   private def urlBuckets(numBuckets: Int): Int =
     CorpusGen.pages(N).map(p => LineageTable.bucketFor(p.url, numBuckets)).distinct.size
-
-  test("staging writes each bucket as one parquet file") {
-    val root = freshRoot()
-    val cfg = ExtractJob.Config(root, runId = "runS", numBuckets = 16, bucketsPerWave = 4)
-    final class Kill extends RuntimeException("simulated kill")
-    intercept[Kill] {
-      ExtractJob.run(spark, pagesDs, cfg, afterWave = w => if (w == 0) throw new Kill)
-    }
-    val dirs = bucketDirs(java.nio.file.Paths.get(root, "_stage", "runS"))
-    assert(dirs.size == urlBuckets(16), dirs.toString)
-    dirs.foreach(d => assert(parquetFiles(d) == 1, s"$d holds ${parquetFiles(d)} parquet files"))
-  }
 
   test("each committed bucket is one parquet file, staged or not, under both dedup strategies") {
     for (dedup <- Seq(ExtractJob.WindowDedup, ExtractJob.PostDedup); (nb, perWave) <- Seq((16, 4), (8, 8))) {
