@@ -35,14 +35,16 @@ object Chunker {
 
       if (end < n) {
         // sentence boundary past half the chunk, first matching separator
-        // wins. Bounded lastIndexOf on the original string — identical to
-        // the reference's text[start:end].rfind(sep) without the window
-        // copy per separator (the chunker hot-path allocation).
+        // wins. A backward search of [start, end) on the original string is
+        // the reference's text[start:end].rfind(sep) without the window copy;
+        // an unbounded lastIndexOf would scan a separator-free text (CJK)
+        // back to offset 0 once per chunk — quadratic.
         var found = false
         var si = 0
         while (!found && si < Separators.length) {
           val sep = Separators(si)
-          val abs = text.lastIndexOf(sep, end - sep.length)
+          var abs = end - sep.length
+          while (abs >= start && !text.startsWith(sep, abs)) abs -= 1
           val lastSep = if (abs >= start) abs - start else -1
           if (lastSep > chunkSize * 0.5) {
             end = start + lastSep + sep.length
@@ -51,7 +53,8 @@ object Chunker {
           si += 1
         }
         if (!found) {
-          val abs = text.lastIndexOf(' ', end - 1)
+          var abs = end - 1
+          while (abs >= start && text.charAt(abs) != ' ') abs -= 1
           val lastSpace = if (abs >= start) abs - start else -1
           if (lastSpace > chunkSize * 0.7) end = start + lastSpace + 1
         }

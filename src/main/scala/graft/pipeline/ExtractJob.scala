@@ -13,11 +13,13 @@ import org.apache.spark.sql.functions._
   *  - work unit = url-hash bucket (stable across runs/partitionings — NEVER
   *    Spark task ids); waves of `bucketsPerWave` buckets run as one Spark
   *    job each;
-  *  - a wave writes its results parquet (partitioned by bucket for
-  *    downstream partition pruning), then its lineage parquet, then one
-  *    marker file per bucket — markers last, so a crash mid-wave leaves no
-  *    marker and the rerun redoes the whole wave (at-least-once, idempotent
-  *    because output paths are keyed by wave id and overwritten);
+  *  - a wave's [[LineageTable.writeUnit]] (dir `<runId>/wave-<id>`) writes
+  *    its results parquet (partitioned by bucket for downstream partition
+  *    pruning), then its lineage parquet, then the wave writes one marker
+  *    file per bucket from the returned lineage rows — markers last, so a
+  *    crash mid-wave leaves no marker and the rerun redoes the whole wave
+  *    (at-least-once, idempotent because output paths are keyed by wave id
+  *    and overwritten);
   *  - rerunning the same (table, runId) skips all marked buckets: a killed
   *    job never re-extracts completed partitions;
   *  - after the last wave, a snapshot manifest is committed atomically.
@@ -196,9 +198,6 @@ object ExtractJob {
     var waveIdx = 0
     waves.foreach { waveBuckets =>
       val waveId = waveBuckets.min // stable wave id = smallest bucket in it
-      val dataDir = s"${cfg.root}/data/${cfg.runId}/wave-$waveId"
-      val lineageDir = s"${cfg.root}/lineage/${cfg.runId}/wave-$waveId"
-
       val subset = waveInput(waveBuckets)
         .select($"url", $"warc_ts", $"html", $"text", $"lang")
         .as[Page]
@@ -221,17 +220,8 @@ object ExtractJob {
         case PostDedup => latestPerUrl(extracted.repartition($"_bucket"))
         case WindowDedup => extracted
       }
-      results.write.mode(SaveMode.Overwrite).partitionBy("_bucket").parquet(dataDir)
-
-      // lineage aggregated once, from the written files (no recompute,
-      // columnar prune; explicit schema: an empty wave writes only
-      // _SUCCESS), and collected: the lineage parquet and the markers are
-      // both written from these rows
-      val lineage = LineageTable.lineageFor(
-        spark.read.schema(results.schema).parquet(dataDir), cfg.runId, waveId)
-      val lineageRows = lineage.collect()
-      spark.createDataFrame(java.util.Arrays.asList(lineageRows: _*), lineage.schema)
-        .coalesce(1).write.mode(SaveMode.Overwrite).parquet(lineageDir)
+      val (dataDir, lineageDir, lineageRows) =
+        table.writeUnit(results, s"${cfg.runId}/wave-$waveId", cfg.runId, waveId)
       val stats = lineageRows.map(r => r.getAs[Int]("_bucket") -> r).toMap
 
       // markers LAST — only now is the wave durable

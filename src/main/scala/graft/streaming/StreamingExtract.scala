@@ -24,6 +24,12 @@ object StreamingExtract extends Serializable {
     StructField("lang", StringType),
   ))
 
+  /** The pages-dir file stream of [[run]] and [[runToTable]]. */
+  private def pagesStream(spark: SparkSession, inputDir: String): Dataset[Page] = {
+    import spark.implicits._
+    spark.readStream.schema(PageSchema).option("maxFilesPerTrigger", "16").parquet(inputDir).as[Page]
+  }
+
   /** pages-dir file stream → extraction → parquet append. Runs until no
     * more available data when `availableNow` (for tests/backfills); pass
     * false for a continuously-running micro-batch query. */
@@ -35,14 +41,7 @@ object StreamingExtract extends Serializable {
       options: ConversionOptions = ConversionOptions(),
       availableNow: Boolean = true,
   ): StreamingQuery = {
-    import spark.implicits._
-    val pages: Dataset[Page] = spark.readStream
-      .schema(PageSchema)
-      .option("maxFilesPerTrigger", "16")
-      .parquet(inputDir)
-      .as[Page]
-
-    val results = ExtractKernel.extract(pages, options)(spark)
+    val results = ExtractKernel.extract(pagesStream(spark, inputDir), options)(spark)
       .select(col("url"), col("task_id"), col("status"), col("document_type"),
         col("content"), col("page_count"), col("created_at"))
 
@@ -83,23 +82,8 @@ object StreamingExtract extends Serializable {
       options: ConversionOptions = ConversionOptions(),
       streamRunId: String = "stream",
       availableNow: Boolean = true,
-  ): StreamingQuery = {
-    import spark.implicits._
-    val pages: Dataset[Page] = spark.readStream
-      .schema(PageSchema)
-      .option("maxFilesPerTrigger", "16")
-      .parquet(inputDir)
-      .as[Page]
-    val results = ExtractKernel.extract(pages, options)(spark).toDF()
-    val writer = results.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        commitStreamBatch(table, batch, streamRunId, batchId)
-        ()
-      }
-    (if (availableNow) writer.trigger(Trigger.AvailableNow()) else writer).start()
-  }
+  ): StreamingQuery =
+    extractToTable(spark, pagesStream(spark, inputDir), table, checkpointDir, options, streamRunId, availableNow)
 
   /** [[runToTable]] with the crawl container as the source: streaming
     * WARC segments (`readStream.format("warc")` — delta-only file
@@ -119,8 +103,15 @@ object StreamingExtract extends Serializable {
   ): StreamingQuery = {
     val pages: Dataset[Page] =
       graft.sources.WarcSource.asPages(spark.readStream.format("warc").load(warcDir))
-    val results = ExtractKernel.extract(pages, options)(spark).toDF()
-    val writer = results.writeStream
+    extractToTable(spark, pages, table, checkpointDir, options, streamRunId, availableNow)
+  }
+
+  /** The table sink of [[runToTable]] and [[runWarcToTable]]: extraction
+    * kernel → one [[commitStreamBatch]] per micro-batch. */
+  private def extractToTable(spark: SparkSession, pages: Dataset[Page], table: graft.table.LineageTable,
+      checkpointDir: String, options: ConversionOptions, streamRunId: String,
+      availableNow: Boolean): StreamingQuery = {
+    val writer = ExtractKernel.extract(pages, options)(spark).toDF().writeStream
       .outputMode("append")
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
@@ -229,7 +220,9 @@ object StreamingExtract extends Serializable {
     (if (availableNow) writer.trigger(Trigger.AvailableNow()) else writer).start()
   }
 
-  /** Commit one extracted micro-batch as a table snapshot. Returns false
+  /** Commit one extracted micro-batch as a table snapshot: its rows,
+    * exchanged on `_bucket`, through [[graft.table.LineageTable.writeUnit]]
+    * under `<streamRunId>-b<batchId>`. Returns false
     * (and writes nothing) when this (streamRunId, batchId) already
     * committed — the replay-after-crash path. Single-writer per table, as
     * everywhere in the table layer: in particular, run table maintenance
@@ -267,18 +260,11 @@ object StreamingExtract extends Serializable {
       case _ => ()
     }
     val runId = s"$streamRunId-b$batchId"
-    val spark = batch.sparkSession
-    val dataDir = s"${table.root}/data/$runId"
-    val lineageDir = s"${table.root}/lineage/$runId"
-    val results = batch.withColumn("_bucket",
-      graft.table.LineageTable.bucketCol(col("url"), table.numBuckets))
-    results.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .partitionBy("_bucket").parquet(dataDir)
-    // lineage from the written files (no kernel recompute, columnar prune);
-    // explicit schema: an empty batch writes only _SUCCESS
-    val written = spark.read.schema(results.schema).parquet(dataDir)
-    graft.table.LineageTable.lineageFor(written, runId, wave = batchId)
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(lineageDir)
+    // an exchange of extracted rows only: one file per bucket the batch
+    // touches, however many input partitions it spans
+    val bucket = graft.table.LineageTable.bucketCol(col("url"), table.numBuckets)
+    val (dataDir, lineageDir, _) =
+      table.writeUnit(batch.withColumn("_bucket", bucket).repartition(col("_bucket")), runId, runId, batchId)
     table.commitSnapshot(
       table.currentDataDirs :+ dataDir,
       table.currentLineageDirs :+ lineageDir,

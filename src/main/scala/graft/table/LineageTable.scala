@@ -1,7 +1,7 @@
 package graft.table
 
 import graft.core.Json
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
 import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import scala.jdk.CollectionConverters._
@@ -30,8 +30,8 @@ import scala.jdk.CollectionConverters._
   * Layout:
   * {{{
   *   root/
-  *     data/<runId>/bucket=<b>/ ... .parquet   bucket-partitioned data files
-  *     lineage/<runId>/ ... .parquet           lineage rows per run
+  *     data/<dir>/_bucket=<b>/ ... .parquet    bucket-partitioned data files
+  *     lineage/<dir>/ ... .parquet             lineage rows per writeUnit
   *     _checkpoint/<runId>/done-<b>.json     per-bucket commit markers
   *     _manifests/snapshot-<n>.json          file list + lineage pointers
   *     _manifests/CURRENT                    atomic pointer ("n")
@@ -465,12 +465,15 @@ final class LineageTable(val root: String, val numBuckets: Int = 64) {
     * `versionCol` wins, `tieCol` (descending) breaks exact version ties
     * deterministically. The merge-on-read half of [[appendCommit]]. */
   def readLatest(spark: SparkSession, keyCol: String = "url",
-                 versionCol: String = "created_at", tieCol: String = "task_id"): DataFrame = {
+                 versionCol: String = "created_at", tieCol: String = "task_id"): DataFrame =
+    latestPer(readVisible(spark), Seq(keyCol), versionCol, tieCol)
+
+  private def latestPer(df: DataFrame, keyCols: Seq[String], versionCol: String,
+                        tieCol: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     import org.apache.spark.sql.functions._
-    val w = Window.partitionBy(col(keyCol)).orderBy(col(versionCol).desc, col(tieCol).desc)
-    readVisible(spark)
-      .withColumn("_rn", row_number().over(w))
+    val w = Window.partitionBy(keyCols.map(col): _*).orderBy(col(versionCol).desc, col(tieCol).desc)
+    df.withColumn("_rn", row_number().over(w))
       .where(col("_rn") === 1)
       .drop("_rn")
   }
@@ -537,12 +540,36 @@ final class LineageTable(val root: String, val numBuckets: Int = 64) {
     else df.where(!org.apache.spark.sql.functions.col("task_id").isin(ts.toSeq: _*))
   }
 
+  // ---------------------------------------------------------- commit unit
+
+  /** THE commit-unit write of every writer (job wave, stream micro-batch,
+    * compaction), so layout and lineage schema cannot drift between them:
+    * `results` partitioned by `_bucket` to `root/data/<dir>`, read back
+    * with the explicit schema (an empty unit writes only _SUCCESS), lineage
+    * aggregated once and collected, then written as one file to
+    * `root/lineage/<dir>`. Each task writes one file per bucket it holds, so
+    * callers whose rows are not bucket-aligned add `repartition(_bucket)`.
+    * Callers commit (markers, manifest) from the returned dirs and rows. */
+  def writeUnit(results: DataFrame, dir: String, runId: String, wave: Long): (String, String, Array[Row]) = {
+    val spark = results.sparkSession
+    val dataDir = s"$root/data/$dir"
+    val lineageDir = s"$root/lineage/$dir"
+    results.write.mode(SaveMode.Overwrite).partitionBy("_bucket").parquet(dataDir)
+    val lineage = LineageTable.lineageFor(spark.read.schema(results.schema).parquet(dataDir), runId, wave)
+    val rows = lineage.collect()
+    spark.createDataFrame(java.util.Arrays.asList(rows: _*), lineage.schema)
+      .coalesce(1).write.mode(SaveMode.Overwrite).parquet(lineageDir)
+    (dataDir, lineageDir, rows)
+  }
+
   // ----------------------------------------------------------- compaction
 
   /** Rewrite the current snapshot into ONE consolidated bucket-partitioned
-    * data dir + one lineage dir, applying tombstones physically, then
-    * commit a new snapshot referencing only the compacted dirs and clear
-    * the tombstone list (now baked into the data).
+    * data dir (one file per bucket) + one lineage dir via [[writeUnit]],
+    * applying tombstones physically, then commit a new snapshot
+    * referencing only the compacted dirs and clear the tombstone list.
+    * Every visible row crosses one exchange on `_bucket`, so the rewrite
+    * runs in at most `numBuckets` write tasks, whatever the core count.
     *
     * Why: every wave of an ExtractJob run appends a dir to `data_dirs`, so
     * a long-running job accumulates an ever-growing union in `read()` and
@@ -562,25 +589,20 @@ final class LineageTable(val root: String, val numBuckets: Int = 64) {
     val applied = tombstones
     // nextSnapshotId (max retained + 1), NOT currentSnapshotId + 1: after a
     // rollbackTo, the latter reuses an id of a retained later snapshot and
-    // the Overwrite below would destroy a data dir that snapshot still
+    // writeUnit's Overwrite would destroy a data dir that snapshot still
     // references, breaking readAt immutability
-    val newId = nextSnapshotId
-    val runId = s"$label-$newId"
-    val dataDir = s"$root/data/$runId"
-    val lineageDir = s"$root/lineage/$runId"
+    val runId = s"$label-$nextSnapshotId"
 
-    // resolveLatestBy = (keyCol, versionCol): materialize merge-on-read
-    // resolution (appendCommit duplicates collapse physically)
-    val visible = resolveLatestBy
-      .map { case (k, v) => readLatest(spark, k, v) }
-      .getOrElse(readVisible(spark))
-    visible.write.mode(SaveMode.Overwrite).partitionBy("_bucket").parquet(dataDir)
-
-    // explicit schema: an all-tombstoned table compacts to an empty dir
-    // (only _SUCCESS), where schema inference would crash mid-compaction
-    val written = spark.read.schema(visible.schema).parquet(dataDir)
-    LineageTable.lineageFor(written, runId, wave = 0L)
-      .write.mode(SaveMode.Overwrite).parquet(lineageDir)
+    // one exchange on _bucket, so each bucket is one write task. With
+    // resolveLatestBy = (keyCol, versionCol), merge-on-read resolution is
+    // materialized; a url key determines _bucket, so the (_bucket, url)
+    // window keeps the rows of a url window and needs no exchange of its own
+    def byBucket = readVisible(spark).repartition(col("_bucket"))
+    val (dataDir, lineageDir, _) = writeUnit(resolveLatestBy match {
+      case Some(("url", v)) => latestPer(byBucket, Seq("_bucket", "url"), v, "task_id")
+      case Some((k, v)) => readLatest(spark, k, v).repartition(col("_bucket"))
+      case None => byBucket
+    }, runId, runId, 0L)
 
     raceTestHook()
     // loud race detection (VERDICT r3 #6): this commit REPLACES the table
@@ -666,8 +688,8 @@ final class LineageTable(val root: String, val numBuckets: Int = 64) {
       s("data_dirs").asInstanceOf[List[Any]].map(String.valueOf) ++
         s("lineage_dirs").asInstanceOf[List[Any]].map(String.valueOf)
     }.toSet ++ markerDirs
-    // referenced paths may be NESTED under a listed child (ExtractJob's
-    // data/<runId>/wave-N layout vs the flat data/<runId> of compact/
+    // referenced paths may be NESTED under a listed child (writeUnit's
+    // <runId>/wave-N dirs of ExtractJob vs the flat <runId> of compact/
     // streaming) — a child is protected if any referenced path equals it
     // OR lives inside it; exact-match alone would delete a whole run tree
     // whose wave dirs the CURRENT snapshot references
@@ -753,11 +775,8 @@ object LineageTable {
   private[table] def writerLock(root: String): Object =
     writerLocks.computeIfAbsent(root, _ => new Object)
 
-  /** THE lineage-row aggregation over a written data dir — one definition
-    * shared by the batch wave commit (ExtractJob), the streaming sink
-    * (commitStreamBatch), and compaction, so the lineage schema Stats/
-    * readLineage consume cannot drift between the three writers. */
-  def lineageFor(written: DataFrame, runId: String, wave: Long): DataFrame = {
+  /** The lineage-row aggregation over a written data dir, for writeUnit. */
+  private[table] def lineageFor(written: DataFrame, runId: String, wave: Long): DataFrame = {
     import org.apache.spark.sql.functions._
     written.groupBy(col("_bucket"))
       .agg(

@@ -84,4 +84,61 @@ class ChunkerSpec extends AnyFunSuite {
       if (t.trim.nonEmpty) assert(cs.nonEmpty)
     }
   }
+
+  /** The chunker as it was with unbounded `lastIndexOf` searches — the
+    * reference the window-bounded search must match chunk for chunk. */
+  private def unboundedChunks(text: String, chunkSize: Int, chunkOverlap: Int): Vector[Chunker.RawChunk] = {
+    val seps = Array(". ", ".\n", "! ", "!\n", "? ", "?\n", "\n\n")
+    val out = Vector.newBuilder[Chunker.RawChunk]
+    val n = text.length
+    var start = 0
+    while (start < n) {
+      var end = math.min(start + chunkSize, n)
+      if (end < n) {
+        var found = false
+        var si = 0
+        while (!found && si < seps.length) {
+          val sep = seps(si)
+          val abs = text.lastIndexOf(sep, end - sep.length)
+          val lastSep = if (abs >= start) abs - start else -1
+          if (lastSep > chunkSize * 0.5) { end = start + lastSep + sep.length; found = true }
+          si += 1
+        }
+        if (!found) {
+          val abs = text.lastIndexOf(' ', end - 1)
+          val lastSpace = if (abs >= start) abs - start else -1
+          if (lastSpace > chunkSize * 0.7) end = start + lastSpace + 1
+        }
+      }
+      val chunk = graft.core.PyStr.strip(text.substring(start, end))
+      if (chunk.nonEmpty) out += Chunker.RawChunk(chunk, start, end)
+      val next = if (end < n) end - chunkOverlap else n
+      start = if (next <= start) start + math.max(1, end - start) else next
+    }
+    out.result()
+  }
+
+  test("window-bounded separator search gives the unbounded search's chunks (seeded random)") {
+    val rnd = new scala.util.Random(7)
+    // with separators, with spaces only, and with neither (CJK)
+    val alphabets = Seq("abcdefghij      ..!?\n\n", "abc def ghij  ", "\u4e2d\u6587\u5b57\u7b26\u3002\u3001")
+    for (alphabet <- alphabets; _ <- 0 until 200) {
+      val n = rnd.nextInt(4000)
+      val t = Array.fill(n)(alphabet(rnd.nextInt(alphabet.length))).mkString
+      val size = 20 + rnd.nextInt(700)
+      val overlap = rnd.nextInt(100)
+      assert(Chunker.chunkText(t, size, overlap) == unboundedChunks(t, size, overlap),
+        s"size=$size overlap=$overlap text=${t.take(80)}")
+    }
+  }
+
+  test("4 MB of separator-free text chunks in linear time") {
+    val rnd = new scala.util.Random(11)
+    val t = Array.fill(4 << 20)((0x4e00 + rnd.nextInt(0x5000)).toChar).mkString
+    val t0 = System.nanoTime()
+    val cs = Chunker.chunkText(t)
+    val s = (System.nanoTime() - t0) / 1e9
+    assert(cs.last.end == t.length)
+    assert(s < 2.0, f"4 MB separator-free chunking took $s%.2f s")
+  }
 }

@@ -6,12 +6,12 @@ import graft.pipeline.ExtractJob
 import graft.table.LineageTable
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.Files
-import scala.jdk.CollectionConverters._
 
 /** LineageTable + ExtractJob: checkpointed resume (killed job never
   * re-extracts committed buckets), snapshot isolation, lineage stats, GC
   * (SURVEY.md §5.2-5). */
-class ResumeSpec extends AnyFunSuite {
+class ResumeSpec extends AnyFunSuite with TempRoots {
+  import TableFiles.{bucketDirs, children, parquetFiles, urlBuckets}
 
   private lazy val spark = SparkTestBase.spark
   private val N = 120
@@ -21,9 +21,6 @@ class ResumeSpec extends AnyFunSuite {
     import s.implicits._
     spark.createDataset(CorpusGen.pages(N))(implicitly)
   }
-
-  private def freshRoot(): String =
-    Files.createTempDirectory("graft-table-").toString
 
   test("empty crawl delta: multi-wave run completes and commits (no schema-inference crash)") {
     val s = spark
@@ -77,7 +74,7 @@ class ResumeSpec extends AnyFunSuite {
     assert(table.currentSnapshotId.isEmpty, "no snapshot may exist after a kill")
     // the staging survives the kill, one parquet file per bucket
     val staged = bucketDirs(java.nio.file.Paths.get(root, "_stage", "runX"))
-    assert(staged.size == urlBuckets(16), staged.toString)
+    assert(staged.size == urlBuckets(N, 16), staged.toString)
     staged.foreach(d => assert(parquetFiles(d) == 1, s"$d holds ${parquetFiles(d)} parquet files"))
 
     // resume: same table + runId
@@ -358,25 +355,13 @@ class ResumeSpec extends AnyFunSuite {
     assert(df.count() == pagesDs.select("url").distinct().count(), "duplicated rows")
   }
 
-  private def children(dir: java.nio.file.Path): Seq[java.nio.file.Path] =
-    scala.util.Using.resource(Files.list(dir))(_.iterator().asScala.toVector.sortBy(_.toString))
-
-  private def bucketDirs(dir: java.nio.file.Path): Seq[java.nio.file.Path] =
-    children(dir).filter(d => Files.isDirectory(d) && d.getFileName.toString.startsWith("_bucket="))
-
-  private def parquetFiles(dir: java.nio.file.Path): Int =
-    children(dir).map(_.getFileName.toString).count(n => n.endsWith(".parquet") && !n.startsWith("."))
-
-  private def urlBuckets(numBuckets: Int): Int =
-    CorpusGen.pages(N).map(p => LineageTable.bucketFor(p.url, numBuckets)).distinct.size
-
   test("each committed bucket is one parquet file, staged or not, under both dedup strategies") {
     for (dedup <- Seq(ExtractJob.WindowDedup, ExtractJob.PostDedup); (nb, perWave) <- Seq((16, 4), (8, 8))) {
       val root = freshRoot()
       ExtractJob.run(spark, pagesDs, ExtractJob.Config(root, "runL", numBuckets = nb, bucketsPerWave = perWave,
         dedup = dedup))
       val dirs = children(java.nio.file.Paths.get(root, "data", "runL")).flatMap(bucketDirs)
-      assert(dirs.size == urlBuckets(nb), s"$dedup $nb/$perWave: $dirs")
+      assert(dirs.size == urlBuckets(N, nb), s"$dedup $nb/$perWave: $dirs")
       dirs.foreach(d => assert(parquetFiles(d) == 1, s"$dedup $nb/$perWave: $d holds ${parquetFiles(d)} parquet files"))
     }
   }
