@@ -1,5 +1,5 @@
 #!/usr/bin/env python3
-"""Regenerate /tmp/diffcheck/cases.json for graft.DiffCheck.
+"""Regenerate the cases file for graft.DiffCheck.
 
 Differential oracle for the two reference-exact ports:
   - T8 chunker      <- chunk_text, reference app/utils.py:166-208
@@ -11,16 +11,35 @@ read-only reference sources at runtime (ast for chunk_text, line-slice for
 the strip branch) and exec'd to produce expected outputs for ~800
 deterministic generated inputs.
 
-Usage: python3 scripts/diffcheck_gen.py
-Then:  sbt "Test/runMain graft.DiffCheck /tmp/diffcheck/cases.json"
+Usage: python3 scripts/diffcheck_gen.py [REF_DIR] [OUT]
+Then:  sbt "Test/runMain graft.DiffCheck OUT"
+
+REF_DIR is the reference app dir holding utils.py and transcribe.py; OUT
+defaults to /tmp/diffcheck/cases.json. If a reference file is missing or
+does not hold the expected function, the script exits 1 with one line
+saying so and writes nothing: DiffCheck was not run. OUT is replaced
+whole, never left empty or partial.
 """
-import ast, json, os, random, textwrap
+import argparse, ast, json, os, random, sys, tempfile, textwrap
 
 REF = "/root/reference/app"
+OUT = "/tmp/diffcheck/cases.json"
 
 
-def load_chunk_text():
-    src = open(f"{REF}/utils.py").read()
+def not_run(why):
+    sys.exit(f"diffcheck_gen: {why}; DiffCheck was not run")
+
+
+def read_ref(ref, name):
+    path = os.path.join(ref, name)
+    if not os.path.isfile(path):
+        not_run(f"reference file {path} not found")
+    with open(path, encoding="utf-8") as f:
+        return f.read()
+
+
+def load_chunk_text(ref):
+    src = read_ref(ref, "utils.py")
     tree = ast.parse(src)
     for node in tree.body:
         if isinstance(node, ast.FunctionDef) and node.name == "chunk_text":
@@ -28,15 +47,18 @@ def load_chunk_text():
             ns = {}
             exec(compile(code, "utils.py", "exec"), ns)
             return ns["chunk_text"]
-    raise SystemExit("chunk_text not found in reference utils.py")
+    not_run(f"chunk_text not found in {os.path.join(ref, 'utils.py')}")
 
 
-def load_strip_md():
-    lines = open(f"{REF}/transcribe.py").read().split("\n")
+def load_strip_md(ref):
+    lines = read_ref(ref, "transcribe.py").split("\n")
     # slice the TEXT-branch body: from "lines = []" to 'return "\n".join(lines)'
-    start = next(i for i, l in enumerate(lines) if l.strip() == "lines = []")
-    end = next(i for i, l in enumerate(lines[start:], start)
-               if l.strip() == 'return "\\n".join(lines)')
+    start = next((i for i, l in enumerate(lines) if l.strip() == "lines = []"), None)
+    end = None if start is None else next(
+        (i for i, l in enumerate(lines[start:], start)
+         if l.strip() == 'return "\\n".join(lines)'), None)
+    if end is None:
+        not_run(f"markdown-strip branch not found in {os.path.join(ref, 'transcribe.py')}")
     body = textwrap.dedent("\n".join(lines[start:end + 1]))
     code = "def strip_md(md):\n" + textwrap.indent(body, "    ")
     ns = {}
@@ -77,8 +99,13 @@ def gen_md(rng):
 
 
 def main():
-    chunk_text = load_chunk_text()
-    strip_md = load_strip_md()
+    ap = argparse.ArgumentParser(description="Write the graft.DiffCheck cases file.")
+    ap.add_argument("ref", nargs="?", default=REF,
+                    help="reference app dir holding utils.py and transcribe.py")
+    ap.add_argument("out", nargs="?", default=OUT, help="cases file to write")
+    args = ap.parse_args()
+    chunk_text = load_chunk_text(args.ref)
+    strip_md = load_strip_md(args.ref)
     rng = random.Random(42)
     cases = []
     for t in gen_texts(rng):
@@ -92,10 +119,20 @@ def main():
                       "expected": chunk_text(t, size, ov)})
     for m in gen_md(rng):
         cases.append({"kind": "strip", "text": m, "expected": strip_md(m)})
-    os.makedirs("/tmp/diffcheck", exist_ok=True)
-    with open("/tmp/diffcheck/cases.json", "w") as f:
-        json.dump(cases, f, ensure_ascii=False)
-    print(f"wrote {len(cases)} cases to /tmp/diffcheck/cases.json")
+    out_dir = os.path.dirname(os.path.abspath(args.out))
+    os.makedirs(out_dir, exist_ok=True)
+    # all cases are built before the file is touched; the temp file is
+    # renamed over OUT only once it is complete
+    fd, tmp = tempfile.mkstemp(dir=out_dir, suffix=".tmp")
+    try:
+        with os.fdopen(fd, "w", encoding="utf-8") as f:
+            json.dump(cases, f, ensure_ascii=False)
+        os.chmod(tmp, 0o644)
+        os.replace(tmp, args.out)
+    except BaseException:
+        os.unlink(tmp)
+        raise
+    print(f"wrote {len(cases)} cases to {args.out}")
 
 
 if __name__ == "__main__":

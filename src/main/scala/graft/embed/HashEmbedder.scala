@@ -35,7 +35,7 @@ object HashEmbedder {
     require(dim > 0, s"embedding dimension must be positive, got $dim")
     val v = new Array[Float](dim)
     if (isBlank(text)) return v // zero vector for blank (reference semantics)
-    val lower = text.toLowerCase
+    val lower = text.toLowerCase(java.util.Locale.ROOT)
     // word unigrams
     var start = -1
     var i = 0

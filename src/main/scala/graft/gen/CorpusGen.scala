@@ -211,7 +211,7 @@ object HtmlGen {
     sb.append("<nav class=\"top-nav\"><ul>")
     val navN = 4 + rnd.nextInt(5)
     for (k <- 0 until navN)
-      sb.append("<li><a href=\"/").append(NavWords(k % NavWords.size).toLowerCase).append("\">")
+      sb.append("<li><a href=\"/").append(NavWords(k % NavWords.size).toLowerCase(java.util.Locale.ROOT)).append("\">")
         .append(NavWords((k + rnd.nextInt(3)) % NavWords.size)).append("</a></li>")
     sb.append("</ul></nav>\n")
     sb.append("<header id=\"masthead\"><h1>SITE ").append(rnd.nextInt(1000)).append("</h1>")

@@ -77,7 +77,7 @@ object BlockExtractor {
   private def isBoilerplateContainer(e: Element): Boolean = {
     if (BoilerplateTags.contains(e.name)) return true
     val role = e.attrOrNull("role")
-    if (role != null && BoilerplateRoles.contains(role.toLowerCase)) return true
+    if (role != null && BoilerplateRoles.contains(role.toLowerCase(java.util.Locale.ROOT))) return true
     val cls = e.attrOrNull("class")
     val id = e.attrOrNull("id")
     if (cls == null && id == null) return false

@@ -34,7 +34,7 @@ object LinkExtractor {
     val at = hostPort.lastIndexOf('@')
     if (at >= 0) hostPort = hostPort.substring(at + 1)
     val colon = hostPort.indexOf(':')
-    val h = (if (colon >= 0) hostPort.substring(0, colon) else hostPort).toLowerCase
+    val h = (if (colon >= 0) hostPort.substring(0, colon) else hostPort).toLowerCase(java.util.Locale.ROOT)
     if (h.isEmpty) None else Some(h)
   }
 

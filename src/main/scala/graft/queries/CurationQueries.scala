@@ -1,7 +1,8 @@
 package graft.queries
 
 import graft.core.DuckHash
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.queries.QueryShapes._
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -39,13 +40,6 @@ import org.apache.spark.sql.functions._
   * tiers, 4/4 hash-exact).
   */
 object CurationQueries {
-
-  private def docs(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(s"$dir/documents.parquet")
-
-  // compiled once: NbModel.predict runs per document in the streaming hot
-  // path, and String.split("\\s+") would recompile the pattern per call
-  private val WsPattern = java.util.regex.Pattern.compile("\\s+")
 
   // ------------------------------------------------------------ PII redact
 
@@ -87,7 +81,7 @@ object CurationQueries {
     * appendix C). DuckDB-reproducible via md5_number_lower on the
     * space-joined gram. */
   def gramHashes(text: String, n: Int = 13): Array[Long] = {
-    val words = text.toLowerCase.split("\\s+").filter(_.nonEmpty)
+    val words = wordArray(text)
     if (words.length < n) Array.empty
     else {
       val out = new Array[Long](words.length - n + 1)
@@ -132,14 +126,8 @@ object CurationQueries {
       .join(broadcast(evalGrams), "h")
       .groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_dirty")) // gram hashes are pre-distinct per doc
-    d.where(!isEval)
-      .select(col("doc_id"))
-      .join(hits, Seq("doc_id"), "left")
-      .select(
-        col("doc_id"),
-        coalesce(col("n_dirty"), lit(0L)).as("n_dirty"),
-        (coalesce(col("n_dirty"), lit(0L)) > 0).as("contaminated"),
-      )
+    everyDoc(d.where(!isEval), hits)(
+        orZero("n_dirty"), (coalesce(col("n_dirty"), lit(0L)) > 0).as("contaminated"))
       .orderBy(col("doc_id"))
   }
 
@@ -188,19 +176,11 @@ object CurationQueries {
     * decision is per-row. */
   def qTemperatureSample(spark: SparkSession, dir: String): DataFrame = {
     val d = docs(spark, dir)
-    val toks = d.select(col("source"),
-      size(filter(split(lower(col("text")), "\\s+"), x => x =!= lit(""))).cast("long").as("n_tok"))
+    val toks = d.select(col("source"), size(words(col("text"))).cast("long").as("n_tok"))
       .groupBy(col("source")).agg(sum(col("n_tok")).as("tok_s"))
-    // sources are ~20 rows: the min is a 1-row agg, the rate table
-    // broadcasts. r6 second pass: tok_min folded in as a 1-row broadcast
-    // instead of a driver collect — the old collect's job ran the full
-    // corpus tokenize, and the main job then re-tokenized for the rate
-    // table; as sibling subtrees of ONE job they share toks' identical
-    // groupBy(source) exchange (ReuseExchange), so the corpus is tokenized
-    // once and the extra action disappears. Same value, same IEEE division
-    // (long→double cast both sides), so rate_q is bit-identical.
-    val tokMinRow = toks.agg(min(col("tok_s")).as("tok_min"))
-    val rates = toks.crossJoin(broadcast(tokMinRow))
+    // sources are ~20 rows: tok_min is a whole-frame total of toks, and
+    // the rate table broadcasts
+    val rates = withTotals(toks)(min(col("tok_s")).as("tok_min"))
       .withColumn("rate_q",
         floor(sqrt(col("tok_min").cast("double") / col("tok_s").cast("double")) * 1000000d + 0.5d)
           .cast("long"))
@@ -252,11 +232,8 @@ object CurationQueries {
       .join(seen, Seq("h"))
       .groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_shared"), min(col("keeper")).as("seen_keeper"))
-    d.where(col("doc_id") >= 250)
-      .select(col("doc_id"))
-      .join(hits, Seq("doc_id"), "left")
-      .select(col("doc_id"),
-        coalesce(col("n_shared"), lit(0L)).as("n_shared"),
+    everyDoc(d.where(col("doc_id") >= 250), hits)(
+        orZero("n_shared"),
         coalesce(col("seen_keeper"), lit(-1L)).as("seen_keeper"),
         col("seen_keeper").isNotNull.as("dup_of_seen"))
       .orderBy(col("doc_id"))
@@ -278,11 +255,7 @@ object CurationQueries {
       .groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_windows"),
         sum(when(col("n") >= 2, 1L).otherwise(0L)).as("n_dup_windows"))
-    d.select(col("doc_id"))
-      .join(per, Seq("doc_id"), "left")
-      .select(col("doc_id"),
-        coalesce(col("n_windows"), lit(0L)).as("n_windows"),
-        coalesce(col("n_dup_windows"), lit(0L)).as("n_dup_windows"))
+    everyDoc(d, per)(orZero("n_windows"), orZero("n_dup_windows"))
       .orderBy(col("doc_id"))
   }
 
@@ -426,11 +399,7 @@ object CurationQueries {
             x => x.getField("s")),
           "").cast("binary")).as("cleaned_md5"),
       )
-    d.select(col("doc_id"))
-      .join(per, Seq("doc_id"), "left")
-      .select(col("doc_id"),
-        coalesce(col("n_segments"), lit(0L)).as("n_segments"),
-        coalesce(col("n_removed"), lit(0L)).as("n_removed"),
+    everyDoc(d, per)(orZero("n_segments"), orZero("n_removed"),
         coalesce(col("cleaned_md5"), lit("d41d8cd98f00b204e9800998ecf8427e")).as("cleaned_md5"))
       .orderBy(col("doc_id"))
   }
@@ -463,7 +432,7 @@ object CurationQueries {
                      grouped: Boolean = true, groupSize: Long = 4096L): DataFrame = {
     val toks = docs(spark, dir)
       .select(col("doc_id"), col("source"),
-        size(split(trim(col("text")), "\\s+")).cast("long").as("n_tok"))
+        size(wsTokens(col("text"))).cast("long").as("n_tok"))
     val withCum =
       if (!grouped) {
         val w = Window.partitionBy(col("source")).orderBy(col("doc_id"))
@@ -513,11 +482,10 @@ object CurationQueries {
     * order, so the hashes compare exactly. */
   def qMixWeights(spark: SparkSession, dir: String, maxEpochs: Double = 4.0): DataFrame = {
     val agg = docs(spark, dir)
-      .select(col("source"), size(split(trim(col("text")), "\\s+")).cast("long").as("n_tok"))
+      .select(col("source"), size(wsTokens(col("text"))).cast("long").as("n_tok"))
       .groupBy(col("source"))
       .agg(count(lit(1)).as("n_docs"), sum(col("n_tok")).as("tok_sum"))
-    val totals = agg.agg(sum(col("tok_sum")).as("tot_tok"), count(lit(1)).as("n_sources"))
-    agg.crossJoin(broadcast(totals))
+    withTotals(agg)(sum(col("tok_sum")).as("tot_tok"), count(lit(1)).as("n_sources"))
       .select(
         col("source"), col("n_docs"), col("tok_sum"),
         round(col("tok_sum") / col("tot_tok"), 6).as("share_r"),
@@ -603,11 +571,10 @@ object CurationQueries {
     // (0.14 s → 0.73 s at sf0.1: two materialization jobs cost more than
     // the one redundant unigram-branch tokenize it saved) and was
     // reverted.
-    val words = d.select(col("doc_id"),
-      filter(split(lower(col("text")), "\\s+"), x => x =!= lit("")).as("w"))
-    val uni = words.select(explode(col("w")).as("w1"))
+    val ws = d.select(col("doc_id"), words(col("text")).as("w"))
+    val uni = ws.select(explode(col("w")).as("w1"))
       .groupBy(col("w1")).agg(count(lit(1)).as("cu"))
-    val bg = words.where(size(col("w")) >= 2)
+    val bg = ws.where(size(col("w")) >= 2)
       .select(col("doc_id"), explode(expr(
         "transform(sequence(1, size(w) - 1), i -> struct(element_at(w, i) AS w1, element_at(w, i + 1) AS w2))")).as("e"))
       .select(col("doc_id"), col("e.w1").as("w1"), col("e.w2").as("w2"))
@@ -616,11 +583,9 @@ object CurationQueries {
       .groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_bigrams"),
         sum((length(bin(col("cu"))) - length(bin(col("cb")))).cast("long")).as("bits"))
-    d.select(col("doc_id"))
-      .join(scored, Seq("doc_id"), "left")
-      .select(col("doc_id"),
-        coalesce(col("n_bigrams"), lit(0L)).as("n_bigrams"),
-        coalesce(col("bits"), lit(0L)).as("bits"),
+    // the guard tests the defaulted count but divides by the joined one,
+    // so this ratio keeps its own form (same values as `ratio`)
+    everyDoc(d, scored)(orZero("n_bigrams"), orZero("bits"),
         round(when(coalesce(col("n_bigrams"), lit(0L)) === 0, lit(0.0))
           .otherwise(col("bits").cast("double") / col("n_bigrams")), 4).as("avg_bits_r"))
       .orderBy(col("doc_id"))
@@ -708,8 +673,7 @@ object CurationQueries {
       .withColumn("recall_r",
         round(col("n_correct").cast("double") / col("n_true"), 6))
       .withColumn("precision_r",
-        round(when(col("n_pred") === 0L, lit(0.0))
-          .otherwise(col("n_correct").cast("double") / col("n_pred")), 6))
+        ratio(col("n_correct"), col("n_pred"), 6))
       .withColumn("f1_r",
         round(when(col("precision_r") + col("recall_r") === 0.0, lit(0.0))
           .otherwise(lit(2.0) * col("precision_r") * col("recall_r")
@@ -761,13 +725,9 @@ object CurationQueries {
       .withColumn("weight",
         expr(s"length(bin(((c + 1) * 1073741824) div (total_l + $vocabSize))) - 1"))
       .select(col("label"), col("word"), col("weight"))
-    // N = Σ_label n_docs_l derived from the L-row labels aggregate as a
-    // 1-row broadcast (r6, second pass): the old `d.count()` was a separate
-    // driver action — its own job — billed to every NB-family construction.
-    // Same value (every doc has exactly one label row), same integer
-    // arithmetic, so priors are bit-identical.
-    val nTotal = labels.agg(sum(col("n_docs_l")).as("n_total"))
-    val prior = labels.crossJoin(broadcast(nTotal))
+    // N = Σ_label n_docs_l, a whole-frame total of the L-row labels
+    // aggregate (every doc has exactly one label row)
+    val prior = withTotals(labels)(sum(col("n_docs_l")).as("n_total"))
       .withColumn("prior", expr("length(bin((n_docs_l * 1073741824) div n_total)) - 1"))
       .select(col("label"), col("prior"))
     val tf = toks.join(broadcast(vocab), "word")
@@ -796,7 +756,7 @@ object CurationQueries {
 
   private def nbTokens(d: DataFrame): DataFrame =
     d.select(col("doc_id"), col("source"),
-      explode(filter(split(lower(col("text")), "\\s+"), w => w.rlike("^[a-z0-9]+$"))).as("word"))
+      explode(vocabWords(col("text"))).as("word"))
 
   /** The trained model COLLECTED for serving: (sorted labels, per-label
     * integer priors, vocab word → per-label weights, fallback label).
@@ -845,11 +805,13 @@ object CurationQueries {
     def predict(text: String): String = {
       val scores = priors.clone()
       var any = false
-      // vocab words are [a-z0-9]+ by construction, so a raw-token lookup
-      // drops non-eligible tokens exactly like the batch tokenizer filter;
-      // Locale.ROOT mirrors Spark's locale-independent lower() (a tr/az
-      // default locale would dot-swap 'i' and miss vocab words)
-      WsPattern.split(text.toLowerCase(java.util.Locale.ROOT)).foreach { w =>
+      // vocab words are [a-z0-9]+ by construction, so a word lookup drops
+      // non-eligible words exactly like the batch tokenizer filter. Spark's
+      // lower() agrees with the ROOT-locale lowercase of wordArray only on
+      // all-ASCII text: other text it lowercases in the JVM default locale
+      // (ICU's UCharacter.toLowerCase, or String.toLowerCase() when
+      // spark.sql.icu.caseMappings.enabled is false).
+      wordArray(text).foreach { w =>
         weights.get(w) match {
           case Some(ws) =>
             any = true
@@ -919,12 +881,12 @@ object CurationQueries {
     * shared by [[bpeMerges]] (ships the table) and [[bpeEncode]] (applies
     * it to the corpus). */
   def bpeMergeList(d: DataFrame, merges: Int): Seq[(Int, String, String, Long)] = {
-    val words = d
-      .select(explode(filter(split(lower(col("text")), "\\s+"), x => x =!= lit(""))).as("word"))
-      .where(col("word").rlike("^[a-z0-9]+$"))
+    val freqs = d
+      .select(explode(words(col("text"))).as("word"))
+      .where(col("word").rlike(VocabWord))
       .groupBy(col("word")).agg(count(lit(1)).as("freq"))
-    var vocab = TrainingDataQueries.eagerCheckpoint(
-      words.select(regexp_replace(col("word"), "(.)", "($1)").as("seq"), col("freq")))
+    var vocab = eagerCheckpoint(
+      freqs.select(regexp_replace(col("word"), "(.)", "($1)").as("seq"), col("freq")))
     val out = collection.mutable.ArrayBuffer.empty[(Int, String, String, Long)]
     var step = 1
     var exhausted = false
@@ -944,7 +906,7 @@ object CurationQueries {
         // injection-safe by construction; assert the invariant anyway
         require(l.matches("[a-z0-9]+") && r.matches("[a-z0-9]+"), s"unexpected symbol: '$l' '$r'")
         out += ((step, l, r, c))
-        vocab = TrainingDataQueries.eagerCheckpoint(
+        vocab = eagerCheckpoint(
           vocab.select(expr(s"replace(seq, '($l)($r)', '($l$r)')").as("seq"), col("freq")))
         step += 1
       }
@@ -974,33 +936,27 @@ object CurationQueries {
   def bpeEncode(d: DataFrame, merges: Int): DataFrame =
     bpeEncodeWith(d, bpeMergeList(d, merges), merges)
 
-  /** The per-doc BPE encode as ONE nested SQL expression: symbol-split
-    * eligible words, then the learned merges replayed as literal
-    * `replace` chains (symbols proven [a-z0-9]+ by bpeMergeList's
-    * require — literal-safe). Shared by [[bpeEncodeWith]] and
-    * [[qTokenFertility]] so the encode semantics cannot fork. */
-  private def bpeEncExpr(table: Seq[(Int, String, String, Long)],
-      merges: Int): String = {
+  /** The per-doc BPE encode of the `text` column as ONE nested
+    * expression: symbol-split vocabulary words, then the learned merges
+    * replayed as literal `replace` chains. Shared by [[bpeEncodeWith]]
+    * and [[qTokenFertility]] so the encode semantics cannot fork. */
+  private def bpeEnc(table: Seq[(Int, String, String, Long)], merges: Int): Column = {
     // the unrolled oracle replays exactly `merges` rounds — an exhausted
     // corpus (fewer learnable merges) must fail loud, not silently diverge
     require(table.size == merges, s"corpus exhausted after ${table.size}/$merges merges")
-    var enc = "array_join(transform(filter(split(lower(text), '\\\\s+')," +
-      " w -> w rlike '^[a-z0-9]+$'), w -> regexp_replace(w, '(.)', '($1)')), ' ')"
-    table.foreach { case (_, l, r, _) =>
-      enc = s"replace($enc, '($l)($r)', '($l$r)')"
+    val syms = array_join(transform(vocabWords(col("text")), w => regexp_replace(w, "(.)", "($1)")), " ")
+    table.foldLeft(syms) { case (enc, (_, l, r, _)) =>
+      replace(enc, lit(s"($l)($r)"), lit(s"($l$r)"))
     }
-    enc
   }
 
   /** Apply a precomputed merge table (see [[bpeMergeTable]] — encode must
     * not re-run the training loop when the table is already learned). */
   def bpeEncodeWith(d: DataFrame, table: Seq[(Int, String, String, Long)],
       merges: Int): DataFrame = {
-    val enc = bpeEncExpr(table, merges)
     d.select(col("doc_id"),
-        size(filter(split(lower(col("text")), "\\s+"), w => w.rlike("^[a-z0-9]+$")))
-          .cast("long").as("n_words"),
-        expr(enc).as("enc"))
+        size(vocabWords(col("text"))).cast("long").as("n_words"),
+        bpeEnc(table, merges).as("enc"))
       .select(col("doc_id"), col("n_words"),
         (length(col("enc")) - length(regexp_replace(col("enc"), "\\(", ""))).cast("long").as("n_tokens"),
         md5(col("enc").cast("binary")).as("enc_md5"))
@@ -1022,18 +978,15 @@ object CurationQueries {
     * 100 TB shape: the merge table is learned once and cached per
     * (applicationId, dir, merges) — the q_bpe_encode discipline; the
     * encode replay is ONE map-only nested-replace expression
-    * ([[bpeEncExpr]], shared with q_bpe_encode so the semantics cannot
+    * ([[bpeEnc]], shared with q_bpe_encode so the semantics cannot
     * fork); the aggregation is a ≤#langs-key groupBy with map-side
     * combine. Nothing shuffles but (lang, 3 longs) partials. */
   def qTokenFertility(spark: SparkSession, dir: String, merges: Int = 10): DataFrame = {
-    val enc = bpeEncExpr(bpeMergeTable(spark, dir, merges), merges)
     docs(spark, dir)
       .select(col("lang"),
-        size(filter(split(lower(col("text")), "\\s+"), w => w.rlike("^[a-z0-9]+$")))
-          .cast("long").as("w"),
-        expr("aggregate(filter(split(lower(text), '\\\\s+'), " +
-          "w -> w rlike '^[a-z0-9]+$'), 0L, (a, w) -> a + length(w))").as("c"),
-        expr(enc).as("enc"))
+        size(vocabWords(col("text"))).cast("long").as("w"),
+        aggregate(vocabWords(col("text")), lit(0L), (a, w) => a + length(w)).as("c"),
+        bpeEnc(bpeMergeTable(spark, dir, merges), merges).as("enc"))
       .select(col("lang"), col("w"), col("c"),
         (length(col("enc")) - length(regexp_replace(col("enc"), "\\(", "")))
           .cast("long").as("t"))
@@ -1043,12 +996,8 @@ object CurationQueries {
         sum(col("w")).as("n_words"),
         sum(col("t")).as("n_tokens"),
         sum(col("c")).as("n_chars"))
-      .withColumn("fertility_r",
-        when(col("n_words") === 0, lit(0.0))
-          .otherwise(round(col("n_tokens").cast("double") / col("n_words"), 4)))
-      .withColumn("chars_per_token_r",
-        when(col("n_tokens") === 0, lit(0.0))
-          .otherwise(round(col("n_chars").cast("double") / col("n_tokens"), 4)))
+      .withColumn("fertility_r", ratio(col("n_tokens"), col("n_words"), 4))
+      .withColumn("chars_per_token_r", ratio(col("n_chars"), col("n_tokens"), 4))
       .orderBy(col("lang"))
   }
 
@@ -1482,8 +1431,7 @@ object CurationQueries {
         d.select(col("doc_id"), lower(col("text")).as("gtext")))
       .select(col("doc_id"), col("pass").as("k_gopher"))
     // stage 3: repetition gates (keyed token agg, integer-exact)
-    val tok = d.select(col("doc_id"),
-      explode(filter(split(lower(col("text")), "\\s+"), x => x =!= lit(""))).as("word"))
+    val tok = d.select(col("doc_id"), explode(words(col("text"))).as("word"))
     val f3 = tok.groupBy(col("doc_id"), col("word")).agg(count(lit(1)).as("c"))
       .groupBy(col("doc_id"))
       .agg(sum(col("c")).as("n_tokens"), count(lit(1)).as("n_distinct"), max(col("c")).as("topc"))
@@ -1499,10 +1447,8 @@ object CurationQueries {
       .join(broadcast(evalGrams), "h")
       .select(col("doc_id")).distinct()
       .withColumn("contaminated", lit(true))
-    val f4 = d.select(col("doc_id"))
-      .join(dirty, Seq("doc_id"), "left")
-      .select(col("doc_id"),
-        (!isEval && !coalesce(col("contaminated"), lit(false))).as("k_decont"))
+    val f4 = everyDoc(d, dirty)(
+      (!isEval && !coalesce(col("contaminated"), lit(false))).as("k_decont"))
     // cumulative conjunction -> one aggregate row -> stacked funnel
     val flags = d.select(col("doc_id"))
       .join(f1, "doc_id").join(f2, "doc_id")
@@ -1563,7 +1509,7 @@ object CurationQueries {
     val bucketUdf = udf((w: String) =>
       java.lang.Long.remainderUnsigned(DuckHash.md5NumberLower(w), B.toLong))
     val tf = d.select(col("doc_id"), col("source"),
-        explode(filter(split(lower(col("text")), "\\s+"), x => x =!= lit(""))).as("w"))
+        explode(words(col("text"))).as("w"))
       .withColumn("b", bucketUdf(col("w")))
       .groupBy(col("doc_id"), col("source"), col("b"))
       .agg(count(lit(1)).as("tf"))
@@ -1573,8 +1519,7 @@ object CurationQueries {
     val counts = d.sparkSession.range(B).select(col("id").as("b"))
       .join(ct, Seq("b"), "left").join(cr, Seq("b"), "left")
       .na.fill(0L, Seq("ct", "cr"))
-    val tot = counts.agg(sum(col("ct")).as("tt"), sum(col("cr")).as("tr"))
-    val weights = counts.crossJoin(broadcast(tot))
+    val weights = withTotals(counts)(sum(col("ct")).as("tt"), sum(col("cr")).as("tr"))
       .withColumn("lw", expr(
         s"(length(bin(((ct + 1) * 1073741824) div (tt + $B))) - 1)" +
         s" - (length(bin(((cr + 1) * 1073741824) div (tr + $B))) - 1)"))

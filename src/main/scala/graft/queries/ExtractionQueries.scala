@@ -3,6 +3,7 @@ package graft.queries
 import graft.gen.CorpusGen
 import graft.model.{ConversionOptions, OutputFormat}
 import graft.pipeline.ExtractKernel
+import graft.queries.QueryShapes.{eagerCheckpoint, words}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -249,7 +250,7 @@ object ExtractionQueries {
     // round reference it, and without the cut each reference re-filters
     // and re-parses from the pages scan (measured 6.8 s -> the corpus is
     // touched once and the rest is 66-row arithmetic)
-    val links = graft.queries.TrainingDataQueries.eagerCheckpoint(pinnedLinks(spark, dir))
+    val links = eagerCheckpoint(pinnedLinks(spark, dir))
     val edges = links
       .select(pageHostUdf(col("url")).as("src"), explode(col("r._3")).as("dst"))
       .where(col("src") =!= col("dst"))
@@ -278,7 +279,7 @@ object ExtractionQueries {
         .getOrElse(Vector.empty[(String, String)]))
     pinnedPages(spark, dir)
       .select(explode(anchorUdf(col("url"), col("html"))).as("a"))
-      .select(col("a._1").as("host"), explode(filter(split(lower(col("a._2")), "\\s+"), x => x =!= lit(""))).as("term"))
+      .select(col("a._1").as("host"), explode(words(col("a._2"))).as("term"))
       .groupBy(col("host"), col("term")).agg(count(lit(1)).as("cnt"))
       .groupBy(col("host"))
       .agg(

@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.core.DuckHash
+import graft.queries.QueryShapes.{docs, eagerCheckpoint, withTotals}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -41,9 +42,6 @@ import org.apache.spark.sql.functions._
   * driver-scalar broadcast per round for no test value.
   */
 object GraphQueries {
-
-  private def docs(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(s"$dir/documents.parquet")
 
   /** Rank scale: 1.0 of PageRank mass = 10^12 integer units. */
   val Scale = 1000000000000L
@@ -86,7 +84,7 @@ object GraphQueries {
     val n = nodes.count()
     // edges + outdeg are reused every round: checkpoint once (reliable on a
     // cluster, local in tests) so no round re-derives them.
-    val e = TrainingDataQueries.eagerCheckpoint(
+    val e = eagerCheckpoint(
       edgesIn.join(edgesIn.groupBy(col("src")).agg(count(lit(1)).as("outdeg")), "src"))
     val tele = Scale * 15L / 100L / n
     // one synchronous iteration as a plan fragment
@@ -108,14 +106,14 @@ object GraphQueries {
     // at real scale where stages are data-bound; plan depth stays bounded
     // (4 step fragments per lineage cut).
     while (k + 4 <= iters) {
-      r = TrainingDataQueries.eagerCheckpoint(step(step(step(step(r)))))
+      r = eagerCheckpoint(step(step(step(step(r)))))
       k += 4
     }
     while (k + 2 <= iters) {
-      r = TrainingDataQueries.eagerCheckpoint(step(step(r)))
+      r = eagerCheckpoint(step(step(r)))
       k += 2
     }
-    if (k < iters) r = TrainingDataQueries.eagerCheckpoint(step(r))
+    if (k < iters) r = eagerCheckpoint(step(r))
     r.join(e.select(col("src").as("node"), col("outdeg")).distinct(), Seq("node"), "left")
       .select(col("node"), coalesce(col("outdeg"), lit(0L)).as("outdeg"), col("pr"))
   }
@@ -152,20 +150,19 @@ object GraphQueries {
   private val HScale = 1000000L
 
   def hits(nodes: DataFrame, edgesIn: DataFrame, iters: Int): DataFrame = {
-    val e = TrainingDataQueries.eagerCheckpoint(edgesIn.toDF("src", "dst"))
+    val e = eagerCheckpoint(edgesIn.toDF("src", "dst"))
     // one half-step: pull neighbor scores across the edges onto `to`,
     // keep every node (0 when no edge), L1-renormalize to HScale total
     def half(scores: DataFrame, from: String, to: String): DataFrame = {
       val pulled = e
         .join(scores.withColumnRenamed("node", from), from)
         .groupBy(col(to).as("node")).agg(sum(col("sc")).as("v"))
-      val raw = TrainingDataQueries.eagerCheckpoint(
+      val raw = eagerCheckpoint(
         nodes.join(pulled, Seq("node"), "left")
           .select(col("node"), coalesce(col("v"), lit(0L)).as("v")))
-      val tot = raw.agg(greatest(sum(col("v")), lit(1L)).as("tot"))
       // projection over the checkpointed raw — cheap to re-evaluate for
       // both its consumers (next half + final join), so not checkpointed
-      raw.crossJoin(broadcast(tot))
+      withTotals(raw)(greatest(sum(col("v")), lit(1L)).as("tot"))
         .select(col("node"), expr(s"(v * $HScale) div tot").as("sc"))
     }
     var h = nodes.withColumn("sc", lit(HScale))

@@ -1,6 +1,7 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import graft.queries.QueryShapes._
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -40,9 +41,6 @@ import org.apache.spark.sql.functions._
   */
 object QualityQueries {
 
-  private def docs(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(s"$dir/documents.parquet")
-
   // ------------------------------------------------------- gopher rules
 
   /** Symbol augmentation (the [[CurationQueries.qPiiRedact]] discipline:
@@ -79,12 +77,9 @@ object QualityQueries {
       .withColumn("n_sym",
         (length(col("gtext")) - length(expr("replace(gtext, '#', '')"))).cast("long")
           + ((length(col("gtext")) - length(expr("replace(gtext, '...', '')"))) / 3).cast("long"))
-      .withColumn("mean_wl_r", round(when(col("n_words") === 0, lit(0.0))
-        .otherwise(col("sum_len").cast("double") / col("n_words")), 4))
-      .withColumn("frac_alpha_r", round(when(col("n_words") === 0, lit(0.0))
-        .otherwise(col("n_alpha").cast("double") / col("n_words")), 4))
-      .withColumn("sym_r", round(when(col("n_words") === 0, lit(0.0))
-        .otherwise(col("n_sym").cast("double") / col("n_words")), 4))
+      .withColumn("mean_wl_r", ratio(col("sum_len"), col("n_words"), 4))
+      .withColumn("frac_alpha_r", ratio(col("n_alpha"), col("n_words"), 4))
+      .withColumn("sym_r", ratio(col("n_sym"), col("n_words"), 4))
       .withColumn("pass",
         col("n_words") >= 50 && col("n_words") <= 100000 &&
           col("sum_len") >= col("n_words") * 3 && col("sum_len") <= col("n_words") * 10 &&
@@ -119,8 +114,7 @@ object QualityQueries {
 
   /** Core over any `(doc_id, text)` frame (QualitySpec). */
   def repetitionStats(d: DataFrame): DataFrame = {
-    val w = d.select(col("doc_id"),
-      filter(split(lower(col("text")), "\\s+"), x => x =!= lit("")).as("wl"))
+    val w = d.select(col("doc_id"), words(col("text")).as("wl"))
     val wc = w.select(col("doc_id"), explode(col("wl")).as("word"))
       .groupBy(col("doc_id"), col("word")).agg(count(lit(1)).as("c"))
     val p1 = wc.groupBy(col("doc_id")).agg(
@@ -134,25 +128,14 @@ object QualityQueries {
     val p2 = bc.groupBy(col("doc_id")).agg(
       sum(col("c")).as("n_bigrams"),
       max(col("c")).as("top_bigram_cnt"))
-    def frac(num: Column, den: Column): Column =
-      round(when(den === 0, lit(0.0)).otherwise(num.cast("double") / den), 4)
-    d.select(col("doc_id"))
-      .join(p1, Seq("doc_id"), "left")
-      .join(p2, Seq("doc_id"), "left")
-      .select(
-        col("doc_id"),
-        coalesce(col("n_tokens"), lit(0L)).as("n_tokens"),
-        coalesce(col("n_distinct"), lit(0L)).as("n_distinct"),
-        coalesce(col("top_word_cnt"), lit(0L)).as("top_word_cnt"),
-        coalesce(col("n_bigrams"), lit(0L)).as("n_bigrams"),
-        coalesce(col("top_bigram_cnt"), lit(0L)).as("top_bigram_cnt"),
-      )
+    everyDoc(d, p1, p2)(orZero("n_tokens"), orZero("n_distinct"), orZero("top_word_cnt"),
+        orZero("n_bigrams"), orZero("top_bigram_cnt"))
       .select(
         col("doc_id"), col("n_tokens"), col("n_distinct"), col("top_word_cnt"),
         col("n_bigrams"), col("top_bigram_cnt"),
-        frac(col("n_tokens") - col("n_distinct"), col("n_tokens")).as("dup_frac_r"),
-        frac(col("top_word_cnt"), col("n_tokens")).as("top_word_frac_r"),
-        frac(col("top_bigram_cnt"), col("n_bigrams")).as("top_bigram_frac_r"),
+        ratio(col("n_tokens") - col("n_distinct"), col("n_tokens"), 4).as("dup_frac_r"),
+        ratio(col("top_word_cnt"), col("n_tokens"), 4).as("top_word_frac_r"),
+        ratio(col("top_bigram_cnt"), col("n_bigrams"), 4).as("top_bigram_frac_r"),
       )
       .orderBy(col("doc_id"))
   }
@@ -215,25 +198,21 @@ object QualityQueries {
 
   /** Core over any `(doc_id, text)` frame (QualitySpec). */
   def oovRate(d: DataFrame, vocabSize: Int): DataFrame = {
-    val tok = d.select(col("doc_id"),
-      explode(filter(split(lower(col("text")), "\\s+"), x => x =!= lit(""))).as("word"))
+    val tok = d.select(col("doc_id"), explode(words(col("text"))).as("word"))
     val vocab = tok.groupBy(col("word")).agg(count(lit(1)).as("cnt"))
       .orderBy(col("cnt").desc, col("word")).limit(vocabSize)
       .select(col("word"))
     val hits = tok.join(broadcast(vocab), Seq("word"), "left_semi")
       .groupBy(col("doc_id")).agg(count(lit(1)).as("n_in_vocab"))
     val totals = tok.groupBy(col("doc_id")).agg(count(lit(1)).as("n_tokens"))
-    d.select(col("doc_id"))
-      .join(totals, Seq("doc_id"), "left")
-      .join(hits, Seq("doc_id"), "left")
-      .select(
-        col("doc_id"),
-        coalesce(col("n_tokens"), lit(0L)).as("n_tokens"),
+    // the guard tests the defaulted count but divides by the joined one,
+    // so oov_r keeps its own form (same values as `ratio`)
+    everyDoc(d, totals, hits)(
+        orZero("n_tokens"),
         (coalesce(col("n_tokens"), lit(0L)) - coalesce(col("n_in_vocab"), lit(0L))).as("n_oov"),
         round(when(coalesce(col("n_tokens"), lit(0L)) === 0, lit(0.0))
           .otherwise((coalesce(col("n_tokens"), lit(0L)) - coalesce(col("n_in_vocab"), lit(0L)))
-            .cast("double") / col("n_tokens")), 4).as("oov_r"),
-      )
+            .cast("double") / col("n_tokens")), 4).as("oov_r"))
       .orderBy(col("doc_id"))
   }
 
@@ -244,8 +223,7 @@ object QualityQueries {
     * map-only per-row count, one ≤64-key aggregation. */
   def qLengthHist(spark: SparkSession, dir: String): DataFrame =
     docs(spark, dir)
-      .select(size(filter(split(lower(col("text")), "\\s+"), x => x =!= lit("")))
-        .cast("long").as("n_tokens"))
+      .select(size(words(col("text"))).cast("long").as("n_tokens"))
       .where(col("n_tokens") > 0)
       .select((length(bin(col("n_tokens"))) - 1).cast("int").as("bucket"), col("n_tokens"))
       .groupBy(col("bucket"))
@@ -374,8 +352,7 @@ object QualityQueries {
           "aggregate(transform(array_distinct(cs), c -> size(filter(cs, x -> x = c))), 0L, " +
           "(acc, cnt) -> acc + CAST(cnt AS BIGINT) * ((length(bin(size(cs))) - 1) - (length(bin(cnt)) - 1)))")
           .as("ent_bits"))
-      .withColumn("ent_r", round(when(col("n_chars") === 0, lit(0.0))
-        .otherwise(col("ent_bits").cast("double") / col("n_chars")), 4))
+      .withColumn("ent_r", ratio(col("ent_bits"), col("n_chars"), 4))
       .orderBy(col("doc_id"))
 
   // ------------------------------------------------------- corpus profile
@@ -403,13 +380,13 @@ object QualityQueries {
     // count-star subtree now rides as one more crossJoin dim alongside
     // top10/ent. Same value, same output column.
     val nd = d.agg(count(lit(1)).as("n_docs"))
-    val wc = d.select(explode(filter(split(lower(col("text")), "\\s+"), x => x =!= lit(""))).as("w"))
+    val wc = d.select(explode(words(col("text"))).as("w"))
       .groupBy(col("w")).agg(count(lit(1)).as("c"))
     val top10 = wc.orderBy(col("c").desc, col("w")).limit(10)
       .agg(sum(col("c")).cast("long").as("top10_mass"))
-    // entropy needs the total inside the per-word sum: 1-row broadcast of
-    // N into a second vocab-sized agg
-    val ent = wc.crossJoin(broadcast(wc.agg(sum(col("c")).as("nt"))))
+    // entropy needs the total N inside the per-word sum: a whole-frame
+    // total feeding a second vocab-sized agg
+    val ent = withTotals(wc)(sum(col("c")).as("nt"))
       .agg(sum(col("c") * ((length(bin(col("nt"))) - 1) - (length(bin(col("c"))) - 1)))
         .cast("long").as("ent_bits"))
     wc.agg(

@@ -1,5 +1,6 @@
 package graft.queries
 
+import graft.queries.QueryShapes.withTotals
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -332,9 +333,7 @@ object RelationalQueries {
   /** Scalar subquery: rows above the global average (broadcast 1-row agg —
     * the Catalyst shape DuckDB writes as a scalar subquery). */
   def qScalarSubquery(spark: SparkSession, dir: String): DataFrame = {
-    val c = t(spark, dir, "customer")
-    val g = c.agg(avg(col("c_acctbal")).as("global_avg"))
-    c.crossJoin(broadcast(g))
+    withTotals(t(spark, dir, "customer"))(avg(col("c_acctbal")).as("global_avg"))
       .where(col("c_acctbal") > col("global_avg"))
       .select(col("c_custkey"), round(col("c_acctbal") - col("global_avg"), 2).as("above_by"))
       .orderBy(col("c_custkey"))

@@ -1,6 +1,8 @@
 package graft.queries
 
 import graft.core.DuckHash
+import graft.queries.QueryShapes._
+import java.util.Locale
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import scala.util.hashing.MurmurHash3
@@ -37,8 +39,6 @@ import scala.util.hashing.MurmurHash3
   */
 object TrainingDataQueries {
 
-  private def docs(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(s"$dir/documents.parquet")
   private def emb(spark: SparkSession, dir: String): DataFrame =
     spark.read.parquet(s"$dir/embeddings.parquet")
 
@@ -60,7 +60,7 @@ object TrainingDataQueries {
   /** Word-3-shingle hashes of a document: sorted distinct primitive array
     * (no boxing — these run per row in the hot path). */
   def shingleSet(text: String, k: Int = 3): Array[Long] = {
-    val words = text.toLowerCase.split("\\s+").filter(_.nonEmpty)
+    val words = wordArray(text)
     if (words.length < k) {
       if (words.isEmpty) Array.empty
       else Array(MurmurHash3.arrayHash(words.asInstanceOf[Array[AnyRef]], 31).toLong)
@@ -216,7 +216,7 @@ object TrainingDataQueries {
   /** 64-bit SimHash over word unigrams (md5-derived word hashes). */
   def simhash64(text: String): Long = {
     val acc = new Array[Int](64)
-    text.toLowerCase.split("\\s+").withFilter(_.nonEmpty).foreach { w =>
+    wordArray(text).foreach { w =>
       val h = wordHash64(w)
       var b = 0
       while (b < 64) {
@@ -333,18 +333,6 @@ object TrainingDataQueries {
     * codegen/AQE; this loop is the standard DataFrame CC recipe
     * (hash-to-min family, Kiveris et al., "Connected Components in
     * MapReduce and Beyond"). */
-  /** Eager checkpoint with cluster-grade durability when available:
-    * `localCheckpoint` blocks are executor-local and NON-replicated — on a
-    * real cluster, one lost executor mid-iteration kills the job
-    * unrecoverably (lineage truncated, no recompute path). When the session
-    * has a reliable checkpoint dir configured
-    * (`sparkContext.setCheckpointDir`, HDFS/object store on a cluster),
-    * use `checkpoint()` against it; fall back to localCheckpoint for
-    * local/test sessions where re-running the whole job is cheap. */
-  private[queries] def eagerCheckpoint(df: DataFrame): DataFrame =
-    if (df.sparkSession.sparkContext.getCheckpointDir.isDefined) df.checkpoint(eager = true)
-    else df.localCheckpoint(eager = true)
-
   /** Re-attach per-id payloads (texts / vectors) to a verified-candidate
     * pair set with the 100 TB plan pinned rather than AQE-dependent
     * (VERDICT r2 minor): the pair set is eagerly checkpointed (16-byte
@@ -458,7 +446,7 @@ object TrainingDataQueries {
   /** Char-k-gram hashes: sorted distinct primitive array; rolling
     * polynomial hash remixed with splitmix64 (no substring allocation). */
   def charShingles(text: String, k: Int): Array[Long] = {
-    val t = text.toLowerCase
+    val t = text.toLowerCase(Locale.ROOT)
     if (t.length < k) {
       return if (t.isEmpty) Array.empty else Array(splitmix64(MurmurHash3.stringHash(t, 42).toLong))
     }
@@ -1053,7 +1041,7 @@ object TrainingDataQueries {
     docs(spark, dir)
       .select(
         col("doc_id"),
-        size(split(trim(col("text")), "\\s+")).as("ws_tokens"),
+        size(wsTokens(col("text"))).as("ws_tokens"),
         size(regexp_extract_all(col("text"), lit("[A-Za-z0-9]+|[^A-Za-z0-9\\s]"), lit(0))).as("bpe_tokens"),
       )
       .orderBy(col("doc_id"))
@@ -1063,12 +1051,11 @@ object TrainingDataQueries {
     * surfaces can never drift). */
   def qualitySignalCols(textCol: String): Seq[Column] = {
     val t = col(textCol)
-    val words = split(trim(t), "\\s+")
+    val words = wsTokens(t)
     // NB: Spark's sequence(1, 0) is DESCENDING [1, 0], not empty — the
     // <2-words case is guarded at the use site, never evaluated here
-    val bigrams = expr(
-      s"transform(sequence(1, size(split(trim($textCol), '\\\\s+')) - 1), " +
-        s"i -> concat(element_at(split(trim($textCol), '\\\\s+'), i), ' ', element_at(split(trim($textCol), '\\\\s+'), i + 1)))")
+    val bigrams = transform(sequence(lit(1), size(words) - 1),
+      i => concat(element_at(words, i), lit(" "), element_at(words, i + 1)))
     Seq(
       size(words).as("n_words"),
       round(length(regexp_replace(t, "\\s+", "")).cast("double") / size(words), 4).as("mean_word_len_r"),
@@ -1177,13 +1164,12 @@ object TrainingDataQueries {
   def phraseSearch(d: DataFrame): DataFrame = {
     // bounded 1-row collect (the medoid discipline): the probe phrase
     val phrase = d.where(col("doc_id") === 1)
-      .select(expr("slice(filter(split(lower(text), '\\\\s+'), x -> x != ''), 6, 3)").as("p"))
+      .select(slice(words(col("text")), 6, 3).as("p"))
       .collect()(0).getSeq[String](0)
     require(phrase.length == 3, "doc 1 too short for the probe phrase")
     val Seq(w1, w2, w3) = phrase.toSeq
     val toks = eagerCheckpoint(d
-      .select(col("doc_id"),
-        posexplode(filter(split(lower(col("text")), "\\s+"), x => x =!= lit(""))))
+      .select(col("doc_id"), posexplode(words(col("text"))))
       .toDF("doc_id", "pos", "word")
       .where(col("word").isin(w1, w2, w3)))
     val t1 = toks.where(col("word") === w1).select(col("doc_id"), col("pos"))
@@ -1225,8 +1211,7 @@ object TrainingDataQueries {
     // (query terms are non-empty).
     val tf = d
       .select(col("doc_id"),
-        explode(filter(split(lower(col("text")), "\\s+"),
-          x => x.isInCollection(query))).as("word"))
+        explode(filter(lowerTokens(col("text")), x => x.isInCollection(query))).as("word"))
       .groupBy(col("doc_id"), col("word")).agg(count(lit(1)).as("tf"))
     val idf = tf.groupBy(col("word")).agg(count(lit(1)).as("df"))
       .crossJoin(broadcast(nRow))
@@ -1258,13 +1243,12 @@ object TrainingDataQueries {
             query: Seq[String] = Seq("hash", "join", "stream", "window", "vector"),
             k: Int = 20): DataFrame = {
     val d = docs(spark, dir)
-    val words = d.select(col("doc_id"),
-      filter(split(lower(col("text")), "\\s+"), x => x =!= lit("")).as("wl"))
+    val wordLists = d.select(col("doc_id"), words(col("text")).as("wl"))
     // ONE bounded 1-row collect for BOTH corpus scalars (r6, second pass):
     // N and Σdl come out of the same aggregation job — the old shape paid
     // a separate `d.count()` action (its own job) before the Σdl job.
     // Same values, same downstream arithmetic.
-    val statsRow = words.select(size(col("wl")).cast("long").as("dl"))
+    val statsRow = wordLists.select(size(col("wl")).cast("long").as("dl"))
       .agg(sum(col("dl")), count(lit(1))).collect()(0) // 1-row agg
     val sumDl = statsRow.getLong(0)
     val n = statsRow.getLong(1)
@@ -1277,7 +1261,7 @@ object TrainingDataQueries {
     // doc_id equi-join; the query-term filter moved INSIDE the array
     // before the generator, so the explode emits ≤ a few rows per doc
     // instead of the full token stream.
-    val tf = words
+    val tf = wordLists
       .select(col("doc_id"), size(col("wl")).cast("long").as("dl"),
         explode(filter(col("wl"), x => x.isInCollection(query))).as("word"))
       .groupBy(col("doc_id"), col("word"))
@@ -1967,7 +1951,7 @@ object LangId {
 
   def detect(text: String): String = {
     if (text == null || text.isEmpty) return "und"
-    val words = text.toLowerCase.split("[^\\p{L}]+").filter(_.nonEmpty).take(500)
+    val words = text.toLowerCase(Locale.ROOT).split("[^\\p{L}]+").filter(_.nonEmpty).take(500)
     if (words.isEmpty) return "und"
     val wordSet = words.toSeq
     var best = "und"
@@ -1989,7 +1973,7 @@ object LangId {
 object Fingerprint {
   def winnow(text: String, k: Int, w: Int): Array[Long] = {
     if (text == null || text.length < k) return Array.empty
-    val t = text.toLowerCase
+    val t = text.toLowerCase(Locale.ROOT)
     val n = t.length - k + 1
     val hashes = new Array[Long](n)
     var i = 0

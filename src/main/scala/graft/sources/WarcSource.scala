@@ -400,7 +400,7 @@ private[sources] class WarcPartitionReader(file: String, fields: Array[String],
       while (line != null && line.nonEmpty) {
         val i = line.indexOf(':')
         if (i > 0) {
-          val k = line.substring(0, i).trim.toLowerCase
+          val k = line.substring(0, i).trim.toLowerCase(java.util.Locale.ROOT)
           val v = line.substring(i + 1).trim
           k match {
             case "warc-type"       => wtype = v
@@ -471,7 +471,7 @@ private[sources] class WarcPartitionReader(file: String, fields: Array[String],
             val head = new String(payload, 0, sep, "ISO-8859-1")
             body = java.util.Arrays.copyOfRange(payload, sep + 4, payload.length)
             bodyType = head.linesIterator
-              .find(_.toLowerCase.startsWith("content-type:"))
+              .find(_.toLowerCase(java.util.Locale.ROOT).startsWith("content-type:"))
               .map(l => l.substring(l.indexOf(':') + 1).trim.takeWhile(_ != ';').trim)
               .orNull
           }

@@ -110,6 +110,19 @@ final class LineageTable(val root: String, val numBuckets: Int = 64) {
     Json.parse(new String(Files.readAllBytes(p("_manifests", s"snapshot-$id.json")), UTF_8))
       .asInstanceOf[Map[String, Any]]
 
+  /** Manifest field `key`, a JSON list, as strings. */
+  private def listField(m: Map[String, Any], key: String): List[String] =
+    m(key).asInstanceOf[List[Any]].map(String.valueOf)
+
+  /** Every data and lineage dir snapshot `id` references. */
+  private def dirsOf(id: Long): List[String] = {
+    val s = snapshot(id)
+    listField(s, "data_dirs") ++ listField(s, "lineage_dirs")
+  }
+
+  /** A manifest JSON number, which the parser returns as a Long or a Double. */
+  private def jsonNum(v: Any): Double = String.valueOf(v).toDouble
+
   /** Commit a new snapshot listing `dataDirs` (bucket dirs) + lineage dirs.
     * Manifest first (temp + rename), CURRENT pointer last (atomic move) —
     * a reader sees either the old or the new snapshot, never a mix. */
@@ -177,7 +190,7 @@ final class LineageTable(val root: String, val numBuckets: Int = 64) {
     currentSnapshotId
       .flatMap(id => snapshot(id).get("stream_state"))
       .map(_.asInstanceOf[Map[String, Any]].map { case (k, v) =>
-        k -> String.valueOf(v).toDouble.toLong
+        k -> jsonNum(v).toLong
       })
       .getOrElse(Map.empty)
 
@@ -245,8 +258,8 @@ final class LineageTable(val root: String, val numBuckets: Int = 64) {
   private def dirEpochs: Map[String, Int] = {
     val fromManifests = snapshotIds.foldLeft(Map.empty[String, Int]) { (acc, id) =>
       val s = snapshot(id)
-      val v = s.get("schema_version").map(x => String.valueOf(x).toDouble.toInt).getOrElse(0)
-      s("data_dirs").asInstanceOf[List[Any]].map(String.valueOf).foldLeft(acc) { (a, d) =>
+      val v = s.get("schema_version").map(jsonNum(_).toInt).getOrElse(0)
+      listField(s, "data_dirs").foldLeft(acc) { (a, d) =>
         a.updatedWith(d)(old => Some(math.min(old.getOrElse(Int.MaxValue), v)))
       }
     }
@@ -259,7 +272,7 @@ final class LineageTable(val root: String, val numBuckets: Int = 64) {
     if (!Files.exists(epochsPath)) Map.empty
     else Json.parse(new String(Files.readAllBytes(epochsPath), UTF_8))
       .asInstanceOf[Map[String, Any]]
-      .map { case (d, v) => d -> String.valueOf(v).toDouble.toInt }
+      .map { case (d, v) => d -> jsonNum(v).toInt }
 
   /** Record the current schema version as the epoch of any dir not seen
     * before (first commit wins — re-commits of a dir under a later schema
@@ -322,15 +335,14 @@ final class LineageTable(val root: String, val numBuckets: Int = 64) {
     }
   }
 
-  private def dataDirsOf(id: Long): Seq[String] =
-    snapshot(id)("data_dirs").asInstanceOf[List[Any]].map(String.valueOf)
+  private def dataDirsOf(id: Long): Seq[String] = listField(snapshot(id), "data_dirs")
 
   /** Data dirs of the current snapshot (empty when table has no commit). */
   def currentDataDirs: Seq[String] =
     currentSnapshotId.map(dataDirsOf).getOrElse(Nil)
 
   def currentLineageDirs: Seq[String] =
-    currentSnapshotId.map(id => snapshot(id)("lineage_dirs").asInstanceOf[List[Any]].map(String.valueOf)).getOrElse(Nil)
+    currentSnapshotId.map(id => listField(snapshot(id), "lineage_dirs")).getOrElse(Nil)
 
   /** A committed dir from an empty wave holds only _SUCCESS; reading it
     * would fail schema inference, so union only dirs with data files. */
@@ -640,22 +652,14 @@ final class LineageTable(val root: String, val numBuckets: Int = 64) {
     val all = snapshotIds
     val (keep, drop) = all.partition { id =>
       id == cur || {
-        val ts = snapshot(id).get("committed_at_ms").map(v => String.valueOf(v).toDouble.toLong).getOrElse(0L)
+        val ts = snapshot(id).get("committed_at_ms").map(jsonNum(_).toLong).getOrElse(0L)
         nowMs - ts <= ttlMs
       }
     }
-    val referenced = keep.flatMap { id =>
-      val s = snapshot(id)
-      s("data_dirs").asInstanceOf[List[Any]].map(String.valueOf) ++
-        s("lineage_dirs").asInstanceOf[List[Any]].map(String.valueOf)
-    }.toSet
+    val referenced = keep.flatMap(dirsOf).toSet
     // deduplicate first: consecutive appendCommit snapshots share dirs, and
     // per-manifest deletion would count each shared dir once per manifest
-    val deletable = drop.flatMap { id =>
-      val s = snapshot(id)
-      s("data_dirs").asInstanceOf[List[Any]].map(String.valueOf) ++
-        s("lineage_dirs").asInstanceOf[List[Any]].map(String.valueOf)
-    }.distinct.filterNot(referenced.contains)
+    val deletable = drop.flatMap(dirsOf).distinct.filterNot(referenced.contains)
     var deleted = 0
     deletable.foreach { d =>
       val path = Paths.get(d)
@@ -683,11 +687,7 @@ final class LineageTable(val root: String, val numBuckets: Int = 64) {
     * re-extraction with the data gone. Age guard + single-writer
     * discipline: run only while nothing is writing the table. */
   def removeOrphans(olderThanMs: Long, nowMs: Long = System.currentTimeMillis()): Int = withWriterLock {
-    val referenced = snapshotIds.flatMap { id =>
-      val s = snapshot(id)
-      s("data_dirs").asInstanceOf[List[Any]].map(String.valueOf) ++
-        s("lineage_dirs").asInstanceOf[List[Any]].map(String.valueOf)
-    }.toSet ++ markerDirs
+    val referenced = snapshotIds.flatMap(dirsOf).toSet ++ markerDirs
     // referenced paths may be NESTED under a listed child (writeUnit's
     // <runId>/wave-N dirs of ExtractJob vs the flat <runId> of compact/
     // streaming) — a child is protected if any referenced path equals it

@@ -19,16 +19,16 @@ object PipelineDemo {
   def main(args: Array[String]): Unit = {
     val n = args.headOption.map(_.toInt).getOrElse(2000)
     val spark = GraftSession.local(8)
-    val (root, demoDir) = run(spark, n)
+    val root = java.nio.file.Files.createTempDirectory("graft-pipeline-").toString
+    val demoDir = run(spark, n, root)
     println(s"pipeline root=$root documents=$demoDir")
     spark.stop()
   }
 
-  /** Runs the full chain; returns (job root, documents dir). Shared with
-    * PipelineE2ESpec. */
-  def run(spark: org.apache.spark.sql.SparkSession, n: Int): (String, String) = {
+  /** Runs the full chain with its job table under `root`; returns the
+    * documents dir. Shared with PipelineE2ESpec. */
+  def run(spark: org.apache.spark.sql.SparkSession, n: Int, root: String): String = {
     import spark.implicits._
-    val root = java.nio.file.Files.createTempDirectory("graft-pipeline-").toString
 
     // 1. resumable extraction over the crawl table (2+ waves → staging path)
     val pages = spark.createDataset(CorpusGen.pages(n))(implicitly)
@@ -65,6 +65,6 @@ object PipelineDemo {
     val packed = CurationQueries.qPackSequences(spark, demoDir)
     val bins = packed.agg(max(col("bin_last"))).head().getLong(0) + 1
     println(s"[4/4] packing: ${packed.count()} docs into >=$bins bins/source-group")
-    (root, demoDir)
+    demoDir
   }
 }

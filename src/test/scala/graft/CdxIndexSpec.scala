@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 
 import graft.gen.{CorpusGen, WarcGen}
 import graft.pipeline.CdxIndex
@@ -8,7 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** The production CDX builder over real WARC shards must reproduce the
   * oracled q_cdx_index classification arithmetic on actual captures. */
-class CdxIndexSpec extends AnyFunSuite {
+class CdxIndexSpec extends AnyFunSuite with TempRoots {
 
   private lazy val spark = SparkTestBase.spark
 
@@ -17,7 +16,7 @@ class CdxIndexSpec extends AnyFunSuite {
     assert(pages.map(_.url).distinct.size < pages.size, "corpus must carry re-crawls")
     assert(pages.map(p => (p.url, p.warc_ts.getTime)).distinct.size == pages.size,
       "capture identity must be (url, ts)-unique for the recomputation below")
-    val dir = Files.createTempDirectory("graft-cdx-").toString
+    val dir = freshRoot("graft-cdx-")
     WarcGen.writeFiles(dir, pages, perFile = 50, gzipped = true)
 
     val got = CdxIndex.fromWarc(spark, dir).collect()

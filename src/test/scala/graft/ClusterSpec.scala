@@ -58,7 +58,11 @@ class ClusterSpec extends AnyFunSuite {
     assert(sc.getCheckpointDir.isEmpty, "precondition: local-mode default")
     val chain = (0L until 20L).map(i => (i, i + 1))
     val without = cc(chain)
-    val dir = java.nio.file.Files.createTempDirectory("cc-ckpt").toString
+    // the shared session keeps this checkpoint dir after the suite (see
+    // below), so it lives under Spark's driver temp dir, which Spark
+    // deletes at shutdown
+    val dir = java.nio.file.Files.createTempDirectory(
+      java.nio.file.Paths.get(org.apache.spark.SparkFiles.getRootDirectory()), "cc-ckpt").toString
     sc.setCheckpointDir(dir)
     val withDir = cc(chain)
     assert(withDir == without)

@@ -2,7 +2,6 @@ package graft
 
 import graft.table.LineageTable
 import org.scalatest.funsuite.AnyFunSuite
-import java.nio.file.Files
 import java.util.concurrent.{CountDownLatch, TimeUnit}
 
 /** The single-writer maintenance contract, enforced rather than documented
@@ -10,7 +9,7 @@ import java.util.concurrent.{CountDownLatch, TimeUnit}
   * lock in-process, and compact fails LOUD when a writer outside the lock
   * (cross-process) moves CURRENT mid-maintenance, instead of silently
   * dropping that writer's snapshot from CURRENT. */
-class MaintenanceRaceSpec extends AnyFunSuite {
+class MaintenanceRaceSpec extends AnyFunSuite with TempRoots {
   private lazy val spark = SparkTestBase.spark
 
   private def frame(rows: Seq[(String, String, Int, String, Long, java.sql.Timestamp)]) = {
@@ -20,7 +19,7 @@ class MaintenanceRaceSpec extends AnyFunSuite {
   private def ts(s: Long) = new java.sql.Timestamp(1700000000000L + s * 1000)
 
   private def seeded(): (LineageTable, String) = {
-    val root = Files.createTempDirectory("mrace").toString
+    val root = freshRoot("mrace")
     val t = new LineageTable(root, 4)
     val d1 = s"$root/data/run1"
     frame(Seq(

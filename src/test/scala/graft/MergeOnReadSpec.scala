@@ -2,11 +2,10 @@ package graft
 
 import graft.table.LineageTable
 import org.scalatest.funsuite.AnyFunSuite
-import java.nio.file.Files
 
 /** appendCommit / readLatest / resolving compaction — the merge-on-read
   * path for re-crawled urls, and its interaction with incremental reads. */
-class MergeOnReadSpec extends AnyFunSuite {
+class MergeOnReadSpec extends AnyFunSuite with TempRoots {
   private lazy val spark = SparkTestBase.spark
 
   private def frame(rows: Seq[(String, String, Int, String, Long, java.sql.Timestamp)]) = {
@@ -17,7 +16,7 @@ class MergeOnReadSpec extends AnyFunSuite {
   private def ts(s: Long) = new java.sql.Timestamp(1700000000000L + s * 1000)
 
   test("append commit + latest-wins read + resolving compaction; changesSince stays valid") {
-    val root = Files.createTempDirectory("mor").toString
+    val root = freshRoot("mor")
     val t = new LineageTable(root, 4)
 
     val d1 = s"$root/data/run1"

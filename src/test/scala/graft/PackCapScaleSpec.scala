@@ -18,7 +18,7 @@ import org.scalatest.funsuite.AnyFunSuite
   *      and the offset rejoin exists; domain cap runs two rank windows,
   *      the first salted.
   */
-class PackCapScaleSpec extends AnyFunSuite {
+class PackCapScaleSpec extends AnyFunSuite with TempRoots {
 
   private lazy val spark = SparkTestBase.spark
   private val sf = "/root/testdata/sf0.001"
@@ -37,7 +37,7 @@ class PackCapScaleSpec extends AnyFunSuite {
 
   test("pack: one dominant source, docs straddling group edges") {
     import spark.implicits._
-    val tmp = java.nio.file.Files.createTempDirectory("packscale").toString
+    val tmp = freshRoot("packscale")
     // 400 docs in ONE source with ragged token counts; doc_ids dense so
     // groupSize=8 yields 50 groups; token counts prime-ish so bins land
     // off group boundaries (cut-straddle must cross group edges too)
@@ -84,7 +84,7 @@ class PackCapScaleSpec extends AnyFunSuite {
 
   test("frontier: hot host splits across groups and still ranks exactly") {
     import spark.implicits._
-    val tmp = java.nio.file.Files.createTempDirectory("frontierscale").toString
+    val tmp = freshRoot("frontierscale")
     // all 1000 urls land on ONE host (doc_id multiples of 50 -> host site0)
     val docs = (0 until 1000).map { i =>
       (i.toLong * 50, "t", "en", "src", 1L)
@@ -108,7 +108,7 @@ class PackCapScaleSpec extends AnyFunSuite {
 
   test("domain cap: dominant domain with duplicate n_chars ties") {
     import spark.implicits._
-    val tmp = java.nio.file.Files.createTempDirectory("capscale").toString
+    val tmp = freshRoot("capscale")
     // 2000 docs in one hot domain (many ties on n_chars so the doc_id
     // tiebreak is load-bearing), 10 in a cold one; cap 15 < hot size
     val docs = ((0 until 2000).map { i =>

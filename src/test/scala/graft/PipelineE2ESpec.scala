@@ -8,12 +8,12 @@ import org.scalatest.funsuite.AnyFunSuite
   * documents contract → curation operators. Asserts the extraction
   * output feeds the curation family unchanged and every stage has
   * signal. */
-class PipelineE2ESpec extends AnyFunSuite {
+class PipelineE2ESpec extends AnyFunSuite with TempRoots {
 
   private lazy val spark = SparkTestBase.spark
 
   test("extraction output drives quality filter, dedup and packing end-to-end") {
-    val (_, demoDir) = graft.tools.PipelineDemo.run(spark, 400)
+    val demoDir = graft.tools.PipelineDemo.run(spark, 400, freshRoot("graft-pipeline-"))
 
     val docs = spark.read.parquet(s"$demoDir/documents.parquet")
     val nDocs = docs.count()

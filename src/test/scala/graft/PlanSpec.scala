@@ -6,7 +6,7 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Physical-plan audits: the properties that matter at 100 TB — predicate
   * pushdown into parquet, column pruning, broadcast of small dims,
   * whole-stage codegen spans. */
-class PlanSpec extends AnyFunSuite {
+class PlanSpec extends AnyFunSuite with TempRoots {
 
   private lazy val spark = SparkTestBase.spark
   private val dir = "/root/testdata/sf0.01"
@@ -31,7 +31,7 @@ class PlanSpec extends AnyFunSuite {
   test("metadata-only query over pages never reads the html column") {
     implicit val s = spark
     import s.implicits._
-    val tmp = java.nio.file.Files.createTempDirectory("graft-prune-").toString
+    val tmp = freshRoot("graft-prune-")
     spark.createDataset(graft.gen.CorpusGen.pages(50))(implicitly).write.mode("overwrite").parquet(tmp)
     val df = spark.read.parquet(tmp).select("url", "lang").where("lang = 'en'")
     val readSchema = planOf(df).linesIterator.find(_.contains("ReadSchema")).getOrElse("")

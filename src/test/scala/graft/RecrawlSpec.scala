@@ -5,7 +5,6 @@ import graft.model.Page
 import graft.pipeline.{ExtractJob, ExtractKernel, Recrawl}
 import graft.table.LineageTable
 import org.scalatest.funsuite.AnyFunSuite
-import java.nio.file.Files
 
 /** The recurring-crawl loop end-to-end: crawl A extracted in full, crawl B
   * diffed against A at content-digest granularity, ONLY the delta
@@ -18,7 +17,7 @@ import java.nio.file.Files
   *      retained (crawl absence is weak death evidence);
   *   3. the diff itself never moves payloads (digest-only join).
   */
-class RecrawlSpec extends AnyFunSuite {
+class RecrawlSpec extends AnyFunSuite with TempRoots {
 
   private lazy val spark = SparkTestBase.spark
 
@@ -32,7 +31,7 @@ class RecrawlSpec extends AnyFunSuite {
     new java.sql.Timestamp(p.warc_ts.getTime + 86400000L)
 
   test("recrawl: delta-only extraction, merged latest-wins read") {
-    val root = Files.createTempDirectory("graft-recrawl-").toString
+    val root = freshRoot("graft-recrawl-")
     // crawl A: 60 urls (CorpusGen repeats every 37th url as a re-crawl;
     // keep only the latest per url so the baseline is already deduped)
     val a = CorpusGen.pages(60).groupBy(_.url).values.map(_.maxBy(_.warc_ts.getTime)).toSeq
@@ -151,7 +150,7 @@ class RecrawlSpec extends AnyFunSuite {
   }
 
   test("mass retirement refuses driver-side tombstones") {
-    val root = Files.createTempDirectory("graft-recrawl-mass-").toString
+    val root = freshRoot("graft-recrawl-mass-")
     val table = new LineageTable(root, 8)
     val a = CorpusGen.pages(40).groupBy(_.url).values.map(_.maxBy(_.warc_ts.getTime)).toSeq
     val ex = intercept[IllegalArgumentException](

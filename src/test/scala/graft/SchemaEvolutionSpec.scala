@@ -2,18 +2,17 @@ package graft
 
 import graft.table.LineageTable
 import org.scalatest.funsuite.AnyFunSuite
-import java.nio.file.Files
 
 /** LineageTable additive schema evolution: Iceberg initial-default
   * semantics per dir epoch — pre-evolution files read the default,
   * post-evolution files read their own values including genuine nulls;
   * time travel projects too; compaction materializes evolved columns. */
-class SchemaEvolutionSpec extends AnyFunSuite {
+class SchemaEvolutionSpec extends AnyFunSuite with TempRoots {
   private lazy val spark = SparkTestBase.spark
 
   test("initial-default vs genuine-null across evolution, time travel, compaction") {
     import spark.implicits._
-    val root = Files.createTempDirectory("evo").toString
+    val root = freshRoot("evo")
     val t = new LineageTable(root, 4)
 
     val d1 = s"$root/data/run1"
@@ -58,7 +57,7 @@ class SchemaEvolutionSpec extends AnyFunSuite {
   }
 
   test("duplicate evolution of the same column is rejected") {
-    val root = Files.createTempDirectory("evo2").toString
+    val root = freshRoot("evo2")
     val t = new LineageTable(root, 4)
     t.addColumn("score", "double", "0.0")
     val ex = intercept[IllegalArgumentException](t.addColumn("score", "double", "1.0"))
@@ -67,7 +66,7 @@ class SchemaEvolutionSpec extends AnyFunSuite {
 
   test("initial defaults survive expiry of the first-committing manifest") {
     import spark.implicits._
-    val root = Files.createTempDirectory("evo3").toString
+    val root = freshRoot("evo3")
     val t = new LineageTable(root, 4)
     val d1 = s"$root/data/run1"
     Seq(("t1", "u1", 0, "completed", 5L))
@@ -88,7 +87,7 @@ class SchemaEvolutionSpec extends AnyFunSuite {
 
   test("evolving over an existing physical column fails loud, not silently inert") {
     import spark.implicits._
-    val root = Files.createTempDirectory("evo4").toString
+    val root = freshRoot("evo4")
     val t = new LineageTable(root, 4)
     val d1 = s"$root/data/run1"
     Seq(("t1", "u1", 0, "completed", 5L))

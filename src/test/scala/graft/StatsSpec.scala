@@ -4,18 +4,17 @@ import graft.gen.CorpusGen
 import graft.pipeline.{ExtractJob, ExtractKernel}
 import graft.table.{LineageTable, Stats}
 import org.scalatest.funsuite.AnyFunSuite
-import java.nio.file.Files
 
 /** Ops surface: task lookup (O4), stats (O5), tombstone delete (S6),
   * format_bytes (T14). */
-class StatsSpec extends AnyFunSuite {
+class StatsSpec extends AnyFunSuite with TempRoots {
 
   private lazy val spark = SparkTestBase.spark
 
   private lazy val (table, distinctUrls): (LineageTable, Long) = {
     val s = spark
     import s.implicits._
-    val root = Files.createTempDirectory("graft-stats-").toString
+    val root = suiteRoot("graft-stats-")
     val pages = spark.createDataset(CorpusGen.pages(80))(implicitly)
     ExtractJob.run(spark, pages, ExtractJob.Config(root, "r", numBuckets = 8, bucketsPerWave = 8))
     (new LineageTable(root, 8), pages.select("url").distinct().count())

@@ -3,20 +3,19 @@ package graft
 import graft.gen.CorpusGen
 import graft.streaming.StreamingExtract
 import org.scalatest.funsuite.AnyFunSuite
-import java.nio.file.Files
 
 /** Structured Streaming: incremental extraction with checkpointed
   * exactly-once appends; watermarked windowed aggregation. */
-class StreamingSpec extends AnyFunSuite {
+class StreamingSpec extends AnyFunSuite with TempRoots {
 
   private lazy val spark = SparkTestBase.spark
 
   test("file-stream extraction: incremental batches, no reprocessing across restarts") {
     val s = spark
     import s.implicits._
-    val in = Files.createTempDirectory("graft-stream-in-").toString
-    val out = Files.createTempDirectory("graft-stream-out-").toString
-    val cp = Files.createTempDirectory("graft-stream-cp-").toString
+    val in = freshRoot("graft-stream-in-")
+    val out = freshRoot("graft-stream-out-")
+    val cp = freshRoot("graft-stream-cp-")
 
     // batch 1: rows 0..39
     spark.createDataset(CorpusGen.pages(40))(implicitly)

@@ -9,16 +9,16 @@ import java.nio.file.Files
 /** Streaming ingestion into the snapshot table: exactly-once per-batch
   * commits sharing the batch ExtractJob's layout/lineage schema, replay
   * idempotence, incremental restarts. */
-class StreamingTableSpec extends AnyFunSuite {
+class StreamingTableSpec extends AnyFunSuite with TempRoots {
 
   private lazy val spark = SparkTestBase.spark
 
   test("stream commits snapshots into LineageTable; restart appends only the delta") {
     val s = spark
     import s.implicits._
-    val in = Files.createTempDirectory("graft-stt-in-").toString
-    val cp = Files.createTempDirectory("graft-stt-cp-").toString
-    val root = Files.createTempDirectory("graft-stt-table-").toString
+    val in = freshRoot("graft-stt-in-")
+    val cp = freshRoot("graft-stt-cp-")
+    val root = freshRoot("graft-stt-table-")
     val table = new LineageTable(root, numBuckets = 8)
 
     spark.createDataset(CorpusGen.pages(40))(implicitly).write.mode("append").parquet(in)
@@ -52,7 +52,7 @@ class StreamingTableSpec extends AnyFunSuite {
   test("replayed micro-batch is skipped: commitStreamBatch is idempotent on batchId") {
     val s = spark
     import s.implicits._
-    val root = Files.createTempDirectory("graft-stt-idem-").toString
+    val root = freshRoot("graft-stt-idem-")
     val table = new LineageTable(root, numBuckets = 4)
     val batch = graft.pipeline.ExtractKernel
       .extract(spark.createDataset(CorpusGen.pages(10))(implicitly),
@@ -73,7 +73,7 @@ class StreamingTableSpec extends AnyFunSuite {
   test("changesSince delivers exactly the delta; compaction boundary raises") {
     val s = spark
     import s.implicits._
-    val root = Files.createTempDirectory("graft-stt-inc-").toString
+    val root = freshRoot("graft-stt-inc-")
     val table = new LineageTable(root, numBuckets = 4)
     def batchOf(from: Int, n: Int) = graft.pipeline.ExtractKernel
       .extract(spark.createDataset((from until from + n).map(i => CorpusGen.pageFor(i.toLong)))(implicitly),
@@ -103,7 +103,7 @@ class StreamingTableSpec extends AnyFunSuite {
   test("replay check survives compaction + expiry; stale streamRunId reuse fails loud") {
     val s = spark
     import s.implicits._
-    val root = Files.createTempDirectory("graft-stt-state-").toString
+    val root = freshRoot("graft-stt-state-")
     val table = new LineageTable(root, numBuckets = 4)
     val batch = graft.pipeline.ExtractKernel
       .extract(spark.createDataset(CorpusGen.pages(8))(implicitly),
@@ -134,7 +134,7 @@ class StreamingTableSpec extends AnyFunSuite {
   test("compacting an all-tombstoned table succeeds with an empty visible set") {
     val s = spark
     import s.implicits._
-    val root = Files.createTempDirectory("graft-stt-tomb-").toString
+    val root = freshRoot("graft-stt-tomb-")
     val table = new LineageTable(root, numBuckets = 4)
     val batch = graft.pipeline.ExtractKernel
       .extract(spark.createDataset(CorpusGen.pages(5))(implicitly),
@@ -153,7 +153,7 @@ class StreamingTableSpec extends AnyFunSuite {
   test("removeOrphans deletes unreferenced aged dirs, keeps referenced and marker dirs") {
     val s = spark
     import s.implicits._
-    val root = Files.createTempDirectory("graft-stt-orph-").toString
+    val root = freshRoot("graft-stt-orph-")
     val table = new LineageTable(root, numBuckets = 4)
     val batch = graft.pipeline.ExtractKernel
       .extract(spark.createDataset(CorpusGen.pages(5))(implicitly),

@@ -1,7 +1,7 @@
 package graft
 
 import graft.table.LineageTable
-import org.scalatest.{Outcome, TestSuite}
+import org.scalatest.{BeforeAndAfterAll, Outcome, TestSuite}
 import java.nio.file.{Files, Path}
 import scala.jdk.CollectionConverters._
 
@@ -23,22 +23,34 @@ object TableFiles {
     graft.gen.CorpusGen.pages(n).map(p => LineageTable.bucketFor(p.url, numBuckets)).distinct.size
 }
 
-/** `freshRoot()` makes a temp table root that is deleted when the test
-  * ends, passed or failed. */
-trait TempRoots extends TestSuite {
+/** `freshRoot()` makes a temp dir that is deleted when the test ends,
+  * passed or failed; `suiteRoot()` makes one the suite's tests share,
+  * deleted after the last of them. */
+trait TempRoots extends TestSuite with BeforeAndAfterAll {
 
   private val roots = scala.collection.mutable.ArrayBuffer.empty[Path]
+  private val suiteRoots = scala.collection.mutable.ArrayBuffer.empty[Path]
 
-  protected def freshRoot(): String = roots.synchronized {
-    val d = Files.createTempDirectory("graft-table-")
-    roots += d
-    d.toString
-  }
+  private def make(into: scala.collection.mutable.ArrayBuffer[Path], prefix: String): String =
+    into.synchronized {
+      val d = Files.createTempDirectory(prefix)
+      into += d
+      d.toString
+    }
+
+  private def deleteAll(dirs: scala.collection.mutable.ArrayBuffer[Path]): Unit =
+    dirs.synchronized {
+      dirs.foreach(LineageTable.deleteRecursively)
+      dirs.clear()
+    }
+
+  protected def freshRoot(prefix: String = "graft-table-"): String = make(roots, prefix)
+
+  protected def suiteRoot(prefix: String): String = make(suiteRoots, prefix)
 
   override def withFixture(test: NoArgTest): Outcome =
-    try super.withFixture(test)
-    finally roots.synchronized {
-      roots.foreach(LineageTable.deleteRecursively)
-      roots.clear()
-    }
+    try super.withFixture(test) finally deleteAll(roots)
+
+  override def afterAll(): Unit =
+    try super.afterAll() finally deleteAll(suiteRoots)
 }

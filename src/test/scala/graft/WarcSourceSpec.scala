@@ -5,18 +5,17 @@ import graft.model.{ConversionOptions, Page}
 import graft.pipeline.ExtractKernel
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import java.nio.file.Files
 
 /** The WARC DataSource V2: byte-exact roundtrip through real .warc.gz
   * files, warcinfo skipping, multi-member gzip, column pruning, and
   * end-to-end byte-identity of extraction over WARC-read pages vs the
   * in-memory originals. */
-class WarcSourceSpec extends AnyFunSuite {
+class WarcSourceSpec extends AnyFunSuite with TempRoots {
 
   private lazy val spark = SparkTestBase.spark
 
   private def tempDir(tag: String): String =
-    Files.createTempDirectory(s"graft-warc-$tag-").toString
+    freshRoot(s"graft-warc-$tag-")
 
   test("roundtrip: pages -> 3 gz files -> warc source, urls/ts/bytes exact") {
     val pages = CorpusGen.pages(120)

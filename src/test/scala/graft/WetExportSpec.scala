@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 
 import graft.gen.{CorpusGen, WarcGen}
 import graft.model.{ConversionOptions, OutputFormat}
@@ -10,7 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
 /** WARC → WET end to end: the job must publish exactly the kernel's text
   * export for every completed page, as conversion records the response
   * -only default read mode never mistakes for pages. */
-class WetExportSpec extends AnyFunSuite {
+class WetExportSpec extends AnyFunSuite with TempRoots {
 
   private lazy val spark = SparkTestBase.spark
 
@@ -18,9 +17,9 @@ class WetExportSpec extends AnyFunSuite {
     val s = spark
     import s.implicits._
     val pages = CorpusGen.pages(60)
-    val warcDir = Files.createTempDirectory("graft-wet-in-").toString
+    val warcDir = freshRoot("graft-wet-in-")
     WarcGen.writeFiles(warcDir, pages, perFile = 20, gzipped = true)
-    val wetDir = Files.createTempDirectory("graft-wet-out-").toString
+    val wetDir = freshRoot("graft-wet-out-")
 
     WetExport.run(spark, warcDir, wetDir)
 
@@ -48,12 +47,12 @@ class WetExportSpec extends AnyFunSuite {
     val s = spark
     import s.implicits._
     val pages = CorpusGen.pages(40)
-    val root = Files.createTempDirectory("graft-wet-table-").toString
+    val root = freshRoot("graft-wet-table-")
     val cfg = graft.pipeline.ExtractJob.Config(root, "wet-run", numBuckets = 8,
       options = ConversionOptions(outputFormat = OutputFormat.Text))
     graft.pipeline.ExtractJob.run(spark, spark.createDataset(pages), cfg)
     val table = new graft.table.LineageTable(root, 8)
-    val wetDir = Files.createTempDirectory("graft-wet-table-out-").toString
+    val wetDir = freshRoot("graft-wet-table-out-")
 
     WetExport.fromTable(spark, table, wetDir)
 
@@ -71,7 +70,7 @@ class WetExportSpec extends AnyFunSuite {
   test("sink job_uid: a replayed write replaces its own segments exactly") {
     val s = spark
     import s.implicits._
-    val dir = Files.createTempDirectory("graft-wet-uid-").toString
+    val dir = freshRoot("graft-wet-uid-")
     val ts = new java.sql.Timestamp(1735689600000L)
     def df(n: Int) = (0 until n).map(i => (s"https://u$i.example/", ts,
       "conversion", "text/plain", s"body $i".getBytes("UTF-8")))
@@ -101,7 +100,7 @@ class WetExportSpec extends AnyFunSuite {
   test("sink job_uid: a replay with fewer partitions leaves no stale segments") {
     val s = spark
     import s.implicits._
-    val dir = Files.createTempDirectory("graft-wet-uid2-").toString
+    val dir = freshRoot("graft-wet-uid2-")
     val ts = new java.sql.Timestamp(1735689600000L)
     def df(n: Int) = (0 until n).map(i => (s"https://u$i.example/", ts,
       "conversion", "text/plain", s"body $i".getBytes("UTF-8")))
@@ -120,11 +119,11 @@ class WetExportSpec extends AnyFunSuite {
 
   test("streaming wet: streamRunId reuse against published data fails loud") {
     val pages = CorpusGen.pages(20)
-    val warcDir = Files.createTempDirectory("graft-wet-reuse-in-").toString
-    val wetDir = Files.createTempDirectory("graft-wet-reuse-out-").toString
+    val warcDir = freshRoot("graft-wet-reuse-in-")
+    val wetDir = freshRoot("graft-wet-reuse-out-")
     WarcGen.writeFiles(warcDir, pages, perFile = 10, gzipped = true)
     graft.streaming.StreamingExtract.runWarcToWet(spark, warcDir, wetDir,
-      Files.createTempDirectory("graft-wet-reuse-cp1-").toString,
+      freshRoot("graft-wet-reuse-cp1-"),
       streamRunId = "wet-r").awaitTermination(120000)
     val c1 = spark.read.format("warc").option("all_records", "true")
       .load(wetDir).count()
@@ -136,7 +135,7 @@ class WetExportSpec extends AnyFunSuite {
       gzipped = true, startIndex = 5)
     val ex = intercept[Exception] {
       graft.streaming.StreamingExtract.runWarcToWet(spark, warcDir, wetDir,
-        Files.createTempDirectory("graft-wet-reuse-cp2-").toString,
+        freshRoot("graft-wet-reuse-cp2-"),
         streamRunId = "wet-r").awaitTermination(120000)
     }
     def msgs(t: Throwable): Seq[String] =
@@ -152,9 +151,9 @@ class WetExportSpec extends AnyFunSuite {
     import s.implicits._
     val pages = CorpusGen.pages(40)
     val (first, rest) = pages.splitAt(25)
-    val warcDir = Files.createTempDirectory("graft-wet-stream-in-").toString
-    val wetDir = Files.createTempDirectory("graft-wet-stream-out-").toString
-    val cp = Files.createTempDirectory("graft-wet-stream-cp-").toString
+    val warcDir = freshRoot("graft-wet-stream-in-")
+    val wetDir = freshRoot("graft-wet-stream-out-")
+    val cp = freshRoot("graft-wet-stream-cp-")
     WarcGen.writeFiles(warcDir, first, perFile = 10, gzipped = true)
 
     graft.streaming.StreamingExtract.runWarcToWet(spark, warcDir, wetDir, cp)
@@ -189,9 +188,9 @@ class WetExportSpec extends AnyFunSuite {
 
   test("wet export appends: a re-export never clobbers prior segments") {
     val pages = CorpusGen.pages(30)
-    val warcDir = Files.createTempDirectory("graft-wet-in2-").toString
+    val warcDir = freshRoot("graft-wet-in2-")
     WarcGen.writeFiles(warcDir, pages, perFile = 10, gzipped = true)
-    val wetDir = Files.createTempDirectory("graft-wet-out2-").toString
+    val wetDir = freshRoot("graft-wet-out2-")
 
     WetExport.run(spark, warcDir, wetDir,
       // caller's markdown options must not leak into the WET payload
