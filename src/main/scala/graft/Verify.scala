@@ -29,24 +29,11 @@ object Verify {
         if (Files.isDirectory(stale)) graft.table.LineageTable.deleteRecursively(stale)
       }
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     // only-mode filters the oracle list too: a partial run into a reused
     // outDir must not hand oracle_check stale parquet for queries that
     // didn't execute this run (ADVICE r3)
-    val json = SparkEntry.oracleSql
-      .filter { case (name, _) => only.forall(_.findFirstIn(name).isDefined) }
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+    val json = graft.core.Json.write(SparkEntry.oracleSql
+      .filter { case (name, _) => only.forall(_.findFirstIn(name).isDefined) })
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
   }

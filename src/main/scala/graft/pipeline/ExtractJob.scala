@@ -13,16 +13,20 @@ import org.apache.spark.sql.functions._
   *  - work unit = url-hash bucket (stable across runs/partitionings — NEVER
   *    Spark task ids); waves of `bucketsPerWave` buckets run as one Spark
   *    job each;
-  *  - a wave's [[LineageTable.writeUnit]] (dir `<runId>/wave-<id>`) writes
-  *    its results parquet (partitioned by bucket for downstream partition
-  *    pruning), then its lineage parquet, then the wave writes one marker
-  *    file per bucket from the returned lineage rows — markers last, so a
+  *  - the run starts with [[LineageTable.beginRun]]: the table records the
+  *    run's config (bucket count, wave size, dedup, input schema), and a
+  *    resume with another config fails loudly;
+  *  - [[LineageTable.commitWave]] writes a wave's results parquet
+  *    (partitioned by bucket for downstream partition pruning), then its
+  *    lineage parquet, then one marker for the wave — marker last, so a
   *    crash mid-wave leaves no marker and the rerun redoes the whole wave
   *    (at-least-once, idempotent because output paths are keyed by wave id
   *    and overwritten);
-  *  - rerunning the same (table, runId) skips all marked buckets: a killed
+  *  - rerunning the same (table, runId) skips all marked waves: a killed
   *    job never re-extracts completed partitions;
-  *  - after the last wave, a snapshot manifest is committed atomically.
+  *  - after the last wave, a snapshot of the marked waves' dirs is
+  *    committed atomically and the run's checkpoint and staging are
+  *    dropped.
   *
   * Layout: under WindowDedup the job's one input exchange is a hash
   * partition on `_bucket`, and that layout is kept from staging to commit.
@@ -94,41 +98,26 @@ object ExtractJob {
     }
     val withBucket = pages.toDF().withColumn("_bucket", LineageTable.bucketCol($"url", cfg.numBuckets))
 
+    // the run record, staged or not: waves committed under one
+    // (numBuckets, bucketsPerWave, dedup, input schema) are lies under
+    // another — numBuckets changes the url→bucket map, bucketsPerWave the
+    // wave dirs (keyed by a wave's smallest bucket, so old and regrouped
+    // dirs would both reach the snapshot), dedup what a bucket's rows mean,
+    // and the schema what the staged input holds. A runId pins its input
+    // data by design: completed waves were extracted from the staged
+    // snapshot, so a resume must not mix in a drifted live input.
+    table.beginRun(cfg.runId, Map("num_buckets" -> cfg.numBuckets,
+      "buckets_per_wave" -> cfg.bucketsPerWave, "dedup" -> cfg.dedup.toString,
+      "schema" -> withBucket.schema.catalogString))
+
+    // FIXED wave partition of the full bucket range, never regrouped from
+    // the pending set: a wave is marked whole or not at all, so an unmarked
+    // wave re-runs whole into its own dir (Overwrite) and no row is counted
+    // twice
     val done = table.doneBuckets(cfg.runId)
-    // FIXED wave partition of the full bucket range — never regrouped from
-    // the pending set: a kill inside the per-bucket marker loop leaves a
-    // wave partially marked, and pending-based regrouping would shift wave
-    // boundaries so the old (fully-written) wave dir and the re-extracted
-    // shifted waves BOTH reach the snapshot, duplicating every unmarked
-    // bucket of the partial wave. With fixed chunks the partial wave re-runs
-    // WHOLE into the same wave dir (Overwrite), re-extracting its already-
-    // marked buckets (bounded: < one wave of wasted work) but never
-    // double-counting a row.
     val allWaves = (0 until cfg.numBuckets).grouped(cfg.bucketsPerWave).toVector
     val waves = allWaves.filter(_.exists(b => !done.contains(b)))
     val rerun = waves.flatten.toSet
-
-    // resume-config guard, staging or not: done-markers written under one
-    // (numBuckets, bucketsPerWave, dedup) are lies under another —
-    // numBuckets changes the url→bucket map, bucketsPerWave the wave dirs
-    // (keyed by a wave's smallest bucket, so a partial wave's old dir and
-    // the regrouped new ones would both reach the snapshot), dedup what a
-    // bucket's rows mean
-    val cfgFp: Map[String, Any] = Map("num_buckets" -> cfg.numBuckets,
-      "buckets_per_wave" -> cfg.bucketsPerWave, "dedup" -> cfg.dedup.toString)
-    val cfgFile = java.nio.file.Paths.get(cfg.root, "_checkpoint", cfg.runId, "CONFIG.json")
-    if (java.nio.file.Files.exists(cfgFile)) {
-      val prev = graft.core.Json.parse(new String(
-        java.nio.file.Files.readAllBytes(cfgFile), java.nio.charset.StandardCharsets.UTF_8))
-        .asInstanceOf[Map[String, Any]]
-      require(cfgFp.forall { case (k, v) => prev.get(k).map(String.valueOf).contains(String.valueOf(v)) },
-        s"resume of runId '${cfg.runId}' with a different config (recorded $prev vs " +
-          s"requested $cfgFp); use a new runId to run with a different configuration")
-    } else {
-      java.nio.file.Files.createDirectories(cfgFile.getParent)
-      java.nio.file.Files.write(cfgFile,
-        graft.core.Json.write(cfgFp).getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    }
 
     // stage once, prune per wave: the deduped, bucket-partitioned input is
     // written to parquet before the wave loop (skipped when a single wave
@@ -144,13 +133,9 @@ object ExtractJob {
     // extract from the same pinned input as the completed ones, not from a
     // possibly-drifted live input.
     val stageDir = s"${cfg.root}/_stage/${cfg.runId}"
-    val fpFile = java.nio.file.Paths.get(stageDir, "_FINGERPRINT.json")
-    // complete = data committed AND fingerprint present: a crash between
-    // the parquet job and the fingerprint write must re-stage, not accept
-    // an unverifiable staging as-is
-    def stagingComplete =
-      java.nio.file.Files.exists(java.nio.file.Paths.get(stageDir, "_SUCCESS")) &&
-        java.nio.file.Files.exists(fpFile)
+    // Spark writes _SUCCESS when the staging job commits, so a crash
+    // mid-staging re-stages; the run record already pinned the schema
+    val stagingComplete = java.nio.file.Files.exists(java.nio.file.Paths.get(stageDir, "_SUCCESS"))
     val staged = waves.length > 1 || stagingComplete
     val input = cfg.dedup match {
       // the job's one input exchange: every row of a bucket lands in one
@@ -159,32 +144,8 @@ object ExtractJob {
       case WindowDedup => latestPerUrl(withBucket.repartition($"_bucket"))
       case PostDedup => withBucket
     }
-    if (staged) {
-      // A runId pins its staged INPUT DATA immutably by design: completed
-      // buckets were extracted from the staged snapshot, so a resume must
-      // not silently mix a drifted live input mid-run. A resume whose
-      // staging SCHEMA disagrees fails loudly (numBuckets/dedup are
-      // already guarded by CONFIG.json above).
-      val fp: Map[String, Any] = Map(
-        "num_buckets" -> cfg.numBuckets,
-        "dedup" -> cfg.dedup.toString,
-        "schema" -> withBucket.schema.catalogString,
-      )
-      if (!stagingComplete) {
-        input.write.mode(SaveMode.Overwrite).partitionBy("_bucket").parquet(stageDir)
-        java.nio.file.Files.write(fpFile, graft.core.Json.write(fp).getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      } else {
-        val prev =
-          graft.core.Json.parse(new String(java.nio.file.Files.readAllBytes(fpFile), java.nio.charset.StandardCharsets.UTF_8))
-            .asInstanceOf[Map[String, Any]]
-        val same =
-          fp.forall { case (k, v) => prev.get(k).map(String.valueOf).contains(String.valueOf(v)) }
-        require(same,
-          s"resume of runId '${cfg.runId}' does not match its staged input at $stageDir " +
-            s"(staged $prev vs requested $fp); use a new runId (or delete the stage dir) " +
-            "to run with a different configuration")
-      }
-    }
+    if (staged && !stagingComplete)
+      input.write.mode(SaveMode.Overwrite).partitionBy("_bucket").parquet(stageDir)
     def waveInput(buckets: Seq[Int]): DataFrame =
       if (staged) {
         // only the wave's own bucket dirs (an empty bucket has none), so
@@ -220,29 +181,14 @@ object ExtractJob {
         case PostDedup => latestPerUrl(extracted.repartition($"_bucket"))
         case WindowDedup => extracted
       }
-      val (dataDir, lineageDir, lineageRows) =
-        table.writeUnit(results, s"${cfg.runId}/wave-$waveId", cfg.runId, waveId)
-      val stats = lineageRows.map(r => r.getAs[Int]("_bucket") -> r).toMap
-
-      // markers LAST — only now is the wave durable
-      waveBuckets.foreach { b =>
-        def n(field: String): Long = stats.get(b).fold(0L)(_.getAs[Long](field))
-        table.markDone(cfg.runId, b, Map(
-          "bucket" -> b, "run_id" -> cfg.runId, "wave" -> waveId,
-          "data_dir" -> dataDir, "lineage_dir" -> lineageDir,
-          "rows" -> n("rows"), "completed" -> n("completed"), "failed" -> n("failed"), "wall_ms" -> n("wall_ms"),
-        ))
-      }
+      table.commitWave(results, cfg.runId, waveId, waveBuckets)
       afterWave(waveIdx)
       waveIdx += 1
     }
 
-    // snapshot: union of data dirs recorded by ALL markers of this run
-    // (including waves committed by a previous killed attempt) — read
-    // through the table layer, which owns the marker layout
-    val markers = table.markers(cfg.runId)
-    val dataDirs = markers.map(m => String.valueOf(m("data_dir"))).distinct
-    val lineageDirs = markers.map(m => String.valueOf(m("lineage_dir"))).distinct
+    // snapshot: the dirs of ALL marked waves of this run (including waves
+    // committed by a previous killed attempt)
+    val (dataDirs, lineageDirs, totalRows) = table.committedUnits(cfg.runId)
     // resurrection: task ids are deterministic (name-UUID of the url), so
     // a re-extraction of a previously RETIRED url — on EITHER commit kind —
     // carries the same id its tombstone names; clear those tombstones or
@@ -259,7 +205,6 @@ object ExtractJob {
     // tombstone gone AND data gone, nothing left to rerun).
     // totalRows guards the zero-delta run, whose wave dirs carry only
     // _SUCCESS and would fail parquet schema inference.
-    val totalRows = markers.map(m => String.valueOf(m("rows")).toLong).sum
     if (dataDirs.nonEmpty && totalRows > 0) {
       val ts = table.tombstones
       if (ts.nonEmpty) {
@@ -275,12 +220,12 @@ object ExtractJob {
       if (cfg.appendSnapshot) table.appendCommit(dataDirs, lineageDirs, cfg.runId)
       else table.commitSnapshot(dataDirs, lineageDirs, cfg.runId)
 
-    // staging AND markers are scratch: drop both once the snapshot is
-    // durable. Stale markers would let a rerun of this runId after GC
-    // commit a snapshot of deleted dirs, and they shield this run's dirs
+    // staging AND checkpoint are scratch: drop both once the snapshot is
+    // durable. A stale checkpoint would let a rerun of this runId after GC
+    // commit a snapshot of deleted dirs, and it shields this run's dirs
     // from removeOrphans forever.
     table.deleteRecursively(java.nio.file.Paths.get(stageDir))
-    table.clearMarkers(cfg.runId)
+    table.endRun(cfg.runId)
 
     Report(snapId, waves.length, cfg.numBuckets - rerun.size, rerun.size)
   }

@@ -140,13 +140,11 @@ object CurationQueries {
     * any scale. Output is the per-source audit: totals, sampled count,
     * and an exact digest (sum/min/max) of the sampled id set. */
   def qSampleStratified(spark: SparkSession, dir: String): DataFrame = {
-    val md5ModUdf = udf((id: Long) =>
-      java.lang.Long.remainderUnsigned(DuckHash.md5NumberLower(id.toString), 100L))
     val tier = substring(col("source"), 4, 10).cast("int")
     val rate = when(tier < 5, 10).when(tier < 10, 25).when(tier < 15, 50).otherwise(80)
     docs(spark, dir)
       .select(col("doc_id"), col("source"), tier.as("tier"), rate.as("rate"),
-        (md5ModUdf(col("doc_id")) < rate).as("sampled"))
+        (md5Mod(col("doc_id"), 100L) < rate).as("sampled"))
       .groupBy(col("source"), col("tier"), col("rate"))
       .agg(
         count(lit(1)).as("n_total"),
@@ -185,11 +183,9 @@ object CurationQueries {
         floor(sqrt(col("tok_min").cast("double") / col("tok_s").cast("double")) * 1000000d + 0.5d)
           .cast("long"))
       .drop("tok_min")
-    val md5ModUdf = udf((id: Long) =>
-      java.lang.Long.remainderUnsigned(DuckHash.md5NumberLower(id.toString), 1000000L))
     d.join(broadcast(rates), "source")
       .select(col("source"), col("tok_s"), col("rate_q"),
-        (md5ModUdf(col("doc_id")) < col("rate_q")).as("kept"), col("doc_id"))
+        (md5Mod(col("doc_id"), 1000000L) < col("rate_q")).as("kept"), col("doc_id"))
       .groupBy(col("source"), col("tok_s"), col("rate_q"))
       .agg(
         count(lit(1)).as("n_total"),
@@ -575,8 +571,7 @@ object CurationQueries {
     val uni = ws.select(explode(col("w")).as("w1"))
       .groupBy(col("w1")).agg(count(lit(1)).as("cu"))
     val bg = ws.where(size(col("w")) >= 2)
-      .select(col("doc_id"), explode(expr(
-        "transform(sequence(1, size(w) - 1), i -> struct(element_at(w, i) AS w1, element_at(w, i + 1) AS w2))")).as("e"))
+      .select(col("doc_id"), explode(adjacentPairs("w")).as("e"))
       .select(col("doc_id"), col("e.w1").as("w1"), col("e.w2").as("w2"))
     val bgc = bg.groupBy(col("w1"), col("w2")).agg(count(lit(1)).as("cb"))
     val scored = bg.join(bgc, Seq("w1", "w2")).join(uni, Seq("w1"))
@@ -722,8 +717,7 @@ object CurationQueries {
       .na.fill(0L, Seq("c"))
     val totals = model0.groupBy(col("label")).agg(sum(col("c")).as("total_l"))
     val model = model0.join(totals, Seq("label"))
-      .withColumn("weight",
-        expr(s"length(bin(((c + 1) * 1073741824) div (total_l + $vocabSize))) - 1"))
+      .withColumn("weight", ilog2Weight("c", "total_l", vocabSize))
       .select(col("label"), col("word"), col("weight"))
     // N = Σ_label n_docs_l, a whole-frame total of the L-row labels
     // aggregate (every doc has exactly one label row)
@@ -1520,9 +1514,7 @@ object CurationQueries {
       .join(ct, Seq("b"), "left").join(cr, Seq("b"), "left")
       .na.fill(0L, Seq("ct", "cr"))
     val weights = withTotals(counts)(sum(col("ct")).as("tt"), sum(col("cr")).as("tr"))
-      .withColumn("lw", expr(
-        s"(length(bin(((ct + 1) * 1073741824) div (tt + $B))) - 1)" +
-        s" - (length(bin(((cr + 1) * 1073741824) div (tr + $B))) - 1)"))
+      .withColumn("lw", ilog2Weight("ct", "tt", B) - ilog2Weight("cr", "tr", B))
       .select(col("b"), col("lw"))
     tf.join(broadcast(weights), "b")
       .groupBy(col("doc_id"), col("source"))

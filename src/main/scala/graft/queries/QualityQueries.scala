@@ -122,8 +122,7 @@ object QualityQueries {
       count(lit(1)).as("n_distinct"),
       max(col("c")).as("top_word_cnt"))
     val bc = w.where(size(col("wl")) >= 2)
-      .select(col("doc_id"), explode(expr(
-        "transform(sequence(1, size(wl) - 1), i -> struct(element_at(wl, i) AS w1, element_at(wl, i + 1) AS w2))")).as("e"))
+      .select(col("doc_id"), explode(adjacentPairs("wl")).as("e"))
       .groupBy(col("doc_id"), col("e.w1"), col("e.w2")).agg(count(lit(1)).as("c"))
     val p2 = bc.groupBy(col("doc_id")).agg(
       sum(col("c")).as("n_bigrams"),

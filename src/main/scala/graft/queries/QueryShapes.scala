@@ -1,5 +1,6 @@
 package graft.queries
 
+import graft.core.DuckHash
 import java.util.Locale
 import java.util.regex.Pattern
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -7,7 +8,8 @@ import org.apache.spark.sql.functions._
 
 /** The query shapes the query families share, each defined once: what a
   * word is (Column and JVM forms), the documents reader, whole-frame
-  * totals, the every-document join, the guarded ratio and the eager
+  * totals, the every-document join, the guarded ratio, the adjacent
+  * word pairs, the md5-mod draw, the ilog2 weight and the eager
   * checkpoint. The DuckDB oracles pin each shape's tokenization and
   * arithmetic, and a change here changes the plan of every query built
   * from the shape: `scripts/plan_diff.py` over two `PlanDump` runs lists
@@ -49,6 +51,25 @@ private[graft] object QueryShapes {
     * precompiled `\s+`, empties dropped. */
   def wordArray(text: String): Array[String] =
     Ws.split(text.toLowerCase(Locale.ROOT)).filter(_.nonEmpty)
+
+  /** The adjacent word pairs of the word array column `arr`, as
+    * `struct(w1, w2)`s in order; call it where `size(arr) >= 2`. */
+  def adjacentPairs(arr: String): Column = expr(
+    s"transform(sequence(1, size($arr) - 1), i -> struct(element_at($arr, i) AS w1, element_at($arr, i + 1) AS w2))")
+
+  // ------------------------------------------------------------ arithmetic
+
+  /** `md5(id) mod m` of the id column `id` (a long), through DuckDB's
+    * `md5_number_lower` — the deterministic, engine-independent draw of
+    * the md5-mod acceptance samplers. */
+  def md5Mod(id: Column, m: Long): Column =
+    udf((v: Long) => java.lang.Long.remainderUnsigned(DuckHash.md5NumberLower(v.toString), m)).apply(id)
+
+  /** The smoothed integer log weight ilog2(((c + 1) · 2^30) div (total + v))
+    * over the count column `c` and total column `total`, with ilog2(x) =
+    * `length(bin(x)) - 1`: integer arithmetic, so both engines agree. */
+  def ilog2Weight(c: String, total: String, v: Long): Column =
+    expr(s"length(bin((($c + 1) * 1073741824) div ($total + $v))) - 1")
 
   // ----------------------------------------------------------- frame shapes
 

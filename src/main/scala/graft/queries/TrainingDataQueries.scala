@@ -671,7 +671,7 @@ object TrainingDataQueries {
       val probeLists = medoids
         .map { case (id, m) => (id, cosineQ(scala.collection.immutable.ArraySeq.unsafeWrapArray(m), probeSeq)) }
         .sortBy { case (id, c) => (-c, id) }
-        .take(nProbe).map(_._1)
+        .take(nProbe).map(_._1).toSeq
       e.withColumn("list_id", assignUdf(col("embedding")))
         .where(col("vec_id") =!= 0 && col("list_id").isin(probeLists: _*))
         .select(col("vec_id"),

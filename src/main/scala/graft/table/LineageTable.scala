@@ -8,16 +8,17 @@ import scala.jdk.CollectionConverters._
 
 /** Iceberg-style table layer built from scratch (no Iceberg runtime offline
   * — SURVEY.md §7.0): Parquet data files + JSON snapshot manifests + atomic
-  * CURRENT pointer + per-bucket checkpoint markers + lineage rows.
+  * CURRENT pointer + per-wave checkpoint markers + lineage rows.
   *
   * Semantics delivered (the north rule's storage contract):
   *  - **snapshot isolation**: readers list files from the CURRENT snapshot
   *    only; a crashed writer never corrupts a reader's view (manifest is
   *    written to a temp file and atomically renamed);
   *  - **resumable commits**: work is partitioned into deterministic url-hash
-  *    buckets (never Spark task ids); each committed wave writes per-bucket
-  *    marker files; a rerun of the same run id skips buckets with markers —
-  *    a killed job never re-extracts completed partitions;
+  *    buckets (never Spark task ids), committed in waves; a run records its
+  *    config once and each committed wave writes one marker naming its
+  *    buckets; a rerun of the same run id checks the record and skips the
+  *    marked waves — a killed job never re-extracts completed partitions;
   *  - **per-partition lineage**: every bucket commit records (run_id,
   *    bucket, rows, failed, wall_ms) — the analog of the reference's task
   *    bookkeeping (app/tasks.py:106-122) and the data behind StatsResponse
@@ -32,7 +33,9 @@ import scala.jdk.CollectionConverters._
   *   root/
   *     data/<dir>/_bucket=<b>/ ... .parquet    bucket-partitioned data files
   *     lineage/<dir>/ ... .parquet             lineage rows per writeUnit
-  *     _checkpoint/<runId>/done-<b>.json     per-bucket commit markers
+  *     _checkpoint/<runId>/CONFIG.json       run record, checked on resume
+  *     _checkpoint/<runId>/wave-<id>.json    per-wave marker: buckets, rows
+  *     _stage/<runId>/_bucket=<b>/ ...       a run's staged input (ExtractJob)
   *     _manifests/snapshot-<n>.json          file list + lineage pointers
   *     _manifests/CURRENT                    atomic pointer ("n")
   * }}}
@@ -61,43 +64,76 @@ final class LineageTable(val root: String, val numBuckets: Int = 64) {
 
   // ------------------------------------------------------------ checkpoint
 
-  def doneBuckets(runId: String): Set[Int] = {
-    val dir = p("_checkpoint", runId)
-    if (!Files.isDirectory(dir)) return Set.empty
-    scala.util.Using.resource(Files.list(dir)) { files =>
-      files.iterator().asScala
-        .map(_.getFileName.toString)
-        .collect { case s if s.startsWith("done-") && s.endsWith(".json") =>
-          s.stripPrefix("done-").stripSuffix(".json").toInt
-        }.toSet
+  // The resume state of one run is two kinds of file under
+  // _checkpoint/<runId>/, both written atomically and read only here: the
+  // run record CONFIG.json (see beginRun) and one wave-<id>.json per
+  // committed wave (see commitWave). A wave is marked whole or not at all.
+
+  private def checkpointDir(runId: String): Path = p("_checkpoint", runId)
+
+  /** Start or resume run `runId`. The first start writes `record` (what
+    * the run's committed waves mean: bucket count, wave size, dedup, input
+    * schema) as the run record; a resume requires the recorded one to hold
+    * the same value for every key of `record`, and fails loudly otherwise. */
+  def beginRun(runId: String, record: Map[String, Any]): Unit = {
+    val f = checkpointDir(runId).resolve("CONFIG.json")
+    if (Files.exists(f)) {
+      val prev = readJson(f).asInstanceOf[Map[String, Any]]
+      require(record.forall { case (k, v) => prev.get(k).map(String.valueOf).contains(String.valueOf(v)) },
+        s"resume of runId '$runId' with a different config (recorded $prev vs requested $record); " +
+          "use a new runId to run with a different configuration")
+    } else {
+      Files.createDirectories(f.getParent)
+      atomicWrite(f, Json.write(record))
     }
   }
 
-  def markDone(runId: String, bucket: Int, lineage: Map[String, Any]): Unit = {
-    val dir = p("_checkpoint", runId)
-    Files.createDirectories(dir)
-    atomicWrite(dir.resolve(s"done-$bucket.json"), Json.write(lineage))
+  /** The commit unit of wave `wave` of run `runId` (see [[unitDirs]]). */
+  private def waveUnit(runId: String, wave: Int): String = s"$runId/wave-$wave"
+
+  /** Write wave `wave` of run `runId` through [[writeUnit]], then mark it
+    * committed: one `wave-<id>.json` with its buckets and row count (from
+    * the lineage rows writeUnit collected). The marker comes last, so a
+    * kill before it leaves the wave unmarked and a resume reruns it whole
+    * into the same dirs (Overwrite). Needs [[beginRun]] first. */
+  def commitWave(results: DataFrame, runId: String, wave: Int, buckets: Seq[Int]): Unit = {
+    val (_, _, lineage) = writeUnit(results, waveUnit(runId, wave), runId, wave)
+    atomicWrite(checkpointDir(runId).resolve(s"wave-$wave.json"),
+      Json.write(Map("buckets" -> buckets, "rows" -> lineage.map(_.getAs[Long]("rows")).sum)))
   }
 
-  /** The raw resume-marker maps of a run, in bucket order — the layer owns
-    * the marker layout, so snapshot assembly (ExtractJob) reads through
-    * here instead of hardcoding paths. */
-  def markers(runId: String): Seq[Map[String, Any]] = {
-    val dir = p("_checkpoint", runId)
-    doneBuckets(runId).toSeq.sorted.flatMap { b =>
-      val f = dir.resolve(s"done-$b.json")
-      if (Files.exists(f))
-        Some(Json.parse(new String(Files.readAllBytes(f), UTF_8)).asInstanceOf[Map[String, Any]])
-      else None
-    }
+  /** The committed waves of a run, in wave order. */
+  private def waves(runId: String): Seq[LineageTable.Wave] = {
+    val dir = checkpointDir(runId)
+    if (!Files.isDirectory(dir)) return Nil
+    scala.util.Using.resource(Files.list(dir))(_.iterator().asScala.toVector).flatMap { f =>
+      val n = f.getFileName.toString
+      if (!n.startsWith("wave-") || !n.endsWith(".json")) None
+      else {
+        val m = readJson(f).asInstanceOf[Map[String, Any]]
+        Some(LineageTable.Wave(n.stripPrefix("wave-").stripSuffix(".json").toInt,
+          listField(m, "buckets").map(_.toInt), jsonNum(m("rows")).toLong))
+      }
+    }.sortBy(_.id)
   }
 
-  /** Drop a run's resume markers (call once its snapshot is durable):
-    * stale markers would let a rerun of the same runId after GC commit a
-    * snapshot referencing deleted dirs, and they shield the run's dirs
+  /** Buckets of the run's committed waves. */
+  def doneBuckets(runId: String): Set[Int] = waves(runId).flatMap(_.buckets).toSet
+
+  /** What the run's committed waves, including those of a killed earlier
+    * attempt, add up to: their data dirs, lineage dirs and total rows. */
+  def committedUnits(runId: String): (Seq[String], Seq[String], Long) = {
+    val ws = waves(runId)
+    val dirs = ws.map(w => unitDirs(waveUnit(runId, w.id)))
+    (dirs.map(_._1), dirs.map(_._2), ws.map(_.rows).sum)
+  }
+
+  /** Drop a run's resume state (call once its snapshot is durable): a
+    * stale one would let a rerun of the same runId after GC commit a
+    * snapshot referencing deleted dirs, and it shields the run's dirs
     * from [[removeOrphans]] forever. */
-  def clearMarkers(runId: String): Unit =
-    deleteRecursively(p("_checkpoint", runId))
+  def endRun(runId: String): Unit =
+    deleteRecursively(checkpointDir(runId))
 
   // -------------------------------------------------------------- snapshot
 
@@ -107,8 +143,7 @@ final class LineageTable(val root: String, val numBuckets: Int = 64) {
   }
 
   def snapshot(id: Long): Map[String, Any] =
-    Json.parse(new String(Files.readAllBytes(p("_manifests", s"snapshot-$id.json")), UTF_8))
-      .asInstanceOf[Map[String, Any]]
+    readJson(p("_manifests", s"snapshot-$id.json")).asInstanceOf[Map[String, Any]]
 
   /** Manifest field `key`, a JSON list, as strings. */
   private def listField(m: Map[String, Any], key: String): List[String] =
@@ -238,8 +273,7 @@ final class LineageTable(val root: String, val numBuckets: Int = 64) {
   def addedColumns: Seq[(String, String, String)] = {
     val f = p("_manifests", "SCHEMA")
     if (!Files.exists(f)) Nil
-    else Json.parse(new String(Files.readAllBytes(f), UTF_8))
-      .asInstanceOf[List[Any]].map { e =>
+    else readJson(f).asInstanceOf[List[Any]].map { e =>
         val m = e.asInstanceOf[Map[String, Any]]
         (String.valueOf(m("name")), String.valueOf(m("type")), String.valueOf(m("default")))
       }
@@ -270,8 +304,7 @@ final class LineageTable(val root: String, val numBuckets: Int = 64) {
 
   private[table] def recordedEpochs: Map[String, Int] =
     if (!Files.exists(epochsPath)) Map.empty
-    else Json.parse(new String(Files.readAllBytes(epochsPath), UTF_8))
-      .asInstanceOf[Map[String, Any]]
+    else readJson(epochsPath).asInstanceOf[Map[String, Any]]
       .map { case (d, v) => d -> jsonNum(v).toInt }
 
   /** Record the current schema version as the epoch of any dir not seen
@@ -540,8 +573,7 @@ final class LineageTable(val root: String, val numBuckets: Int = 64) {
   def tombstones: Set[String] = {
     val f = p("_manifests", "TOMBSTONES")
     if (!Files.exists(f)) Set.empty
-    else graft.core.Json.parse(new String(Files.readAllBytes(f), UTF_8))
-      .asInstanceOf[List[Any]].map(String.valueOf).toSet
+    else readJson(f).asInstanceOf[List[Any]].map(String.valueOf).toSet
   }
 
   /** Results with tombstoned tasks filtered (the user-facing read). */
@@ -554,6 +586,9 @@ final class LineageTable(val root: String, val numBuckets: Int = 64) {
 
   // ---------------------------------------------------------- commit unit
 
+  /** Where the commit unit `dir` lives: its data dir and its lineage dir. */
+  private def unitDirs(dir: String): (String, String) = (s"$root/data/$dir", s"$root/lineage/$dir")
+
   /** THE commit-unit write of every writer (job wave, stream micro-batch,
     * compaction), so layout and lineage schema cannot drift between them:
     * `results` partitioned by `_bucket` to `root/data/<dir>`, read back
@@ -561,11 +596,10 @@ final class LineageTable(val root: String, val numBuckets: Int = 64) {
     * aggregated once and collected, then written as one file to
     * `root/lineage/<dir>`. Each task writes one file per bucket it holds, so
     * callers whose rows are not bucket-aligned add `repartition(_bucket)`.
-    * Callers commit (markers, manifest) from the returned dirs and rows. */
+    * Callers commit (wave marker, manifest) from the returned dirs and rows. */
   def writeUnit(results: DataFrame, dir: String, runId: String, wave: Long): (String, String, Array[Row]) = {
     val spark = results.sparkSession
-    val dataDir = s"$root/data/$dir"
-    val lineageDir = s"$root/lineage/$dir"
+    val (dataDir, lineageDir) = unitDirs(dir)
     results.write.mode(SaveMode.Overwrite).partitionBy("_bucket").parquet(dataDir)
     val lineage = LineageTable.lineageFor(spark.read.schema(results.schema).parquet(dataDir), runId, wave)
     val rows = lineage.collect()
@@ -675,75 +709,48 @@ final class LineageTable(val root: String, val numBuckets: Int = 64) {
     deleted
   }
 
-  /** Delete data/lineage dirs referenced by NO retained manifest and NO
-    * resume marker, older than `olderThanMs` (Iceberg remove_orphan_files
-    * analog). Crash windows leak such dirs — e.g. compact() dies between
-    * writing its full-table copy and committing the manifest (LASTID
-    * advanced, manifest never written): no snapshot ever references the
-    * dir, so expireSnapshots can never find it, and crash loops accumulate
-    * table-sized copies. Resume-marker dirs are NOT orphans: a killed
-    * ExtractJob's committed buckets live in marker-referenced dirs until
-    * the next wave commit, and deleting them would make resume skip
-    * re-extraction with the data gone. Age guard + single-writer
+  /** Delete data/lineage dirs referenced by NO retained manifest, older
+    * than `olderThanMs` (Iceberg remove_orphan_files analog), and staged
+    * inputs of abandoned runs. Crash windows leak such dirs — e.g.
+    * compact() dies between writing its full-table copy and committing the
+    * manifest (LASTID advanced, manifest never written): no snapshot ever
+    * references the dir, so expireSnapshots can never find it, and crash
+    * loops accumulate table-sized copies. A resumable run's dirs are NOT
+    * orphans: while `_checkpoint/<x>` exists, `data/<x>`, `lineage/<x>`
+    * and `_stage/<x>` are spared — a killed ExtractJob's committed waves
+    * live there until its final commit (deleting them would make resume
+    * skip re-extraction with the data gone), and its staging pins its
+    * input for the resume. A finished run's staging is deleted by the job
+    * itself, so an unspared one is pure leak. Age guard + single-writer
     * discipline: run only while nothing is writing the table. */
   def removeOrphans(olderThanMs: Long, nowMs: Long = System.currentTimeMillis()): Int = withWriterLock {
-    val referenced = snapshotIds.flatMap(dirsOf).toSet ++ markerDirs
+    val referenced = snapshotIds.flatMap(dirsOf).toSet
     // referenced paths may be NESTED under a listed child (writeUnit's
     // <runId>/wave-N dirs of ExtractJob vs the flat <runId> of compact/
     // streaming) — a child is protected if any referenced path equals it
     // OR lives inside it; exact-match alone would delete a whole run tree
     // whose wave dirs the CURRENT snapshot references
-    def covered(child: String): Boolean =
-      referenced.exists(r => r == child || r.startsWith(child + "/"))
+    def covered(child: Path): Boolean =
+      Files.isDirectory(checkpointDir(child.getFileName.toString)) ||
+        referenced.exists(r => r == child.toString || r.startsWith(child.toString + "/"))
     var n = 0
-    Seq("data", "lineage").foreach { kind =>
+    Seq("data", "lineage", "_stage").foreach { kind =>
       val base = p(kind)
       if (Files.isDirectory(base)) {
         val children = scala.util.Using.resource(Files.list(base))(_.iterator().asScala.toVector)
         children.foreach { d =>
-          if (!covered(d.toString) &&
-              Files.getLastModifiedTime(d).toMillis < nowMs - olderThanMs) {
+          if (!covered(d) && Files.getLastModifiedTime(d).toMillis < nowMs - olderThanMs) {
             deleteRecursively(d); n += 1
           }
-        }
-      }
-    }
-    // staged-input copies: scratch for a single runId, deleted by the job
-    // itself on success — an ABANDONED run's staging (no resume markers
-    // left) is pure leak; a resumable run (markers present) keeps its
-    // staging, which pins its input immutably for the resume
-    val stageBase = p("_stage")
-    if (Files.isDirectory(stageBase)) {
-      val children = scala.util.Using.resource(Files.list(stageBase))(_.iterator().asScala.toVector)
-      children.foreach { d =>
-        val runId = d.getFileName.toString
-        if (!Files.isDirectory(p("_checkpoint", runId)) &&
-            Files.getLastModifiedTime(d).toMillis < nowMs - olderThanMs) {
-          deleteRecursively(d); n += 1
         }
       }
     }
     n
   }
 
-  /** data/lineage dirs referenced by resume markers of any run. */
-  private def markerDirs: Set[String] = {
-    val base = p("_checkpoint")
-    if (!Files.isDirectory(base)) return Set.empty
-    val runs = scala.util.Using.resource(Files.list(base))(_.iterator().asScala.toVector)
-    runs.flatMap { run =>
-      if (!Files.isDirectory(run)) Nil
-      else scala.util.Using.resource(Files.list(run))(_.iterator().asScala.toVector)
-        .filter(_.getFileName.toString.endsWith(".json"))
-        .flatMap { f =>
-          val m = Json.parse(new String(Files.readAllBytes(f), UTF_8))
-            .asInstanceOf[Map[String, Any]]
-          Seq("data_dir", "lineage_dir").flatMap(k => m.get(k).map(String.valueOf))
-        }
-    }.toSet
-  }
-
   // ---------------------------------------------------------------- util
+
+  private def readJson(f: Path): Any = Json.parse(Files.readString(f))
 
   private def atomicWrite(target: Path, content: String): Unit = {
     val tmp = target.resolveSibling(target.getFileName.toString + ".tmp")
@@ -774,6 +781,9 @@ object LineageTable {
     * tombstoneLock alone — so the pair cannot deadlock. */
   private[table] def writerLock(root: String): Object =
     writerLocks.computeIfAbsent(root, _ => new Object)
+
+  /** One committed wave of a resumable run: its id, buckets and rows. */
+  private final case class Wave(id: Int, buckets: Seq[Int], rows: Long)
 
   /** The lineage-row aggregation over a written data dir, for writeUnit. */
   private[table] def lineageFor(written: DataFrame, runId: String, wave: Long): DataFrame = {

@@ -1,7 +1,7 @@
 package graft.tools
 
 import graft.model.{ConversionOptions, Page}
-import graft.pipeline.{ExtractKernel, GraftSession, Skew}
+import graft.pipeline.{ExtractKernel, GraftSession}
 
 /** Two-cluster-size scaling evidence (north rule: throughput scaling
   * efficiency ≥ 0.8 from N to 4N executors; no real cluster in this

@@ -322,8 +322,7 @@ class ResumeSpec extends AnyFunSuite with TempRoots {
     // its buckets are marked — the state pending-based wave regrouping
     // turned into duplicated rows (shifted waves + the old full wave dir)
     val table = new LineageTable(root, 16)
-    Files.delete(java.nio.file.Paths.get(root, "_checkpoint", "runM", "done-6.json"))
-    Files.delete(java.nio.file.Paths.get(root, "_checkpoint", "runM", "done-7.json"))
+    Files.delete(java.nio.file.Paths.get(root, "_checkpoint", "runM", "wave-4.json"))
     val report = ExtractJob.run(spark, pagesDs, cfg)
     // the partial wave (4..7) re-runs WHOLE; waves 2-3 also run
     assert(report.bucketsRun == 12 && report.bucketsSkipped == 4, report.toString)
@@ -343,7 +342,7 @@ class ResumeSpec extends AnyFunSuite with TempRoots {
     // wave-0 (buckets 0..7) is fully written but only 0..3 are marked;
     // regrouped by 4, buckets 4..7 would re-run into a new wave-4 dir while
     // the markers of 0..3 still name wave-0's dir, so both reach the snapshot
-    (4 to 7).foreach(b => Files.delete(java.nio.file.Paths.get(root, "_checkpoint", "runW", s"done-$b.json")))
+    Files.delete(java.nio.file.Paths.get(root, "_checkpoint", "runW", "wave-0.json"))
     val ex = intercept[IllegalArgumentException] {
       ExtractJob.run(spark, pagesDs, cfg.copy(bucketsPerWave = 4))
     }
@@ -353,6 +352,41 @@ class ResumeSpec extends AnyFunSuite with TempRoots {
     assert(report.bucketsRun == 16 && report.bucketsSkipped == 0, report.toString)
     val df = new LineageTable(root, 16).read(spark)
     assert(df.count() == pagesDs.select("url").distinct().count(), "duplicated rows")
+  }
+
+  test("resume with a different input schema than the run record fails loudly") {
+    val s = spark
+    import s.implicits._
+    val root = freshRoot()
+    val cfg = ExtractJob.Config(root, runId = "runS", numBuckets = 16, bucketsPerWave = 4)
+    final class Kill extends RuntimeException("simulated kill")
+    intercept[Kill] {
+      ExtractJob.run(spark, pagesDs, cfg, afterWave = w => if (w == 0) throw new Kill)
+    }
+    // an extra input column: the staged input no longer matches what the
+    // committed wave was extracted from
+    val wider = pagesDs.withColumn("crawl", org.apache.spark.sql.functions.lit("B")).as[graft.model.Page]
+    val ex = intercept[IllegalArgumentException](ExtractJob.run(spark, wider, cfg))
+    assert(ex.getMessage.contains("different config"), ex.getMessage)
+    // the recorded schema resumes
+    val report = ExtractJob.run(spark, pagesDs, cfg)
+    assert(report.bucketsSkipped == 4 && report.bucketsRun == 12, report.toString)
+  }
+
+  test("checkpoint layout: a run record and one marker per committed wave, dropped after the commit") {
+    val root = freshRoot()
+    val cfg = ExtractJob.Config(root, runId = "runK", numBuckets = 16, bucketsPerWave = 4)
+    final class Kill extends RuntimeException("simulated kill")
+    intercept[Kill] {
+      ExtractJob.run(spark, pagesDs, cfg, afterWave = w => if (w == 1) throw new Kill)
+    }
+    val ckpt = java.nio.file.Paths.get(root, "_checkpoint", "runK")
+    assert(children(ckpt).map(_.getFileName.toString) == Seq("CONFIG.json", "wave-0.json", "wave-4.json"))
+    val stage = java.nio.file.Paths.get(root, "_stage", "runK")
+    assert(Files.exists(stage.resolve("_SUCCESS")))
+    assert(!Files.exists(stage.resolve("_FINGERPRINT.json")))
+    ExtractJob.run(spark, pagesDs, cfg)
+    assert(!Files.exists(ckpt), "a completed run leaves no checkpoint")
   }
 
   test("each committed bucket is one parquet file, staged or not, under both dedup strategies") {

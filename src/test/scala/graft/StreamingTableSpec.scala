@@ -166,7 +166,7 @@ class StreamingTableSpec extends AnyFunSuite with TempRoots {
     // marker-referenced dir of a killed (resumable) run: NOT an orphan
     val resumable = java.nio.file.Paths.get(root, "data", "killed-run")
     Files.createDirectories(resumable)
-    table.markDone("killed-run", 0, Map("data_dir" -> resumable.toString, "lineage_dir" -> ""))
+    table.beginRun("killed-run", Map("num_buckets" -> 4))
     val removed = table.removeOrphans(olderThanMs = 0L,
       nowMs = System.currentTimeMillis() + 1000000L)
     assert(removed == 1, s"expected exactly the crash-leaked dir removed, got $removed")
