@@ -5,6 +5,10 @@ import graft.table.LineageTable
 import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import java.util.concurrent.Executors
+import java.util.concurrent.atomic.AtomicBoolean
+import scala.concurrent.{Await, ExecutionContext, Future}
+import scala.concurrent.duration.Duration
 
 /** The resumable extraction job: pages → (latest-crawl dedup) → deterministic
   * url-hash buckets → per-wave extract + commit → snapshot.
@@ -16,12 +20,23 @@ import org.apache.spark.sql.functions._
   *  - the run starts with [[LineageTable.beginRun]]: the table records the
   *    run's config (bucket count, wave size, dedup, input schema), and a
   *    resume with another config fails loudly;
-  *  - [[LineageTable.commitWave]] writes a wave's results parquet
-  *    (partitioned by bucket for downstream partition pruning), then its
-  *    lineage parquet, then one marker for the wave — marker last, so a
-  *    crash mid-wave leaves no marker and the rerun redoes the whole wave
-  *    (at-least-once, idempotent because output paths are keyed by wave id
-  *    and overwritten);
+  *  - [[LineageTable.writeWave]] writes a wave's results parquet
+  *    (partitioned by bucket for downstream partition pruning) and its
+  *    lineage record, counted by that same write; then
+  *    [[LineageTable.markWave]] writes one marker for the wave — marker
+  *    last, so a crash mid-wave leaves no marker and the rerun redoes the
+  *    whole wave (at-least-once, idempotent because output paths are keyed
+  *    by wave id and overwritten);
+  *  - waves are pipelined: two wave writes are in flight at once (each on a
+  *    driver thread of its own, in the run's job group), so the next wave's
+  *    tasks fill the cores the current wave's last tasks and commit leave
+  *    idle; the FIFO scheduler keeps the earlier wave's tasks first. Markers
+  *    are still written in wave order, after each write returns, and then
+  *    `afterWave` runs. On any failure, `afterWave`'s included, queued waves
+  *    never start, the job group is cancelled and every in-flight write is
+  *    awaited, so nothing writes to the table once `run` has thrown. A kill
+  *    leaves at most the two in-flight waves unmarked, and the resume reruns
+  *    them whole;
   *  - rerunning the same (table, runId) skips all marked waves: a killed
   *    job never re-extracts completed partitions;
   *  - after the last wave, a snapshot of the marked waves' dirs is
@@ -85,6 +100,22 @@ object ExtractJob {
   /** Hook for tests: invoked after each committed wave (wave index). */
   type WaveHook = Int => Unit
 
+  /** Wave writes in flight at once: the current wave and the next. */
+  private val PipelinedWaves = 2
+
+  /** Block until no task of job group `group` runs. A cancelled job fails
+    * at once, but each of its running tasks stops only at its next row and
+    * then deletes its files; waiting for that keeps a failed run from
+    * touching the table after it has thrown. Bounded, since the count comes
+    * from Spark's asynchronous status store. */
+  private def awaitTasks(spark: SparkSession, group: String): Unit = {
+    val st = spark.sparkContext.statusTracker
+    def running: Boolean = st.getJobIdsForGroup(group).iterator.flatMap(st.getJobInfo(_))
+      .flatMap(_.stageIds).flatMap(st.getStageInfo(_)).exists(_.numActiveTasks > 0)
+    val deadline = System.nanoTime() + 120L * 1000 * 1000 * 1000
+    while (running && System.nanoTime() < deadline) Thread.sleep(10)
+  }
+
   def run(spark: SparkSession, pages: Dataset[Page], cfg: Config, afterWave: WaveHook = _ => ()): Report = {
     import spark.implicits._
     val table = new LineageTable(cfg.root, cfg.numBuckets)
@@ -112,8 +143,8 @@ object ExtractJob {
 
     // FIXED wave partition of the full bucket range, never regrouped from
     // the pending set: a wave is marked whole or not at all, so an unmarked
-    // wave re-runs whole into its own dir (Overwrite) and no row is counted
-    // twice
+    // wave (a kill leaves at most the two in flight unmarked) re-runs whole
+    // into its own dir (Overwrite) and no row is counted twice
     val done = table.doneBuckets(cfg.runId)
     val allWaves = (0 until cfg.numBuckets).grouped(cfg.bucketsPerWave).toVector
     val waves = allWaves.filter(_.exists(b => !done.contains(b)))
@@ -156,9 +187,7 @@ object ExtractJob {
         spark.read.schema(withBucket.schema).option("basePath", stageDir).parquet(dirs: _*)
       } else input.where($"_bucket".isin(buckets: _*))
 
-    var waveIdx = 0
-    waves.foreach { waveBuckets =>
-      val waveId = waveBuckets.min // stable wave id = smallest bucket in it
+    def waveResults(waveBuckets: Seq[Int]): DataFrame = {
       val subset = waveInput(waveBuckets)
         .select($"url", $"warc_ts", $"html", $"text", $"lang")
         .as[Page]
@@ -174,17 +203,47 @@ object ExtractJob {
       // of this plan above 4 cores is unmeasured.
       val extracted = ExtractKernel.extract(subset, cfg.options, cfg.timeoutMs)(spark)
         .withColumn("_bucket", LineageTable.bucketCol($"url", cfg.numBuckets))
-      val results = cfg.dedup match {
+      cfg.dedup match {
         // duplicates of a url always share its bucket, so per-wave window
         // dedup over results is exact — and its one exchange moves only
         // extracted output, never raw payloads
         case PostDedup => latestPerUrl(extracted.repartition($"_bucket"))
         case WindowDedup => extracted
       }
-      table.commitWave(results, cfg.runId, waveId, waveBuckets)
-      afterWave(waveIdx)
-      waveIdx += 1
     }
+
+    // stable wave id = smallest bucket in it; frames are built here, on the
+    // calling thread, and only their writes run in the pool
+    val writes = waves.map(b => (b.min, b, waveResults(b)))
+    val sc = spark.sparkContext
+    val group = s"extract-${cfg.runId}-${java.util.UUID.randomUUID()}"
+    val stopped = new AtomicBoolean(false)
+    val pool = Executors.newFixedThreadPool(PipelinedWaves)
+    try {
+      val ec = ExecutionContext.fromExecutor(pool)
+      // queued in wave order; a wave that starts after a failure writes nothing
+      val inFlight = writes.map { case (waveId, _, results) =>
+        Future {
+          if (stopped.get) 0L
+          else {
+            sc.setJobGroup(group, s"${cfg.runId} wave $waveId", interruptOnCancel = false)
+            try table.writeWave(results, cfg.runId, waveId) finally sc.clearJobGroup()
+          }
+        }(ec)
+      }
+      def await(f: Future[Long]): Long = Await.result(f, Duration.Inf)
+      try writes.zip(inFlight).zipWithIndex.foreach { case (((waveId, waveBuckets, _), f), i) =>
+        table.markWave(cfg.runId, waveId, waveBuckets, await(f))
+        afterWave(i)
+      } catch {
+        case e: Throwable =>
+          stopped.set(true)
+          sc.cancelJobGroup(group)
+          inFlight.foreach(f => scala.util.Try(await(f)))
+          awaitTasks(spark, group)
+          throw e
+      }
+    } finally pool.shutdown()
 
     // snapshot: the dirs of ALL marked waves of this run (including waves
     // committed by a previous killed attempt)

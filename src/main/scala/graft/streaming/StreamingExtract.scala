@@ -263,11 +263,11 @@ object StreamingExtract extends Serializable {
     // an exchange of extracted rows only: one file per bucket the batch
     // touches, however many input partitions it spans
     val bucket = graft.table.LineageTable.bucketCol(col("url"), table.numBuckets)
-    val (dataDir, lineageDir, _) =
+    val (dataDir, lineageFile, _) =
       table.writeUnit(batch.withColumn("_bucket", bucket).repartition(col("_bucket")), runId, runId, batchId)
     table.commitSnapshot(
       table.currentDataDirs :+ dataDir,
-      table.currentLineageDirs :+ lineageDir,
+      table.currentLineageDirs :+ lineageFile,
       runId,
       Map("stream_batch_id" -> batchId,
         "stream_state" -> Map(streamRunId -> batchId)))

@@ -2,13 +2,15 @@ package graft.table
 
 import graft.core.Json
 import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema
 import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import scala.jdk.CollectionConverters._
 
 /** Iceberg-style table layer built from scratch (no Iceberg runtime offline
   * — SURVEY.md §7.0): Parquet data files + JSON snapshot manifests + atomic
-  * CURRENT pointer + per-wave checkpoint markers + lineage rows.
+  * CURRENT pointer + per-wave checkpoint markers + one JSON lineage record
+  * per commit unit.
   *
   * Semantics delivered (the north rule's storage contract):
   *  - **snapshot isolation**: readers list files from the CURRENT snapshot
@@ -22,7 +24,9 @@ import scala.jdk.CollectionConverters._
   *  - **per-partition lineage**: every bucket commit records (run_id,
   *    bucket, rows, failed, wall_ms) — the analog of the reference's task
   *    bookkeeping (app/tasks.py:106-122) and the data behind StatsResponse
-  *    (app/main.py:250-286);
+  *    (app/main.py:250-286). The rows are counted by the data write's own
+  *    tasks (an accumulator), so a commit unit is one Spark job with no
+  *    read-back;
   *  - **snapshot expiry / GC** (the reference schedules-but-never-defines
   *    cleanup_old_results, app/worker.py:61-66 — implemented for real
   *    here): old snapshots beyond a TTL are dropped and unreferenced data
@@ -32,7 +36,7 @@ import scala.jdk.CollectionConverters._
   * {{{
   *   root/
   *     data/<dir>/_bucket=<b>/ ... .parquet    bucket-partitioned data files
-  *     lineage/<dir>/ ... .parquet             lineage rows per writeUnit
+  *     lineage/<dir>.json                    lineage rows per writeUnit
   *     _checkpoint/<runId>/CONFIG.json       run record, checked on resume
   *     _checkpoint/<runId>/wave-<id>.json    per-wave marker: buckets, rows
   *     _stage/<runId>/_bucket=<b>/ ...       a run's staged input (ExtractJob)
@@ -67,7 +71,7 @@ final class LineageTable(val root: String, val numBuckets: Int = 64) {
   // The resume state of one run is two kinds of file under
   // _checkpoint/<runId>/, both written atomically and read only here: the
   // run record CONFIG.json (see beginRun) and one wave-<id>.json per
-  // committed wave (see commitWave). A wave is marked whole or not at all.
+  // committed wave (see markWave). A wave is marked whole or not at all.
 
   private def checkpointDir(runId: String): Path = p("_checkpoint", runId)
 
@@ -91,16 +95,20 @@ final class LineageTable(val root: String, val numBuckets: Int = 64) {
   /** The commit unit of wave `wave` of run `runId` (see [[unitDirs]]). */
   private def waveUnit(runId: String, wave: Int): String = s"$runId/wave-$wave"
 
-  /** Write wave `wave` of run `runId` through [[writeUnit]], then mark it
-    * committed: one `wave-<id>.json` with its buckets and row count (from
-    * the lineage rows writeUnit collected). The marker comes last, so a
-    * kill before it leaves the wave unmarked and a resume reruns it whole
-    * into the same dirs (Overwrite). Needs [[beginRun]] first. */
-  def commitWave(results: DataFrame, runId: String, wave: Int, buckets: Seq[Int]): Unit = {
-    val (_, _, lineage) = writeUnit(results, waveUnit(runId, wave), runId, wave)
+  /** Write wave `wave` of run `runId` through [[writeUnit]] and return its
+    * row count, for [[markWave]]. Marks nothing, so waves may be written
+    * from several threads at once. */
+  def writeWave(results: DataFrame, runId: String, wave: Int): Long =
+    writeUnit(results, waveUnit(runId, wave), runId, wave)._3.map(_.getAs[Long]("rows")).sum
+
+  /** Mark wave `wave` of run `runId` committed once its [[writeWave]] has
+    * returned: one `wave-<id>.json` with its buckets and row count. The
+    * marker comes last, so a kill before it leaves the wave unmarked and a
+    * resume reruns it whole into the same dirs (Overwrite). Needs
+    * [[beginRun]] first. */
+  def markWave(runId: String, wave: Int, buckets: Seq[Int], rows: Long): Unit =
     atomicWrite(checkpointDir(runId).resolve(s"wave-$wave.json"),
-      Json.write(Map("buckets" -> buckets, "rows" -> lineage.map(_.getAs[Long]("rows")).sum)))
-  }
+      Json.write(Map("buckets" -> buckets, "rows" -> rows)))
 
   /** The committed waves of a run, in wave order. */
   private def waves(runId: String): Seq[LineageTable.Wave] = {
@@ -478,12 +486,22 @@ final class LineageTable(val root: String, val numBuckets: Int = 64) {
       .reduce(_.unionByName(_))
   }
 
+  /** The current snapshot's lineage rows, one per committed bucket, as a
+    * local frame built from the units' JSON records (see [[writeUnit]]). */
   def readLineage(spark: SparkSession): DataFrame = {
-    val dirs = currentLineageDirs
-    require(dirs.nonEmpty, s"table $root has no lineage")
-    val nonEmpty = dirs.filter(hasParquet)
-    require(nonEmpty.nonEmpty, s"lineage of $root contains no data files")
-    nonEmpty.map(spark.read.parquet(_)).reduce(_.unionByName(_))
+    val files = currentLineageDirs
+    require(files.nonEmpty, s"table $root has no lineage")
+    files.find(f => Files.isDirectory(Paths.get(f))).foreach { d =>
+      throw new IllegalArgumentException(s"lineage $d of $root is a parquet dir written by an " +
+        "older version of this table; rewrite the table with compact() to read its lineage")
+    }
+    val rows = files.flatMap(f => readJson(Paths.get(f)).asInstanceOf[List[Any]].map { e =>
+      val m = e.asInstanceOf[Map[String, Any]]
+      def long(k: String): Any = m(k) match { case null => null; case v => jsonNum(v).toLong }
+      Row(jsonNum(m("_bucket")).toInt, long("rows"), long("completed"), long("failed"), long("wall_ms"),
+        m("run_id"), long("wave"), java.time.Instant.parse(String.valueOf(m("committed_at"))))
+    })
+    spark.createDataFrame(java.util.Arrays.asList(rows: _*), LineageTable.lineageSchema)
   }
 
   // --------------------------------------------------------- merge-on-read
@@ -586,26 +604,40 @@ final class LineageTable(val root: String, val numBuckets: Int = 64) {
 
   // ---------------------------------------------------------- commit unit
 
-  /** Where the commit unit `dir` lives: its data dir and its lineage dir. */
-  private def unitDirs(dir: String): (String, String) = (s"$root/data/$dir", s"$root/lineage/$dir")
+  /** Where the commit unit `dir` lives: its data dir and its lineage file. */
+  private def unitDirs(dir: String): (String, String) = (s"$root/data/$dir", s"$root/lineage/$dir.json")
 
   /** THE commit-unit write of every writer (job wave, stream micro-batch,
     * compaction), so layout and lineage schema cannot drift between them:
-    * `results` partitioned by `_bucket` to `root/data/<dir>`, read back
-    * with the explicit schema (an empty unit writes only _SUCCESS), lineage
-    * aggregated once and collected, then written as one file to
-    * `root/lineage/<dir>`. Each task writes one file per bucket it holds, so
-    * callers whose rows are not bucket-aligned add `repartition(_bucket)`.
-    * Callers commit (wave marker, manifest) from the returned dirs and rows. */
+    * one Spark job writes `results` partitioned by `_bucket` to
+    * `root/data/<dir>` (an empty unit writes only _SUCCESS), and the same
+    * job counts the unit's lineage. The last projection passes `status`
+    * through a [[LineageAccumulator]] keyed by `_bucket`; it sits after any
+    * exchange of `results`, in the write's result stage, where Spark applies
+    * each successful task's update exactly once, so a retried task is not
+    * counted twice. The driver then writes the rows (the schema of
+    * [[LineageTable.lineageFor]], committed_at = now) as the JSON record
+    * `root/lineage/<dir>.json`; nothing is read back. Each task writes one
+    * file per bucket it holds, so callers whose rows are not bucket-aligned
+    * add `repartition(_bucket)`. Callers commit (wave marker, manifest) from
+    * the returned data dir, lineage file and rows. */
   def writeUnit(results: DataFrame, dir: String, runId: String, wave: Long): (String, String, Array[Row]) = {
-    val spark = results.sparkSession
-    val (dataDir, lineageDir) = unitDirs(dir)
-    results.write.mode(SaveMode.Overwrite).partitionBy("_bucket").parquet(dataDir)
-    val lineage = LineageTable.lineageFor(spark.read.schema(results.schema).parquet(dataDir), runId, wave)
-    val rows = lineage.collect()
-    spark.createDataFrame(java.util.Arrays.asList(rows: _*), lineage.schema)
-      .coalesce(1).write.mode(SaveMode.Overwrite).parquet(lineageDir)
-    (dataDir, lineageDir, rows)
+    import org.apache.spark.sql.functions.{col, udf}
+    val (dataDir, lineageFile) = unitDirs(dir)
+    val acc = new LineageAccumulator
+    results.sparkSession.sparkContext.register(acc, s"lineage of $dir")
+    val counted = udf { (bucket: Int, status: String, ms: java.lang.Long) => acc.count(bucket, status, ms); status }
+    results.withColumn("status", counted.asNondeterministic()(col("_bucket"), col("status"), col("processing_time_ms")))
+      .write.mode(SaveMode.Overwrite).partitionBy("_bucket").parquet(dataDir)
+    val committedAt = java.time.Instant.now().truncatedTo(java.time.temporal.ChronoUnit.MICROS)
+    val rows: Array[Row] = acc.value.toArray.sortBy(_._1).map { case (b, c) =>
+      new GenericRowWithSchema(Array(b, c(0), c(1), c(2), if (c(4) > 0) c(3) else null, runId, wave, committedAt),
+        LineageTable.lineageSchema)
+    }
+    Files.createDirectories(Paths.get(lineageFile).getParent)
+    atomicWrite(Paths.get(lineageFile), Json.write(rows.toSeq.map(r =>
+      scala.collection.immutable.ListMap(LineageTable.lineageSchema.fieldNames.toSeq.zip(r.toSeq): _*))))
+    (dataDir, lineageFile, rows)
   }
 
   // ----------------------------------------------------------- compaction
@@ -644,7 +676,7 @@ final class LineageTable(val root: String, val numBuckets: Int = 64) {
     // materialized; a url key determines _bucket, so the (_bucket, url)
     // window keeps the rows of a url window and needs no exchange of its own
     def byBucket = readVisible(spark).repartition(col("_bucket"))
-    val (dataDir, lineageDir, _) = writeUnit(resolveLatestBy match {
+    val (dataDir, lineageFile, _) = writeUnit(resolveLatestBy match {
       case Some(("url", v)) => latestPer(byBucket, Seq("_bucket", "url"), v, "task_id")
       case Some((k, v)) => readLatest(spark, k, v).repartition(col("_bucket"))
       case None => byBucket
@@ -658,7 +690,7 @@ final class LineageTable(val root: String, val numBuckets: Int = 64) {
     // rewrite would silently drop that writer's snapshot from CURRENT.
     // The expectation is enforced INSIDE the commit's critical section
     // (see commitSnapshotExpecting), immediately before the pointer write.
-    val id = commitSnapshotExpecting(Some(cur0), Seq(dataDir), Seq(lineageDir), runId,
+    val id = commitSnapshotExpecting(Some(cur0), Seq(dataDir), Seq(lineageFile), runId,
       extra = Map("compaction" -> true))
     // clear only the tombstones we KNOW the rewrite applied — not the whole
     // file: a concurrent deleteTask() between the capture above and here
@@ -785,7 +817,14 @@ object LineageTable {
   /** One committed wave of a resumable run: its id, buckets and rows. */
   private final case class Wave(id: Int, buckets: Seq[Int], rows: Long)
 
-  /** The lineage-row aggregation over a written data dir, for writeUnit. */
+  /** Schema of a lineage row, in column order. */
+  private[table] val lineageSchema: org.apache.spark.sql.types.StructType =
+    org.apache.spark.sql.types.StructType.fromDDL(
+      "_bucket int, rows bigint, completed bigint, failed bigint, wall_ms bigint, run_id string, " +
+        "wave bigint, committed_at timestamp")
+
+  /** The lineage-row aggregation over a written data dir: what
+    * [[writeUnit]]'s rows must equal (specs compare the two). */
   private[table] def lineageFor(written: DataFrame, runId: String, wave: Long): DataFrame = {
     import org.apache.spark.sql.functions._
     written.groupBy(col("_bucket"))
@@ -826,4 +865,36 @@ object LineageTable {
     import org.apache.spark.sql.functions.{lit, pmod, xxhash64}
     pmod(xxhash64(url), lit(numBuckets)).cast("int")
   }
+}
+
+/** Per-bucket lineage counters of one commit unit, added to row by row by
+  * the unit's write tasks (see [[LineageTable.writeUnit]]): for each
+  * bucket rows, completed, failed, the sum of processing_time_ms and the
+  * rows that have one (a bucket with none sums to null, as in SQL). */
+private[table] final class LineageAccumulator
+    extends org.apache.spark.util.AccumulatorV2[(Int, String, java.lang.Long), Map[Int, Array[Long]]] {
+
+  private val counts = scala.collection.mutable.HashMap.empty[Int, Array[Long]]
+
+  def count(bucket: Int, status: String, ms: java.lang.Long): Unit = {
+    val c = counts.getOrElseUpdate(bucket, new Array[Long](5))
+    c(0) += 1
+    if (status == "completed") c(1) += 1 else if (status == "failed") c(2) += 1
+    if (ms != null) { c(3) += ms; c(4) += 1 }
+  }
+
+  override def isZero: Boolean = counts.isEmpty
+  override def copy(): LineageAccumulator = {
+    val a = new LineageAccumulator
+    a.merge(this)
+    a
+  }
+  override def reset(): Unit = counts.clear()
+  override def add(v: (Int, String, java.lang.Long)): Unit = count(v._1, v._2, v._3)
+  override def merge(other: org.apache.spark.util.AccumulatorV2[(Int, String, java.lang.Long), Map[Int, Array[Long]]]): Unit =
+    other.value.foreach { case (b, o) =>
+      val c = counts.getOrElseUpdate(b, new Array[Long](5))
+      o.indices.foreach(i => c(i) += o(i))
+    }
+  override def value: Map[Int, Array[Long]] = counts.toMap
 }

@@ -6,6 +6,7 @@ import graft.pipeline.ExtractJob
 import graft.table.LineageTable
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.Files
+import scala.jdk.CollectionConverters._
 
 /** LineageTable + ExtractJob: checkpointed resume (killed job never
   * re-extracts committed buckets), snapshot isolation, lineage stats, GC
@@ -317,10 +318,10 @@ class ResumeSpec extends AnyFunSuite with TempRoots {
     intercept[Kill] {
       ExtractJob.run(spark, pagesDs, cfg, afterWave = w => if (w == 1) throw new Kill)
     }
-    // simulate the kill landing INSIDE wave 1's marker loop instead of
-    // after it: wave-4's data/lineage are fully written but only some of
-    // its buckets are marked — the state pending-based wave regrouping
-    // turned into duplicated rows (shifted waves + the old full wave dir)
+    // simulate a kill between wave 4's write and its marker: its data and
+    // lineage are fully written but the wave is unmarked — regrouping the
+    // pending buckets into new waves would duplicate rows (shifted waves
+    // plus the old full wave dir)
     val table = new LineageTable(root, 16)
     Files.delete(java.nio.file.Paths.get(root, "_checkpoint", "runM", "wave-4.json"))
     val report = ExtractJob.run(spark, pagesDs, cfg)
@@ -339,9 +340,9 @@ class ResumeSpec extends AnyFunSuite with TempRoots {
     intercept[Kill] {
       ExtractJob.run(spark, pagesDs, cfg, afterWave = w => if (w == 0) throw new Kill)
     }
-    // wave-0 (buckets 0..7) is fully written but only 0..3 are marked;
-    // regrouped by 4, buckets 4..7 would re-run into a new wave-4 dir while
-    // the markers of 0..3 still name wave-0's dir, so both reach the snapshot
+    // a kill between wave 0's write and its marker: buckets 0..7 are fully
+    // written but unmarked; regrouped by 4, they would re-run into wave-0
+    // and a new wave-4 dir while the old wave-0 dir also holds 4..7
     Files.delete(java.nio.file.Paths.get(root, "_checkpoint", "runW", "wave-0.json"))
     val ex = intercept[IllegalArgumentException] {
       ExtractJob.run(spark, pagesDs, cfg.copy(bucketsPerWave = 4))
@@ -352,6 +353,58 @@ class ResumeSpec extends AnyFunSuite with TempRoots {
     assert(report.bucketsRun == 16 && report.bucketsSkipped == 0, report.toString)
     val df = new LineageTable(root, 16).read(spark)
     assert(df.count() == pagesDs.select("url").distinct().count(), "duplicated rows")
+  }
+
+  test("kill with the next wave in flight: one wave marked, nothing runs or writes after run throws") {
+    val root = freshRoot()
+    val cfg = ExtractJob.Config(root, runId = "runI", numBuckets = 16, bucketsPerWave = 4)
+    val data = java.nio.file.Paths.get(root, "data", "runI")
+    final class Kill extends RuntimeException("simulated kill")
+    // jobs started and not yet ended, as the listener bus delivers them; a
+    // marker job posted after run returns snapshots them in bus order
+    val active = scala.collection.mutable.Set.empty[Int]
+    @volatile var activeAtMarker: Option[Set[Int]] = None
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (e.properties.getProperty("spark.job.description") == "after-run marker") activeAtMarker = Some(active.toSet)
+        else active += e.jobId
+      override def onJobEnd(e: org.apache.spark.scheduler.SparkListenerJobEnd): Unit = active -= e.jobId
+    }
+    def files: Map[String, Long] = scala.util.Using.resource(Files.walk(data)) { w =>
+      w.iterator().asScala.filter(Files.isRegularFile(_)).map(f => data.relativize(f).toString -> Files.size(f)).toMap
+    }
+    var atReturn = Map.empty[String, Long]
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      intercept[Kill] {
+        ExtractJob.run(spark, pagesDs, cfg, afterWave = w => if (w == 0) {
+          // wave 4 is written or in flight when wave 0's hook throws
+          val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
+          while (!Files.isDirectory(data.resolve("wave-4")) && System.nanoTime() < deadline) Thread.sleep(5)
+          assert(Files.isDirectory(data.resolve("wave-4")), "wave 4 never started")
+          throw new Kill
+        })
+      }
+      atReturn = files
+      spark.sparkContext.setJobDescription("after-run marker")
+      try spark.sparkContext.parallelize(Seq(1), 1).count() finally spark.sparkContext.setJobDescription(null)
+      val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
+      while (activeAtMarker.isEmpty && System.nanoTime() < deadline) Thread.sleep(5)
+      assert(activeAtMarker.contains(Set.empty[Int]), s"Spark jobs of the run still active: $activeAtMarker")
+    } finally spark.sparkContext.removeSparkListener(listener)
+
+    assert(children(java.nio.file.Paths.get(root, "_checkpoint", "runI")).map(_.getFileName.toString) ==
+      Seq("CONFIG.json", "wave-0.json"))
+    Thread.sleep(1500)
+    assert(files == atReturn, "a wave write touched the table after run threw")
+
+    val report = ExtractJob.run(spark, pagesDs, cfg)
+    assert(report.bucketsRun == 12 && report.bucketsSkipped == 4, report.toString)
+    val table = new LineageTable(root, 16)
+    val df = table.read(spark)
+    assert(df.count() == pagesDs.select("url").distinct().count(), "duplicated rows")
+    assert(df.groupBy("url").count().where("count > 1").count() == 0)
+    assert(table.readLineage(spark).groupBy("_bucket").count().where("count > 1").count() == 0)
   }
 
   test("resume with a different input schema than the run record fails loudly") {

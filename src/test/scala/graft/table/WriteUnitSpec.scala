@@ -7,7 +7,7 @@ import graft.pipeline.{ExtractJob, ExtractKernel}
 import graft.streaming.StreamingExtract
 import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
-import java.nio.file.Paths
+import java.nio.file.{Files, Paths}
 
 /** The commit unit's layout and lineage for the writers that add their own
   * `_bucket` exchange before [[LineageTable.writeUnit]] — compaction and
@@ -16,23 +16,18 @@ import java.nio.file.Paths
   * data dir. */
 class WriteUnitSpec extends AnyFunSuite with TempRoots {
 
+  import WriteUnitSpec.rowsOf
+
   private lazy val spark = SparkTestBase.spark
 
-  private val lineageCols =
-    Seq("_bucket", "rows", "completed", "failed", "wall_ms", "run_id", "wave")
-
-  /** committed_at is the commit's clock, not a function of the data. */
-  private def rowsOf(df: DataFrame): Set[Seq[Any]] =
-    df.select(lineageCols.map(df.col): _*).collect().map(_.toSeq).toSet
-
-  private def assertUnit(dataDir: String, lineageDir: String, runId: String, wave: Long,
+  private def assertUnit(table: LineageTable, dataDir: String, lineageDir: String, runId: String, wave: Long,
                          buckets: Int): Unit = {
     val dirs = bucketDirs(Paths.get(dataDir))
     assert(dirs.size == buckets, dirs.toString)
     dirs.foreach(d => assert(parquetFiles(d) == 1, s"$d holds ${parquetFiles(d)} parquet files"))
-    assert(parquetFiles(Paths.get(lineageDir)) == 1, s"$lineageDir holds ${parquetFiles(Paths.get(lineageDir))} parquet files")
+    assert(Files.isRegularFile(Paths.get(lineageDir)), s"$lineageDir is not the unit's lineage file")
     val expected = rowsOf(LineageTable.lineageFor(spark.read.parquet(dataDir), runId, wave))
-    assert(rowsOf(spark.read.parquet(lineageDir)) == expected)
+    assert(rowsOf(table.readLineage(spark)) == expected)
   }
 
   test("compaction of several wave dirs, plain or resolving by url, leaves one file per bucket and one lineage file") {
@@ -55,7 +50,7 @@ class WriteUnitSpec extends AnyFunSuite with TempRoots {
       val id = table.compact(spark, resolveLatestBy = resolve)
       val Seq(dataDir) = table.currentDataDirs
       val Seq(lineageDir) = table.currentLineageDirs
-      assertUnit(dataDir, lineageDir, String.valueOf(table.snapshot(id)("run_id")), 0L, urlBuckets(120, 16))
+      assertUnit(table, dataDir, lineageDir, String.valueOf(table.snapshot(id)("run_id")), 0L, urlBuckets(120, 16))
       assert(table.read(spark).count() == expected, resolve.toString)
     }
   }
@@ -72,7 +67,76 @@ class WriteUnitSpec extends AnyFunSuite with TempRoots {
     assert(StreamingExtract.commitStreamBatch(table, batch, "s", 3L))
     val Seq(dataDir) = table.currentDataDirs
     val Seq(lineageDir) = table.currentLineageDirs
-    assertUnit(dataDir, lineageDir, "s-b3", 3L, urlBuckets(80, 8))
+    assertUnit(table, dataDir, lineageDir, "s-b3", 3L, urlBuckets(80, 8))
     assert(table.read(spark).count() == 80)
   }
+
+  /** SQL executions `f` runs, counted by a QueryExecutionListener. The
+    * listener bus is asynchronous, so a marker query before and after `f`
+    * bounds its executions in bus order. */
+  private def sqlExecutions(f: => Unit): Int = {
+    val marker = "sql_executions_marker"
+    val seen = new java.util.concurrent.LinkedBlockingQueue[Boolean]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: org.apache.spark.sql.execution.QueryExecution, ns: Long): Unit =
+        seen.put(qe.analyzed.output.map(_.name) == Seq(marker))
+      override def onFailure(funcName: String, qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit =
+        seen.put(false)
+    }
+    def next(): Boolean = Option(seen.poll(60, java.util.concurrent.TimeUnit.SECONDS))
+      .getOrElse(throw new IllegalStateException("no SQL execution event within 60 s"))
+    spark.listenerManager.register(listener)
+    try {
+      spark.range(1).toDF(marker).collect()
+      while (!next()) {}
+      f
+      spark.range(1).toDF(marker).collect()
+      Iterator.continually(next()).takeWhile(!_).size
+    } finally spark.listenerManager.unregister(listener)
+  }
+
+  test("each commit unit is one SQL execution: job waves, a stream batch, a compaction") {
+    val s = spark
+    import s.implicits._
+    val root = freshRoot()
+    val pages = spark.createDataset(CorpusGen.pages(120))(implicitly)
+    // staging, then one write per wave: no read-back, no lineage write
+    assert(sqlExecutions(ExtractJob.run(spark, pages, ExtractJob.Config(root, "r", numBuckets = 16,
+      bucketsPerWave = 4))) == 5)
+    val table = new LineageTable(root, 16)
+    val batch = ExtractKernel.extract(pages.limit(20), graft.model.ConversionOptions())(spark).toDF()
+    assert(sqlExecutions(StreamingExtract.commitStreamBatch(table, batch, "s", 0L)) == 1)
+    assert(sqlExecutions(table.compact(spark)) == 1)
+  }
+
+  test("lineage still in the old parquet format is refused until compact() rewrites the table") {
+    val s = spark
+    import s.implicits._
+    val root = freshRoot()
+    val table = new LineageTable(root, 8)
+    val dataDir = s"$root/data/old"
+    val lineageDir = s"$root/lineage/old"
+    ExtractKernel.extract(spark.createDataset(CorpusGen.pages(40))(implicitly), graft.model.ConversionOptions())(spark)
+      .withColumn("_bucket", LineageTable.bucketCol($"url", 8))
+      .write.partitionBy("_bucket").parquet(dataDir)
+    LineageTable.lineageFor(spark.read.parquet(dataDir), "old", 0L).coalesce(1).write.parquet(lineageDir)
+    table.commitSnapshot(Seq(dataDir), Seq(lineageDir), "old")
+
+    val ex = intercept[IllegalArgumentException](table.readLineage(spark))
+    assert(ex.getMessage.contains("compact"), ex.getMessage)
+    table.compact(spark)
+    assert(table.readLineage(spark).agg(org.apache.spark.sql.functions.sum("rows")).head().getLong(0) ==
+      table.read(spark).count())
+  }
+}
+
+object WriteUnitSpec {
+
+  private val lineageCols =
+    Seq("_bucket", "rows", "completed", "failed", "wall_ms", "run_id", "wave")
+
+  /** Lineage rows without committed_at, the commit's clock, which is not a
+    * function of the data. */
+  def rowsOf(df: DataFrame): Set[Seq[Any]] =
+    df.select(lineageCols.map(df.col): _*).collect().map(_.toSeq).toSet
 }
