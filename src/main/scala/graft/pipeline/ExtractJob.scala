@@ -262,13 +262,15 @@ object ExtractJob {
     // swapped order's window loses data unrecoverably (commit → compact
     // captures the tombstone → rewrite WITHOUT the fresh row → undelete →
     // tombstone gone AND data gone, nothing left to rerun).
+    // The run's wave dirs are read through the table's per-dir union: each
+    // is its own _bucket= partition root, and one scan over several fails.
     // totalRows guards the zero-delta run, whose wave dirs carry only
-    // _SUCCESS and would fail parquet schema inference.
+    // _SUCCESS, so there is nothing to read.
     if (dataDirs.nonEmpty && totalRows > 0) {
       val ts = table.tombstones
       if (ts.nonEmpty) {
         val tsDf = spark.createDataset(ts.toSeq).toDF("task_id")
-        val resurrected = spark.read.parquet(dataDirs: _*).select($"task_id")
+        val resurrected = table.readDirs(spark, dataDirs, s"run ${cfg.runId}").select($"task_id")
           .join(org.apache.spark.sql.functions.broadcast(tsDf), "task_id")
           .distinct().collect().map(_.getString(0))
         table.undeleteTasks(resurrected)

@@ -260,13 +260,16 @@ final class LineageTable(val root: String, val numBuckets: Int = 64) {
     // later retained snapshot may carry the column, and admitting the spec
     // would permanently brick readAt/roll-forward on it (applyEvolution
     // fails loud on the shadow). Without a session the same conflict fails
-    // loud at read time instead of silently no-opping.
-    for (s <- spark) {
-      val dirs = snapshotIds.flatMap(dataDirsOf).distinct.filter(hasParquet)
-      dirs.find(d => s.read.parquet(d).columns.contains(name)).foreach { d =>
-        throw new IllegalArgumentException(
-          s"column '$name' already exists physically in $d — cannot evolve over it")
-      }
+    // loud at read time instead of silently no-opping. Each dir's columns
+    // come from its footer; _bucket is in every dir, as a column or as its
+    // partition dirs.
+    if (spark.isDefined) {
+      snapshotIds.flatMap(dataDirsOf).distinct
+        .find(d => LineageTable.dirSchema(d).exists(s => (s.fieldNames :+ "_bucket").contains(name)))
+        .foreach { d =>
+          throw new IllegalArgumentException(
+            s"column '$name' already exists physically in $d — cannot evolve over it")
+        }
     }
     val next = specs :+ ((name, sqlType, defaultSql))
     Files.createDirectories(p("_manifests"))
@@ -385,18 +388,6 @@ final class LineageTable(val root: String, val numBuckets: Int = 64) {
   def currentLineageDirs: Seq[String] =
     currentSnapshotId.map(id => listField(snapshot(id), "lineage_dirs")).getOrElse(Nil)
 
-  /** A committed dir from an empty wave holds only _SUCCESS; reading it
-    * would fail schema inference, so union only dirs with data files. */
-  private def hasParquet(dir: String): Boolean = {
-    val p = java.nio.file.Paths.get(dir)
-    java.nio.file.Files.isDirectory(p) && {
-      import scala.jdk.CollectionConverters._
-      scala.util.Using.resource(java.nio.file.Files.walk(p)) { s =>
-        s.iterator().asScala.exists(_.getFileName.toString.endsWith(".parquet"))
-      }
-    }
-  }
-
   def read(spark: SparkSession): DataFrame = {
     val dirs = currentDataDirs
     require(dirs.nonEmpty, s"table $root has no committed snapshot")
@@ -449,16 +440,17 @@ final class LineageTable(val root: String, val numBuckets: Int = 64) {
     require(removed.isEmpty,
       s"snapshots $sinceId..$toId of $root are not append-only (compaction or " +
         s"rollback rewrote ${removed.size} dir(s)); resume with a full read of $toId")
-    val added = after.filterNot(before).filter(hasParquet)
+    def hasData(d: String): Boolean = LineageTable.firstDataFile(d).nonEmpty
+    val added = after.filterNot(before)
     val df =
-      if (added.nonEmpty) readDirs(spark, added, s"changes $sinceId..$toId of $root")
+      if (added.exists(hasData)) readDirs(spark, added, s"changes $sinceId..$toId of $root")
       else {
         // empty delta: deliver the table's SCHEMA without requiring toId to
         // carry data — a table whose only commits are empty waves must poll
         // as empty, not throw; with no parquet anywhere there is no schema
         // to offer and an empty zero-column frame is the honest answer
         val anyDir = (dataDirsOf(toId) ++ snapshotIds.flatMap(dataDirsOf))
-          .distinct.find(hasParquet)
+          .distinct.find(hasData)
         anyDir match {
           case Some(d) => readDirs(spark, Seq(d), s"schema dir of $root").limit(0)
           case None => spark.emptyDataFrame
@@ -472,17 +464,23 @@ final class LineageTable(val root: String, val numBuckets: Int = 64) {
     else df.where(!org.apache.spark.sql.functions.col("task_id").isin(ts.toSeq: _*))
   }
 
-  private def readDirs(spark: SparkSession, dirs: Seq[String], what: String): DataFrame = {
-    val nonEmpty = dirs.filter(hasParquet)
-    require(nonEmpty.nonEmpty, s"$what contains no data files")
-    // one scan per wave dir (each with its own _bucket= partition discovery),
-    // unioned — partition pruning applies per branch; a shared catalog table
-    // would replace this at real-cluster scale. Each branch is projected
-    // onto the evolved schema (per-dir epoch) BEFORE the union, so
-    // initial-default vs genuine-null semantics stay per-file-epoch exact.
+  /** `dirs` read as one frame: one scan per dir, unioned by name; a dir
+    * with no data file (an empty wave's holds only _SUCCESS) is skipped.
+    * Each scan is given its dir's schema from the footer of the dir's first
+    * data file, read on the driver ([[LineageTable.dirSchema]]), so building
+    * the frame runs no Spark job; Spark's partition discovery still appends
+    * `_bucket` for `_bucket=<b>` layouts. The read stays a union of per-dir
+    * scans because several roots with `_bucket=` dirs conflict in one scan
+    * (CONFLICTING_DIRECTORY_STRUCTURES); partition pruning applies per
+    * branch. Each branch is projected onto the evolved schema (per-dir
+    * epoch) BEFORE the union, so initial-default vs genuine-null semantics
+    * stay per-file-epoch exact. */
+  private[graft] def readDirs(spark: SparkSession, dirs: Seq[String], what: String): DataFrame = {
+    val scans = dirs.flatMap(d => LineageTable.dirSchema(d).map(d -> _))
+    require(scans.nonEmpty, s"$what contains no data files")
     val epochs = if (addedColumns.isEmpty) Map.empty[String, Int] else dirEpochs
-    nonEmpty
-      .map(d => applyEvolution(spark.read.parquet(d), epochs.getOrElse(d, 0)))
+    scans
+      .map { case (d, schema) => applyEvolution(spark.read.schema(schema).parquet(d), epochs.getOrElse(d, 0)) }
       .reduce(_.unionByName(_))
   }
 
@@ -847,6 +845,62 @@ object LineageTable {
         s.iterator().asScala.toVector
       }.foreach(deleteRecursively)
     Files.deleteIfExists(path)
+  }
+
+  /** The first data file under `dir` by the rule Spark lists a dir with: no
+    * path component below `dir` starts with "." or, unless it names a
+    * partition (`k=v`), with "_". None when the dir is missing or holds no
+    * data file. */
+  private[table] def firstDataFile(dir: String): Option[Path] = {
+    val root = Paths.get(dir)
+    def listed(f: Path): Boolean = root.relativize(f).iterator().asScala.forall { c =>
+      val n = c.toString
+      !n.startsWith(".") && (!n.startsWith("_") || n.contains("="))
+    }
+    if (!Files.isDirectory(root)) None
+    else scala.util.Using.resource(Files.walk(root)) { s =>
+      s.iterator().asScala.find(f => f.getFileName.toString.endsWith(".parquet") && listed(f) && Files.isRegularFile(f))
+    }
+  }
+
+  /** The Spark schema of data dir `dir` (without partition columns), from
+    * its first data file's footer; None when it has no data file. Every
+    * file of a dir is written by one Spark write, so one footer holds the
+    * dir's schema. */
+  private[table] def dirSchema(dir: String): Option[org.apache.spark.sql.types.StructType] =
+    firstDataFile(dir).map(footerSchema)
+
+  /** The Spark schema Spark's parquet writer records in `file`'s footer,
+    * read straight from the footer bytes: the file ends with the footer,
+    * its 4-byte little-endian length and "PAR1". This is the schema Spark's
+    * own inference takes, without the Spark job it runs to read the footer. */
+  private[table] def footerSchema(file: Path): org.apache.spark.sql.types.StructType = {
+    import java.nio.{ByteBuffer, ByteOrder}
+    import java.nio.channels.FileChannel
+    def readFully(ch: FileChannel, pos: Long, n: Int): ByteBuffer = {
+      val b = ByteBuffer.allocate(n)
+      while (b.hasRemaining && ch.read(b, pos + b.position()) >= 0) {}
+      require(!b.hasRemaining, s"$file is truncated: not a parquet file")
+      b.flip()
+      b
+    }
+    val meta = scala.util.Using.resource(FileChannel.open(file)) { ch =>
+      val size = ch.size
+      require(size >= 12, s"$file is too short to be a parquet file")
+      val tail = readFully(ch, size - 8, 8).order(ByteOrder.LITTLE_ENDIAN)
+      val len = tail.getInt(0)
+      require(new String(tail.array, 4, 4, UTF_8) == "PAR1" && len > 0 && len <= size - 12,
+        s"$file has no plain parquet footer")
+      org.apache.parquet.format.Util.readFileMetaData(
+        new java.io.ByteArrayInputStream(readFully(ch, size - 8 - len, len).array))
+    }
+    val key = org.apache.spark.sql.execution.datasources.parquet.ParquetReadSupport.SPARK_METADATA_KEY
+    Option(meta.getKey_value_metadata).map(_.asScala).getOrElse(Nil).find(_.getKey == key) match {
+      case Some(kv) => org.apache.spark.sql.types.DataType.fromJson(kv.getValue)
+        .asInstanceOf[org.apache.spark.sql.types.StructType]
+      case None => throw new IllegalArgumentException(
+        s"$file has no Spark schema ($key) in its parquet footer; this table reads only files written by Spark")
+    }
   }
 
   /** Deterministic bucket id for a url — stable across runs, reruns, and

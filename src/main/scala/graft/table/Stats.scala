@@ -6,15 +6,18 @@ import org.apache.spark.sql.functions._
 /** Ops surface over the lineage/results tables — the relational
   * re-expression of the reference's control-plane endpoints:
   *  - task-status lookup (O4, app/main.py:474-574): there, a linear scan
-  *    over every `celery-task-meta-*` key; here, a bucket-pruned filter;
+  *    over every `celery-task-meta-*` key; here, a filter over the table.
+  *    Only [[lookupByUrl]] prunes to one url-hash bucket; [[taskLookup]]
+  *    reads every data file, because a task id does not give its url's
+  *    bucket (ROADMAP direction 2 step 2 keys buckets by task id to fix it);
   *  - stats aggregation (O5, app/main.py:250-286): worker-counter sums;
   *    here, one hash aggregation over lineage (metadata-scale, never
   *    touching payloads).
   */
 object Stats {
 
-  /** O4: status row for one task id — prunes to the task's url-hash bucket
-    * when the caller knows the url, else a column-pruned scan. */
+  /** O4: status row for one task id — a column-pruned scan of every data
+    * file; a caller that knows the url prunes with [[lookupByUrl]]. */
   def taskLookup(table: LineageTable, spark: SparkSession, taskId: String): DataFrame =
     table.readVisible(spark)
       .where(col("task_id") === taskId)

@@ -111,6 +111,25 @@ class ResumeSpec extends AnyFunSuite with TempRoots {
     assert(new LineageTable(root, 16).read(spark).count() == pagesDs.select("url").distinct().count())
   }
 
+  test("multi-wave run over a table with a tombstone commits and resurrects a re-extracted url") {
+    val root = freshRoot()
+    ExtractJob.run(spark, pagesDs, ExtractJob.Config(root, runId = "runT1", numBuckets = 16, bucketsPerWave = 4))
+    val table = new LineageTable(root, 16)
+    val url = CorpusGen.urlFor(3)
+    val taskId = graft.pipeline.ExtractKernel.taskIdFor(url)
+    def visible(u: String): Long = table.readVisible(spark).where(s"url = '$u'").count()
+    table.deleteTask(taskId)
+    assert(visible(url) == 0)
+    // the resurrection scan reads the run's four wave dirs, each its own
+    // _bucket= partition root
+    val report = ExtractJob.run(spark, pagesDs, ExtractJob.Config(root, runId = "runT2", numBuckets = 16, bucketsPerWave = 4))
+    assert(report.snapshotId == 2L && report.bucketsRun == 16, report.toString)
+    assert(table.currentDataDirs.size == 4)
+    assert(!table.tombstones.contains(taskId), "the re-extracted url's tombstone survived")
+    assert(visible(url) == 1)
+    assert(table.readVisible(spark).count() == pagesDs.select("url").distinct().count())
+  }
+
   test("bucket partition pruning reaches the scan") {
     val root = freshRoot()
     val cfg = ExtractJob.Config(root, runId = "runP", numBuckets = 8, bucketsPerWave = 8)

@@ -31,6 +31,54 @@ class StatsSpec extends AnyFunSuite with TempRoots {
     assert(plan.contains("PartitionFilters: [isnotnull(_bucket"), "bucket pruning missing")
   }
 
+  /** `body`'s result and the Spark jobs it started. Those jobs carry the
+    * thread's job group; a marker job of another group, run after `body`,
+    * reaches the listener after all of them, so none is missed. */
+  private def jobsOf[T](body: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val group = s"jobs-of-${java.util.UUID.randomUUID}"
+    val counted = new java.util.concurrent.atomic.AtomicInteger
+    val marker = new java.util.concurrent.CountDownLatch(1)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")).orNull match {
+          case `group` => counted.incrementAndGet()
+          case g if g == s"$group-marker" => marker.countDown()
+          case _ =>
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "counted")
+      val out = try body finally sc.clearJobGroup()
+      sc.setJobGroup(s"$group-marker", "marker")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      assert(marker.await(60, java.util.concurrent.TimeUnit.SECONDS), "the marker job never reached the listener")
+      (out, counted.get)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("reads of a four-wave table plan without a Spark job; a lookup runs one") {
+    val s = spark
+    import s.implicits._
+    val root = freshRoot("graft-stats-jobs-")
+    ExtractJob.run(spark, spark.createDataset(CorpusGen.pages(80))(implicitly),
+      ExtractJob.Config(root, "j", numBuckets = 16, bucketsPerWave = 4))
+    val t = new LineageTable(root, 16)
+    assert(t.currentDataDirs.size == 4)
+    val url = CorpusGen.urlFor(5)
+    val taskId = ExtractKernel.taskIdFor(url)
+    val ((_, byUrl, byTask), planned) = jobsOf(
+      (t.readVisible(spark), Stats.lookupByUrl(t, spark, url), Stats.taskLookup(t, spark, taskId)))
+    assert(planned == 0, s"$planned Spark jobs ran while the frames were built")
+    val (urlRows, urlJobs) = jobsOf(byUrl.collect())
+    assert(urlRows.map(_.getAs[String]("task_id")).toSeq == Seq(taskId))
+    assert(urlJobs == 1, s"a url lookup ran $urlJobs Spark jobs")
+    val (taskRows, taskJobs) = jobsOf(byTask.collect())
+    assert(taskRows.map(_.getAs[String]("url")).toSeq == Seq(url))
+    assert(taskJobs == 1, s"a task lookup ran $taskJobs Spark jobs")
+  }
+
   test("O5: stats response over lineage only") {
     val r = Stats.statsResponse(table, spark).collect()(0)
     assert(r.getAs[Long]("total_tasks") == distinctUrls)
