@@ -11,15 +11,17 @@ import scala.concurrent.{Await, ExecutionContext, Future}
 import scala.concurrent.duration.Duration
 
 /** The resumable extraction job: pages → (latest-crawl dedup) → deterministic
-  * url-hash buckets → per-wave extract + commit → snapshot.
+  * buckets keyed by task id → per-wave extract + commit → snapshot.
   *
   * Commit protocol (north rule "checkpointed resume"):
-  *  - work unit = url-hash bucket (stable across runs/partitionings — NEVER
+  *  - work unit = bucket of the row's task id, a name UUID of its url
+  *    ([[LineageTable.bucketCol]]; stable across runs/partitionings — NEVER
   *    Spark task ids); waves of `bucketsPerWave` buckets run as one Spark
   *    job each;
   *  - the run starts with [[LineageTable.beginRun]]: the table records the
-  *    run's config (bucket count, wave size, dedup, input schema), and a
-  *    resume with another config fails loudly;
+  *    run's config (table format, bucket count, wave size, dedup, input
+  *    schema), and a resume with another config, or of a run started by
+  *    code writing another table format, fails loudly;
   *  - [[LineageTable.writeWave]] writes a wave's results parquet
   *    (partitioned by bucket for downstream partition pruning) and its
   *    lineage record, counted by that same write; then
@@ -129,17 +131,18 @@ object ExtractJob {
     }
     val withBucket = pages.toDF().withColumn("_bucket", LineageTable.bucketCol($"url", cfg.numBuckets))
 
-    // the run record, staged or not: waves committed under one
-    // (numBuckets, bucketsPerWave, dedup, input schema) are lies under
-    // another — numBuckets changes the url→bucket map, bucketsPerWave the
-    // wave dirs (keyed by a wave's smallest bucket, so old and regrouped
-    // dirs would both reach the snapshot), dedup what a bucket's rows mean,
-    // and the schema what the staged input holds. A runId pins its input
-    // data by design: completed waves were extracted from the staged
-    // snapshot, so a resume must not mix in a drifted live input.
-    table.beginRun(cfg.runId, Map("num_buckets" -> cfg.numBuckets,
-      "buckets_per_wave" -> cfg.bucketsPerWave, "dedup" -> cfg.dedup.toString,
-      "schema" -> withBucket.schema.catalogString))
+    // the run record, staged or not: waves committed under one (format,
+    // numBuckets, bucketsPerWave, dedup, input schema) are lies under
+    // another — the format and numBuckets change the url→bucket map,
+    // bucketsPerWave the wave dirs (keyed by a wave's smallest bucket, so
+    // old and regrouped dirs would both reach the snapshot), dedup what a
+    // bucket's rows mean, and the schema what the staged input holds. A
+    // runId pins its input data by design: completed waves were extracted
+    // from the staged snapshot, so a resume must not mix in a drifted live
+    // input.
+    table.beginRun(cfg.runId, Map("format_version" -> LineageTable.FormatVersion,
+      "num_buckets" -> cfg.numBuckets, "buckets_per_wave" -> cfg.bucketsPerWave,
+      "dedup" -> cfg.dedup.toString, "schema" -> withBucket.schema.catalogString))
 
     // FIXED wave partition of the full bucket range, never regrouped from
     // the pending set: a wave is marked whole or not at all, so an unmarked

@@ -34,8 +34,14 @@ object ExtractKernel {
     * hard per document; our non-ML kernel gets a much tighter default. */
   val DefaultTimeoutMs: Long = 60000L
 
+  /** What a url is prefixed with before it is hashed into its task id. */
+  private[graft] val TaskIdPrefix = "graft:"
+
+  /** The name UUID of `TaskIdPrefix + url`: its first 8 hex digits are the
+    * first 4 bytes of that string's md5, which the table's bucket key
+    * reads ([[graft.table.LineageTable.bucketOfTask]]). */
   def taskIdFor(url: String): String =
-    java.util.UUID.nameUUIDFromBytes(("graft:" + url).getBytes("UTF-8")).toString
+    java.util.UUID.nameUUIDFromBytes((TaskIdPrefix + url).getBytes("UTF-8")).toString
 
   def extract(pages: Dataset[Page], options: ConversionOptions, timeoutMs: Long = DefaultTimeoutMs)(
       implicit spark: SparkSession): Dataset[ExtractResult] = {

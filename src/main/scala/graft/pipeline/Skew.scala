@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions._
   * 256-289, re-expressed as data partitioning).
   *
   * The production extract path does NOT shuffle payloads before the kernel
-  * (its one exchange, on the url-hash bucket, happens once at staging;
+  * (its one exchange, on the task-id bucket, happens once at staging;
   * dynamic scheduling absorbs the heavy tail — see ExtractJob);
   * this operator is the explicit rebalancer for pathological inputs where
   * single rows approach partition size (multi-GB blobs, handful-of-rows

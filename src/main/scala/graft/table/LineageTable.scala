@@ -16,8 +16,9 @@ import scala.jdk.CollectionConverters._
   *  - **snapshot isolation**: readers list files from the CURRENT snapshot
   *    only; a crashed writer never corrupts a reader's view (manifest is
   *    written to a temp file and atomically renamed);
-  *  - **resumable commits**: work is partitioned into deterministic url-hash
-  *    buckets (never Spark task ids), committed in waves; a run records its
+  *  - **resumable commits**: work is partitioned into deterministic buckets
+  *    keyed by a row's task id (a name UUID of its url; never Spark task
+  *    ids), committed in waves; a run records its
   *    config once and each committed wave writes one marker naming its
   *    buckets; a rerun of the same run id checks the record and skips the
   *    marked waves — a killed job never re-extracts completed partitions;
@@ -30,7 +31,10 @@ import scala.jdk.CollectionConverters._
   *  - **snapshot expiry / GC** (the reference schedules-but-never-defines
   *    cleanup_old_results, app/worker.py:61-66 — implemented for real
   *    here): old snapshots beyond a TTL are dropped and unreferenced data
-  *    files deleted.
+  *    files deleted;
+  *  - **one-file lookups**: a row's bucket is a function of its task id, so
+  *    a lookup by task id or url reads `<dir>/_bucket=<b>` of only the dirs
+  *    holding that bucket ([[readBucket]]).
   *
   * Layout:
   * {{{
@@ -40,9 +44,17 @@ import scala.jdk.CollectionConverters._
   *     _checkpoint/<runId>/CONFIG.json       run record, checked on resume
   *     _checkpoint/<runId>/wave-<id>.json    per-wave marker: buckets, rows
   *     _stage/<runId>/_bucket=<b>/ ...       a run's staged input (ExtractJob)
-  *     _manifests/snapshot-<n>.json          file list + lineage pointers
+  *     _manifests/snapshot-<n>.json          data_dirs, lineage_dirs,
+  *                                           format_version, num_buckets
   *     _manifests/CURRENT                    atomic pointer ("n")
   * }}}
+  *
+  * Format: every commit records `format_version` 2 (buckets keyed by task
+  * id, [[LineageTable.bucketFor]]) and the `num_buckets` its writer used.
+  * A manifest without `format_version` is format 1, written by older code
+  * with url-hash buckets: full reads, stats and [[changesSince]] serve it,
+  * but a bucket read, and a commit that keeps its dirs, refuse it until
+  * [[compact]] rewrites the table.
   */
 final class LineageTable(val root: String, val numBuckets: Int = 64) {
 
@@ -168,7 +180,9 @@ final class LineageTable(val root: String, val numBuckets: Int = 64) {
 
   /** Commit a new snapshot listing `dataDirs` (bucket dirs) + lineage dirs.
     * Manifest first (temp + rename), CURRENT pointer last (atomic move) —
-    * a reader sees either the old or the new snapshot, never a mix. */
+    * a reader sees either the old or the new snapshot, never a mix. The
+    * manifest records this table's format and `numBuckets`; a commit that
+    * keeps dirs of the current snapshot requires it to have both. */
   def commitSnapshot(dataDirs: Seq[String], lineageDirs: Seq[String], runId: String,
                      extra: Map[String, Any] = Map.empty): Long =
     commitSnapshotExpecting(None, dataDirs, lineageDirs, runId, extra)
@@ -194,6 +208,14 @@ final class LineageTable(val root: String, val numBuckets: Int = 64) {
             "writer is racing the single-writer maintenance contract; rerun the " +
             "maintenance op while no commits are in flight")
     }
+    // kept dirs must be bucketed as the new ones are, or a bucket read
+    // would miss their rows and a (_bucket, url) window would split a url
+    currentSnapshotId.map(snapshot).filter(cur => listField(cur, "data_dirs").exists(dataDirs.contains))
+      .foreach { cur =>
+        val n = bucketsOf(cur, "a commit keeping its dirs")
+        require(n == numBuckets, s"a commit with $numBuckets buckets cannot keep the dirs of snapshot " +
+          s"${cur("snapshot_id")} of $root, written with $n; rewrite the table with compact() at $numBuckets buckets first")
+      }
     Files.createDirectories(p("_manifests"))
     val id = nextSnapshotId
     // stream_state (max committed batch id per stream run) is carried
@@ -209,6 +231,8 @@ final class LineageTable(val root: String, val numBuckets: Int = 64) {
       "data_dirs" -> dataDirs,
       "lineage_dirs" -> lineageDirs,
       "schema_version" -> schemaVersion,
+      "format_version" -> LineageTable.FormatVersion,
+      "num_buckets" -> numBuckets,
       "parent" -> currentSnapshotId.map(_.asInstanceOf[Any]).orNull,
     ) ++ (extra - "stream_state") ++
       (if (mergedStream.nonEmpty) Map("stream_state" -> mergedStream) else Map.empty)
@@ -221,6 +245,16 @@ final class LineageTable(val root: String, val numBuckets: Int = 64) {
     atomicWrite(p("_manifests", s"snapshot-$id.json"), Json.write(manifest))
     atomicWrite(p("_manifests", "CURRENT"), id.toString)
     id
+  }
+
+  /** The bucket count snapshot manifest `s` was written with. A format-1
+    * snapshot (no `format_version`) keyed its buckets by url hash, so no
+    * task id finds its rows: `what` is refused, naming the upgrade. */
+  private def bucketsOf(s: Map[String, Any], what: String): Int = {
+    val v = s.get("format_version").map(jsonNum(_).toInt).getOrElse(1)
+    require(v == LineageTable.FormatVersion, s"$what is refused: snapshot ${s("snapshot_id")} of $root " +
+      s"is table format $v (url-hash buckets), not ${LineageTable.FormatVersion}; rewrite the table with compact() first")
+    jsonNum(s("num_buckets")).toInt
   }
 
   /** Max committed batch id per stream run, read from the CURRENT
@@ -459,9 +493,7 @@ final class LineageTable(val root: String, val numBuckets: Int = 64) {
     // incremental consumers see the same visibility rule as read():
     // tombstoned tasks never flow downstream (append-only CDC could not
     // retract them later)
-    val ts = tombstones
-    if (ts.isEmpty || !df.columns.contains("task_id")) df
-    else df.where(!org.apache.spark.sql.functions.col("task_id").isin(ts.toSeq: _*))
+    visible(df)
   }
 
   /** `dirs` read as one frame: one scan per dir, unioned by name; a dir
@@ -476,12 +508,50 @@ final class LineageTable(val root: String, val numBuckets: Int = 64) {
     * epoch) BEFORE the union, so initial-default vs genuine-null semantics
     * stay per-file-epoch exact. */
   private[graft] def readDirs(spark: SparkSession, dirs: Seq[String], what: String): DataFrame = {
-    val scans = dirs.flatMap(d => LineageTable.dirSchema(d).map(d -> _))
-    require(scans.nonEmpty, s"$what contains no data files")
+    val all = scans(spark, dirs, None)
+    require(all.nonEmpty, s"$what contains no data files")
+    all.reduce(_.unionByName(_))
+  }
+
+  /** The per-dir scans of [[readDirs]], each projected onto the evolved
+    * schema by its dir's epoch; with `bucket`, only the rows of that bucket:
+    * a dir with the `_bucket=<b>` layout is scanned at `<dir>/_bucket=<b>`
+    * (basePath `<dir>`, so `_bucket` is still discovered), or not at all
+    * when it lacks that subdir, and a dir without the layout is scanned
+    * whole; every bucket scan filters on `_bucket`. */
+  private def scans(spark: SparkSession, dirs: Seq[String], bucket: Option[Int]): Seq[DataFrame] = {
+    import org.apache.spark.sql.functions.col
     val epochs = if (addedColumns.isEmpty) Map.empty[String, Int] else dirEpochs
-    scans
-      .map { case (d, schema) => applyEvolution(spark.read.schema(schema).parquet(d), epochs.getOrElse(d, 0)) }
-      .reduce(_.unionByName(_))
+    def scan(d: String, path: String): Option[DataFrame] = LineageTable.dirSchema(path).map { schema =>
+      val reader = spark.read.schema(schema)
+      applyEvolution((if (path == d) reader else reader.option("basePath", d)).parquet(path), epochs.getOrElse(d, 0))
+    }
+    bucket match {
+      case None => dirs.flatMap(d => scan(d, d))
+      case Some(b) => dirs.flatMap { d =>
+        val sub = s"$d/_bucket=$b"
+        val path =
+          if (Files.isDirectory(Paths.get(sub))) Some(sub) else if (LineageTable.hasBucketDirs(d)) None else Some(d)
+        path.flatMap(scan(d, _)).map(_.where(col("_bucket") === b))
+      }
+    }
+  }
+
+  /** The visible rows of the bucket task id `taskId` falls in, in the
+    * current snapshot: the one bucket read both [[Stats]] lookups share. The
+    * bucket count is the CURRENT manifest's, whatever count this table was
+    * opened with, and only the dirs holding the bucket are read, one
+    * `_bucket=<b>` subdir each (see [[scans]]). No row when `taskId` is not a
+    * task id or its bucket is empty. Refuses a format-1 snapshot. */
+  def readBucket(spark: SparkSession, taskId: String): DataFrame = {
+    val id = currentSnapshotId.getOrElse(throw new IllegalArgumentException(s"table $root has no committed snapshot"))
+    val s = snapshot(id)
+    val dirs = listField(s, "data_dirs")
+    val hits = LineageTable.bucketOfTask(taskId, bucketsOf(s, "a bucket read")).toSeq
+      .flatMap(b => scans(spark, dirs, Some(b)))
+    // no dir holds the bucket: no row, in the table's schema
+    visible(if (hits.nonEmpty) hits.reduce(_.unionByName(_))
+      else readDirs(spark, dirs, s"snapshot $id of $root").where(org.apache.spark.sql.functions.lit(false)))
   }
 
   /** The current snapshot's lineage rows, one per committed bucket, as a
@@ -593,10 +663,12 @@ final class LineageTable(val root: String, val numBuckets: Int = 64) {
   }
 
   /** Results with tombstoned tasks filtered (the user-facing read). */
-  def readVisible(spark: SparkSession): DataFrame = {
+  def readVisible(spark: SparkSession): DataFrame = visible(read(spark))
+
+  /** `df` without the rows of tombstoned tasks. */
+  private def visible(df: DataFrame): DataFrame = {
     val ts = tombstones
-    val df = read(spark)
-    if (ts.isEmpty) df
+    if (ts.isEmpty || !df.columns.contains("task_id")) df
     else df.where(!org.apache.spark.sql.functions.col("task_id").isin(ts.toSeq: _*))
   }
 
@@ -644,8 +716,11 @@ final class LineageTable(val root: String, val numBuckets: Int = 64) {
     * data dir (one file per bucket) + one lineage dir via [[writeUnit]],
     * applying tombstones physically, then commit a new snapshot
     * referencing only the compacted dirs and clear the tombstone list.
-    * Every visible row crosses one exchange on `_bucket`, so the rewrite
+    * Every visible row's `_bucket` is recomputed from its url at this
+    * table's `numBuckets`, and crosses one exchange on it, so the rewrite
     * runs in at most `numBuckets` write tasks, whatever the core count.
+    * That makes compaction the upgrade of a format-1 table, and the repair
+    * of one whose dirs were written with different bucket counts.
     *
     * Why: every wave of an ExtractJob run appends a dir to `data_dirs`, so
     * a long-running job accumulates an ever-growing union in `read()` and
@@ -671,13 +746,15 @@ final class LineageTable(val root: String, val numBuckets: Int = 64) {
 
     // one exchange on _bucket, so each bucket is one write task. With
     // resolveLatestBy = (keyCol, versionCol), merge-on-read resolution is
-    // materialized; a url key determines _bucket, so the (_bucket, url)
-    // window keeps the rows of a url window and needs no exchange of its own
-    def byBucket = readVisible(spark).repartition(col("_bucket"))
+    // materialized; the recomputed _bucket is a function of url, so the
+    // (_bucket, url) window keeps the rows of a url window and needs no
+    // exchange of its own
+    def byBucket(df: DataFrame) =
+      df.withColumn("_bucket", LineageTable.bucketCol(col("url"), numBuckets)).repartition(col("_bucket"))
     val (dataDir, lineageFile, _) = writeUnit(resolveLatestBy match {
-      case Some(("url", v)) => latestPer(byBucket, Seq("_bucket", "url"), v, "task_id")
-      case Some((k, v)) => readLatest(spark, k, v).repartition(col("_bucket"))
-      case None => byBucket
+      case Some(("url", v)) => latestPer(byBucket(readVisible(spark)), Seq("_bucket", "url"), v, "task_id")
+      case Some((k, v)) => byBucket(readLatest(spark, k, v))
+      case None => byBucket(readVisible(spark))
     }, runId, runId, 0L)
 
     raceTestHook()
@@ -903,21 +980,41 @@ object LineageTable {
     }
   }
 
+  /** The table format every commit records (see the class header). */
+  val FormatVersion = 2
+
   /** Deterministic bucket id for a url — stable across runs, reruns, and
-    * partition counts (xxhash64, matching Spark's SQL xxhash64 seed 42). */
-  def bucketFor(url: String, numBuckets: Int): Int = {
-    val bytes = url.getBytes(UTF_8)
-    val h = org.apache.spark.sql.catalyst.expressions.XXH64.hashUnsafeBytes(
-      bytes, org.apache.spark.unsafe.Platform.BYTE_ARRAY_OFFSET, bytes.length, 42L)
-    java.lang.Math.floorMod(h, numBuckets.toLong).toInt
+    * partition counts: the bucket of its task id
+    * ([[graft.pipeline.ExtractKernel.taskIdFor]]), so a lookup by task id
+    * alone finds the bucket too. */
+  def bucketFor(url: String, numBuckets: Int): Int =
+    bucketOfTask(graft.pipeline.ExtractKernel.taskIdFor(url), numBuckets).get
+
+  /** The bucket of task id `taskId`: its first 8 hex digits mod
+    * `numBuckets`. None when `taskId` does not start with 8 hex digits, so
+    * it is no task id and no row has it. */
+  def bucketOfTask(taskId: String, numBuckets: Int): Option[Int] = {
+    val key = taskId.take(8)
+    if (key.length < 8 || !key.forall(c => "0123456789abcdefABCDEF".indexOf(c) >= 0)) None
+    else Some(java.lang.Math.floorMod(java.lang.Long.parseLong(key, 16), numBuckets.toLong).toInt)
   }
 
   /** [[bucketFor]] as a column expression over a url column — the one
     * url → bucket mapping every writer partitions by, so a lookup's
-    * `bucketFor` lands on the bucket its row was written to. */
+    * [[bucketOfTask]] lands on the bucket its row was written to. The task
+    * id's first 8 hex digits are the first 4 bytes of the md5 of the
+    * prefixed url (a name UUID rewrites only bytes 6 and 8). */
   def bucketCol(url: org.apache.spark.sql.Column, numBuckets: Int): org.apache.spark.sql.Column = {
-    import org.apache.spark.sql.functions.{lit, pmod, xxhash64}
-    pmod(xxhash64(url), lit(numBuckets)).cast("int")
+    import org.apache.spark.sql.functions.{concat, conv, lit, md5, pmod, substring}
+    val key = conv(substring(md5(concat(lit(graft.pipeline.ExtractKernel.TaskIdPrefix), url)), 1, 8), 16, 10)
+    pmod(key.cast("long"), lit(numBuckets.toLong)).cast("int")
+  }
+
+  /** Whether data dir `dir` holds `_bucket=<b>` subdirs. */
+  private def hasBucketDirs(dir: String): Boolean = {
+    val d = Paths.get(dir)
+    Files.isDirectory(d) && scala.util.Using.resource(Files.list(d))(
+      _.iterator().asScala.exists(_.getFileName.toString.startsWith("_bucket=")))
   }
 }
 

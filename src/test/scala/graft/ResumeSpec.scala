@@ -445,6 +445,21 @@ class ResumeSpec extends AnyFunSuite with TempRoots {
     assert(report.bucketsSkipped == 4 && report.bucketsRun == 12, report.toString)
   }
 
+  test("a run record without format_version, written by older code, is refused on resume") {
+    val root = freshRoot()
+    val cfg = ExtractJob.Config(root, runId = "runV", numBuckets = 16, bucketsPerWave = 4)
+    final class Kill extends RuntimeException("simulated kill")
+    intercept[Kill] {
+      ExtractJob.run(spark, pagesDs, cfg, afterWave = w => if (w == 0) throw new Kill)
+    }
+    val record = java.nio.file.Paths.get(root, "_checkpoint", "runV", "CONFIG.json")
+    val recorded = graft.core.Json.parse(Files.readString(record)).asInstanceOf[Map[String, Any]]
+    assert(recorded.contains("format_version"), recorded.toString)
+    Files.writeString(record, graft.core.Json.write(recorded - "format_version"))
+    val ex = intercept[IllegalArgumentException](ExtractJob.run(spark, pagesDs, cfg))
+    assert(ex.getMessage.contains("different config"), ex.getMessage)
+  }
+
   test("checkpoint layout: a run record and one marker per committed wave, dropped after the commit") {
     val root = freshRoot()
     val cfg = ExtractJob.Config(root, runId = "runK", numBuckets = 16, bucketsPerWave = 4)

@@ -20,6 +20,27 @@ class StatsSpec extends AnyFunSuite with TempRoots {
     (new LineageTable(root, 8), pages.select("url").distinct().count())
   }
 
+  /** Root of a 16-bucket table of four wave dirs (4 buckets each) over
+    * `CorpusGen.pages(80)`. */
+  private lazy val fourWaveRoot: String = {
+    val s = spark
+    import s.implicits._
+    val root = suiteRoot("graft-stats-waves-")
+    ExtractJob.run(spark, spark.createDataset(CorpusGen.pages(80))(implicitly),
+      ExtractJob.Config(root, "j", numBuckets = 16, bucketsPerWave = 4))
+    root
+  }
+
+  /** The file scans of `df`'s executed plan. */
+  private def fileScans(df: org.apache.spark.sql.DataFrame) = {
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    (df.queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.executedPlan
+      case p => p
+    }).collect { case f: FileSourceScanExec => f }
+  }
+
   test("O4: task lookup by id and by url (bucket-pruned)") {
     val url = CorpusGen.urlFor(5)
     val taskId = ExtractKernel.taskIdFor(url)
@@ -59,24 +80,60 @@ class StatsSpec extends AnyFunSuite with TempRoots {
   }
 
   test("reads of a four-wave table plan without a Spark job; a lookup runs one") {
-    val s = spark
-    import s.implicits._
-    val root = freshRoot("graft-stats-jobs-")
-    ExtractJob.run(spark, spark.createDataset(CorpusGen.pages(80))(implicitly),
-      ExtractJob.Config(root, "j", numBuckets = 16, bucketsPerWave = 4))
-    val t = new LineageTable(root, 16)
+    val t = new LineageTable(fourWaveRoot, 16)
     assert(t.currentDataDirs.size == 4)
     val url = CorpusGen.urlFor(5)
     val taskId = ExtractKernel.taskIdFor(url)
-    val ((_, byUrl, byTask), planned) = jobsOf(
-      (t.readVisible(spark), Stats.lookupByUrl(t, spark, url), Stats.taskLookup(t, spark, taskId)))
-    assert(planned == 0, s"$planned Spark jobs ran while the frames were built")
-    val (urlRows, urlJobs) = jobsOf(byUrl.collect())
-    assert(urlRows.map(_.getAs[String]("task_id")).toSeq == Seq(taskId))
-    assert(urlJobs == 1, s"a url lookup ran $urlJobs Spark jobs")
-    val (taskRows, taskJobs) = jobsOf(byTask.collect())
-    assert(taskRows.map(_.getAs[String]("url")).toSeq == Seq(url))
-    assert(taskJobs == 1, s"a task lookup ran $taskJobs Spark jobs")
+    def lookupJobs(t: LineageTable, layout: String): Unit = {
+      val ((byUrl, byTask), planned) = jobsOf((Stats.lookupByUrl(t, spark, url), Stats.taskLookup(t, spark, taskId)))
+      assert(planned == 0, s"$planned Spark jobs ran while the lookups of the $layout table were built")
+      val (urlRows, urlJobs) = jobsOf(byUrl.collect())
+      assert(urlRows.map(_.getAs[String]("task_id")).toSeq == Seq(taskId))
+      assert(urlJobs == 1, s"a url lookup of the $layout table ran $urlJobs Spark jobs")
+      val (taskRows, taskJobs) = jobsOf(byTask.collect())
+      assert(taskRows.map(_.getAs[String]("url")).toSeq == Seq(url))
+      assert(taskJobs == 1, s"a task lookup of the $layout table ran $taskJobs Spark jobs")
+    }
+    val (_, planned) = jobsOf(t.readVisible(spark))
+    assert(planned == 0, s"$planned Spark jobs ran while the read was built")
+    lookupJobs(t, "four-wave")
+    // a compacted 64-bucket dir has more _bucket= subdirs than Spark lists
+    // without a job; a lookup lists only its own
+    val before = t.currentSnapshotId.get
+    val t64 = new LineageTable(fourWaveRoot, 64)
+    t64.compact(spark)
+    try {
+      assert(TableFiles.bucketDirs(java.nio.file.Paths.get(t64.currentDataDirs.head)).size > 32)
+      lookupJobs(t64, "compacted")
+    } finally t64.rollbackTo(before)
+  }
+
+  test("each lookup of a 16-bucket, four-wave table scans one file") {
+    val t = new LineageTable(fourWaveRoot, 16)
+    val url = CorpusGen.urlFor(9)
+    for (df <- Seq(Stats.lookupByUrl(t, spark, url), Stats.taskLookup(t, spark, ExtractKernel.taskIdFor(url)))) {
+      assert(df.collect().length == 1)
+      val scans = fileScans(df)
+      assert(scans.size == 1, df.queryExecution.executedPlan.toString)
+      assert(scans.head.metrics("numFiles").value == 1, df.queryExecution.executedPlan.toString)
+    }
+  }
+
+  test("a table opened with another bucket count finds every url and task id") {
+    // written with 16 buckets, opened with the default 64: the count comes
+    // from the manifest
+    val t = new LineageTable(fourWaveRoot)
+    CorpusGen.pages(80).map(_.url).distinct.take(24).foreach { url =>
+      val taskId = ExtractKernel.taskIdFor(url)
+      assert(Stats.lookupByUrl(t, spark, url).collect().map(_.getAs[String]("task_id")).toSeq == Seq(taskId), url)
+      assert(Stats.taskLookup(t, spark, taskId).collect().map(_.getAs[String]("url")).toSeq == Seq(url), url)
+    }
+  }
+
+  test("a task id that is no task id finds no row") {
+    Seq("", "xyz", "not-a-uuid").foreach { id =>
+      assert(Stats.taskLookup(table, spark, id).collect().isEmpty, s"'$id'")
+    }
   }
 
   test("O5: stats response over lineage only") {
