@@ -99,7 +99,7 @@ final case class TableData(
   * ConversionResult + app/tasks.py:106-122 assembly). */
 final case class ExtractResult(
     url: String,
-    warc_ts: Timestamp, // input crawl timestamp, carried for post-dedup
+    warc_ts: Timestamp, // input crawl timestamp: the version of readLatest(versionCol = "warc_ts")
     task_id: String,
     status: String,
     filename: String,

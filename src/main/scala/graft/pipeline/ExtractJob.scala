@@ -3,15 +3,13 @@ package graft.pipeline
 import graft.model.{ConversionOptions, Page}
 import graft.table.LineageTable
 import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
-import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.functions._
 import java.util.concurrent.Executors
 import java.util.concurrent.atomic.AtomicBoolean
 import scala.concurrent.{Await, ExecutionContext, Future}
 import scala.concurrent.duration.Duration
 
-/** The resumable extraction job: pages → (latest-crawl dedup) → deterministic
-  * buckets keyed by task id → per-wave extract + commit → snapshot.
+/** The resumable extraction job: pages → deterministic buckets keyed by
+  * task id → latest capture per url → per-wave extract + commit → snapshot.
   *
   * Commit protocol (north rule "checkpointed resume"):
   *  - work unit = bucket of the row's task id, a name UUID of its url
@@ -19,8 +17,8 @@ import scala.concurrent.duration.Duration
   *    Spark task ids); waves of `bucketsPerWave` buckets run as one Spark
   *    job each;
   *  - the run starts with [[LineageTable.beginRun]]: the table records the
-  *    run's config (table format, bucket count, wave size, dedup, input
-  *    schema), and a resume with another config, or of a run started by
+  *    run's config (table format, bucket count, wave size, dedup layout,
+  *    input schema), and a resume with another config, or of a run started by
   *    code writing another table format, fails loudly;
   *  - [[LineageTable.writeWave]] writes a wave's results parquet
   *    (partitioned by bucket for downstream partition pruning) and its
@@ -45,23 +43,25 @@ import scala.concurrent.duration.Duration
   *    committed atomically and the run's checkpoint and staging are
   *    dropped.
   *
-  * Layout: under WindowDedup the job's one input exchange is a hash
-  * partition on `_bucket`, and that layout is kept from staging to commit.
-  * It feeds the dedup window (over `(_bucket, url)`) and the
-  * bucket-partitioned staging write with one sort, so each bucket is
-  * staged as one file; a wave reads only its buckets' staged files,
-  * extracts map-side and writes each bucket's results as one file without
-  * another shuffle. Only WindowDedup stages one file per bucket: PostDedup
-  * stages its input as it comes (no payload shuffle), and its per-wave
-  * window exchange of the extracted rows makes each committed bucket one
-  * file.
+  * Layout: the job's one input exchange is a hash partition on `_bucket`,
+  * and that layout is kept from staging to commit. It feeds the
+  * latest-capture window and the bucket-partitioned staging write with one
+  * sort, so each bucket is staged as one file; a wave reads only its
+  * buckets' staged files, extracts map-side in its write stage and writes
+  * each bucket's results as one file without another shuffle. Duplicates
+  * of a url never reach the kernel.
+  *
+  * Latest capture ([[LineageTable.latestPer]]): of a url's pages the one
+  * with the latest `warc_ts` is extracted; pages that tie on it are
+  * decided by their `html` bytes (descending), so the winner does not
+  * depend on input order, and pages that tie on `html` too extract alike.
   *
   * Scale notes: buckets give the resume granularity (64 default here;
-  * thousands at 100 TB so a lost wave is bounded). Under WindowDedup a
-  * bucket is one staged file, read by one task unless the file spans
-  * several input splits, so a wave's kernel runs in about `bucketsPerWave`
-  * tasks: the wave size must be at least the core count or cores idle
-  * (the staging write and its sort run in at most `numBuckets` tasks).
+  * thousands at 100 TB so a lost wave is bounded). A bucket is one staged
+  * file, read by one task unless the file spans several input splits, so
+  * a wave's kernel runs in about `bucketsPerWave` tasks: the wave size
+  * must be at least the core count or cores idle (the staging write and
+  * its sort run in at most `numBuckets` tasks).
   * Buckets — not size classes — are the unit of task balance, and AQE
   * handles residual imbalance. Skew.repartitionBySizeBucket is not
   * applied: it would re-shuffle the payloads and break the
@@ -70,25 +70,12 @@ import scala.concurrent.duration.Duration
   */
 object ExtractJob {
 
-  /** Latest-crawl dedup strategy:
-    *  - `WindowDedup`: exact pre-extraction window over the url — runs on
-    *    the job's one input exchange (hash on `_bucket`), so raw payloads
-    *    move once and duplicates never reach the kernel;
-    *  - `PostDedup`: extract everything, keep the max-warc_ts result per
-    *    url with a per-wave window over the extracted rows — no payload
-    *    shuffle at all; wasted kernel work equals the duplicate fraction
-    *    (the right choice for low-dup crawl deltas on unbucketed tables). */
-  sealed trait DedupStrategy
-  case object WindowDedup extends DedupStrategy
-  case object PostDedup extends DedupStrategy
-
   final case class Config(
       root: String,
       runId: String,
       numBuckets: Int = 64,
       bucketsPerWave: Int = 16,
       options: ConversionOptions = ConversionOptions(),
-      dedup: DedupStrategy = WindowDedup,
       timeoutMs: Long = ExtractKernel.DefaultTimeoutMs,
       /** Commit the run as an APPEND snapshot (merge-on-read) instead of a
         * replacing one: existing rows stay visible and re-extracted urls
@@ -122,27 +109,22 @@ object ExtractJob {
     import spark.implicits._
     val table = new LineageTable(cfg.root, cfg.numBuckets)
 
-    // _bucket is a function of url, so a window over (_bucket, url) keeps
-    // the same rows as one over url — and a hash partition on _bucket
-    // already satisfies it, with no exchange of its own
-    def latestPerUrl(df: DataFrame): DataFrame = {
-      val w = Window.partitionBy($"_bucket", $"url").orderBy($"warc_ts".desc)
-      df.withColumn("_rn", row_number().over(w)).where($"_rn" === 1).drop("_rn")
-    }
     val withBucket = pages.toDF().withColumn("_bucket", LineageTable.bucketCol($"url", cfg.numBuckets))
 
     // the run record, staged or not: waves committed under one (format,
-    // numBuckets, bucketsPerWave, dedup, input schema) are lies under
-    // another — the format and numBuckets change the url→bucket map,
+    // numBuckets, bucketsPerWave, dedup layout, input schema) are lies
+    // under another — the format and numBuckets change the url→bucket map,
     // bucketsPerWave the wave dirs (keyed by a wave's smallest bucket, so
-    // old and regrouped dirs would both reach the snapshot), dedup what a
-    // bucket's rows mean, and the schema what the staged input holds. A
+    // old and regrouped dirs would both reach the snapshot), and the schema
+    // what the staged input holds. The dedup layout is a constant: a run
+    // killed under the retired layout that extracted before deduplicating
+    // staged its input with duplicates, and its resume must be refused. A
     // runId pins its input data by design: completed waves were extracted
     // from the staged snapshot, so a resume must not mix in a drifted live
     // input.
     table.beginRun(cfg.runId, Map("format_version" -> LineageTable.FormatVersion,
       "num_buckets" -> cfg.numBuckets, "buckets_per_wave" -> cfg.bucketsPerWave,
-      "dedup" -> cfg.dedup.toString, "schema" -> withBucket.schema.catalogString))
+      "dedup" -> "WindowDedup", "schema" -> withBucket.schema.catalogString))
 
     // FIXED wave partition of the full bucket range, never regrouped from
     // the pending set: a wave is marked whole or not at all, so an unmarked
@@ -171,13 +153,12 @@ object ExtractJob {
     // mid-staging re-stages; the run record already pinned the schema
     val stagingComplete = java.nio.file.Files.exists(java.nio.file.Paths.get(stageDir, "_SUCCESS"))
     val staged = waves.length > 1 || stagingComplete
-    val input = cfg.dedup match {
-      // the job's one input exchange: every row of a bucket lands in one
-      // task, so the window's sort also orders the bucket-partitioned
-      // staging write and each bucket is staged as one file
-      case WindowDedup => latestPerUrl(withBucket.repartition($"_bucket"))
-      case PostDedup => withBucket
-    }
+    // the job's one input exchange: every row of a bucket lands in one
+    // task, and _bucket is a function of url, so the (_bucket, url) window
+    // keeps the rows of a url window without an exchange of its own, and
+    // its sort also orders the bucket-partitioned staging write: each
+    // bucket is staged as one file
+    val input = LineageTable.latestPer(withBucket.repartition($"_bucket"), Seq("_bucket", "url"), "warc_ts", Seq("html"))
     if (staged && !stagingComplete)
       input.write.mode(SaveMode.Overwrite).partitionBy("_bucket").parquet(stageDir)
     def waveInput(buckets: Seq[Int]): DataFrame =
@@ -194,25 +175,18 @@ object ExtractJob {
       val subset = waveInput(waveBuckets)
         .select($"url", $"warc_ts", $"html", $"text", $"lang")
         .as[Page]
-      // NO payload shuffle before the kernel. Under WindowDedup a staged
-      // bucket is one file, read whole by one task, and extraction is
-      // map-side, so the results keep the input's bucket layout and the
-      // partitioned write makes one file per bucket (a staged file larger
-      // than one input split would make more). The limit: at most one
-      // kernel task per staged bucket, so a wave's parallelism is about
-      // `bucketsPerWave` unless a bucket file spans several splits.
+      // NO payload shuffle before the kernel. A staged bucket is one file,
+      // read whole by one task, and extraction is map-side, so the results
+      // keep the input's bucket layout and the partitioned write makes one
+      // file per bucket (a staged file larger than one input split would
+      // make more). The limit: at most one kernel task per staged bucket,
+      // so a wave's parallelism is about `bucketsPerWave` unless a bucket
+      // file spans several splits.
       // Heavy-tail doc sizes are absorbed by dynamic task scheduling (a
       // single multi-MB doc costs ~50ms — no straggler) and AQE. Scaling
       // of this plan above 4 cores is unmeasured.
-      val extracted = ExtractKernel.extract(subset, cfg.options, cfg.timeoutMs)(spark)
+      ExtractKernel.extract(subset, cfg.options, cfg.timeoutMs)(spark)
         .withColumn("_bucket", LineageTable.bucketCol($"url", cfg.numBuckets))
-      cfg.dedup match {
-        // duplicates of a url always share its bucket, so per-wave window
-        // dedup over results is exact — and its one exchange moves only
-        // extracted output, never raw payloads
-        case PostDedup => latestPerUrl(extracted.repartition($"_bucket"))
-        case WindowDedup => extracted
-      }
     }
 
     // stable wave id = smallest bucket in it; frames are built here, on the

@@ -121,7 +121,7 @@ class RecrawlSpec extends AnyFunSuite with TempRoots {
     // the OTHER retired urls stay retired
     gone.tail.foreach(p => assert(!visAfterC.contains(p.url), s"${p.url} resurrected spuriously"))
     // and compaction keeps the resurrected row while dropping the retired
-    table.compact(spark, resolveLatestBy = Some(("url", "warc_ts")))
+    table.compact(spark, resolveLatestBy = Some("warc_ts"))
     val visCompact = table.readVisible(spark).select("url")
       .collect().map(_.getString(0)).toSet
     assert(visCompact.contains(back.url))

@@ -98,13 +98,20 @@ class ResumeSpec extends AnyFunSuite with TempRoots {
     intercept[Kill] {
       ExtractJob.run(spark, pagesDs, cfg, afterWave = w => if (w == 0) throw new Kill)
     }
-    // a resume that silently extracted under a different dedup mode /
-    // bucket count would produce a table whose done-markers and partition
-    // layout lie — the CONFIG guard fails loud, staged or not
+    // a resume that silently extracted under a different bucket count
+    // would produce a table whose done-markers and partition layout lie —
+    // the CONFIG guard fails loud, staged or not
     val ex = intercept[IllegalArgumentException] {
-      ExtractJob.run(spark, pagesDs, cfg.copy(dedup = ExtractJob.PostDedup))
+      ExtractJob.run(spark, pagesDs, cfg.copy(numBuckets = 32))
     }
     assert(ex.getMessage.contains("different config"), ex.getMessage)
+    // a run started under the retired PostDedup layout staged its input
+    // with duplicates: its resume is refused too
+    val recorded = graft.core.Json.parse(Files.readString(java.nio.file.Paths.get(root, "_checkpoint", "runF",
+      "CONFIG.json"))).asInstanceOf[Map[String, Any]]
+    new LineageTable(root, 16).beginRun("runPD", recorded + ("dedup" -> "PostDedup"))
+    val exPD = intercept[IllegalArgumentException](ExtractJob.run(spark, pagesDs, cfg.copy(runId = "runPD")))
+    assert(exPD.getMessage.contains("different config"), exPD.getMessage)
     // identical config resumes normally
     val report = ExtractJob.run(spark, pagesDs, cfg)
     assert(report.bucketsSkipped == 4 && report.bucketsRun == 12)
@@ -139,17 +146,22 @@ class ResumeSpec extends AnyFunSuite with TempRoots {
     assert(plan.contains("PartitionFilters: [isnotnull(_bucket"), s"no partition pruning in:\n$plan")
   }
 
-  test("PostDedup strategy: same final table as WindowDedup, no payload shuffle") {
-    val rootW = freshRoot()
-    val rootP = freshRoot()
-    ExtractJob.run(spark, pagesDs, ExtractJob.Config(rootW, "w", numBuckets = 8, bucketsPerWave = 8))
-    ExtractJob.run(spark, pagesDs, ExtractJob.Config(rootP, "p", numBuckets = 8, bucketsPerWave = 8,
-      dedup = ExtractJob.PostDedup))
-    val a = new LineageTable(rootW, 8).read(spark)
-      .select("url", "task_id", "status").collect().map(_.toString).sorted
-    val b = new LineageTable(rootP, 8).read(spark)
-      .select("url", "task_id", "status").collect().map(_.toString).sorted
-    assert(a.sameElements(b), "dedup strategies must agree on the final table")
+  test("two captures of a url with one warc_ts: the same one wins in either input order, staged or not") {
+    val s = spark
+    import s.implicits._
+    val filler = CorpusGen.pages(40)
+    val url = "https://tie.example/same-ts"
+    val Seq(a, b) = Seq(filler(3), filler(7)).map(_.copy(url = url, warc_ts = filler(0).warc_ts))
+    val contents = for ((nb, perWave) <- Seq((8, 8), (16, 4)); order <- Seq(Seq(a, b), Seq(b, a))) yield {
+      val root = freshRoot()
+      // one input partition, so the input order reaches the window as given
+      val input = spark.createDataset(filler ++ order)(implicitly).coalesce(1)
+      ExtractJob.run(spark, input, ExtractJob.Config(root, "tie", numBuckets = nb, bucketsPerWave = perWave))
+      val rows = new LineageTable(root, nb).read(spark).where($"url" === url).select("content").as[String].collect()
+      assert(rows.length == 1, s"$nb/$perWave: ${rows.length} rows of $url")
+      rows.head
+    }
+    assert(contents.distinct.size == 1, "the capture kept depends on the input order or the layout")
   }
 
   test("per-row timeout guard produces failed rows, not job kills") {
@@ -476,14 +488,13 @@ class ResumeSpec extends AnyFunSuite with TempRoots {
     assert(!Files.exists(ckpt), "a completed run leaves no checkpoint")
   }
 
-  test("each committed bucket is one parquet file, staged or not, under both dedup strategies") {
-    for (dedup <- Seq(ExtractJob.WindowDedup, ExtractJob.PostDedup); (nb, perWave) <- Seq((16, 4), (8, 8))) {
+  test("each committed bucket is one parquet file, staged or not") {
+    for ((nb, perWave) <- Seq((16, 4), (8, 8))) {
       val root = freshRoot()
-      ExtractJob.run(spark, pagesDs, ExtractJob.Config(root, "runL", numBuckets = nb, bucketsPerWave = perWave,
-        dedup = dedup))
+      ExtractJob.run(spark, pagesDs, ExtractJob.Config(root, "runL", numBuckets = nb, bucketsPerWave = perWave))
       val dirs = children(java.nio.file.Paths.get(root, "data", "runL")).flatMap(bucketDirs)
-      assert(dirs.size == urlBuckets(N, nb), s"$dedup $nb/$perWave: $dirs")
-      dirs.foreach(d => assert(parquetFiles(d) == 1, s"$dedup $nb/$perWave: $d holds ${parquetFiles(d)} parquet files"))
+      assert(dirs.size == urlBuckets(N, nb), s"$nb/$perWave: $dirs")
+      dirs.foreach(d => assert(parquetFiles(d) == 1, s"$nb/$perWave: $d holds ${parquetFiles(d)} parquet files"))
     }
   }
 

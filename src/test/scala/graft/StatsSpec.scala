@@ -105,6 +105,10 @@ class StatsSpec extends AnyFunSuite with TempRoots {
     try {
       assert(TableFiles.bucketDirs(java.nio.file.Paths.get(t64.currentDataDirs.head)).size > 32)
       lookupJobs(t64, "compacted")
+      // a lookup whose bucket no dir holds lists no whole dir either
+      val (none, noneJobs) = jobsOf(Stats.taskLookup(t64, spark, "xyz"))
+      assert(noneJobs == 0, s"$noneJobs Spark jobs ran while a lookup of no bucket was built")
+      assert(none.collect().isEmpty)
     } finally t64.rollbackTo(before)
   }
 

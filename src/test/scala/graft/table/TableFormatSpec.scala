@@ -80,7 +80,7 @@ class TableFormatSpec extends AnyFunSuite with TempRoots {
     val urls = pages.select("url").distinct().count()
     assert(t.read(spark).count() == 2 * urls)
     assert(t.readLatest(spark).count() == urls)
-    t.compact(spark, resolveLatestBy = Some(("url", "created_at")))
+    t.compact(spark, resolveLatestBy = Some("created_at"))
     assert(t.read(spark).count() == urls)
   }
 }

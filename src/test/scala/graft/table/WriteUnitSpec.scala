@@ -45,7 +45,7 @@ class WriteUnitSpec extends AnyFunSuite with TempRoots {
 
     // plain, and resolving the appended duplicates by url on the same exchange
     val urls = pages.select("url").distinct().count()
-    for ((resolve, expected) <- Seq(None -> rows, Some(("url", "created_at")) -> urls)) {
+    for ((resolve, expected) <- Seq(None -> rows, Some("created_at") -> urls)) {
       table.rollbackTo(before)
       val id = table.compact(spark, resolveLatestBy = resolve)
       val Seq(dataDir) = table.currentDataDirs
